@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   /** A profile whose START loadavg (1-min or 5-min) exceeds this is
     * CONTAMINATED by construction — r11 and r12 both committed dirty
@@ -89,10 +88,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // The harness environment is local[32] (32 executor threads); honor an
-    // explicit override, otherwise use all cores up to 32.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
+    val cpus = Sessions.cpus
     // (1-min, 5-min) system load from /proc/loadavg — recorded before each
     // pass and at the end, so an inflated profile is diagnosable as
     // sandbox cross-talk (r5/r7 both saw ~2.5x run-level inflation on
@@ -155,51 +151,7 @@ object Bench {
     if (contaminated)
       System.err.println(f"bench: proceeding DIRTY — loadavg $start1%.2f " +
         f"still > $loadMax%.2f after ${waited}s; profile will carry clean:false")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // AQE post-shuffle coalescing floor (r19 optimization round,
-      // measured): the default 1m floor coalesces small-but-compute-
-      // heavy shuffles (the 2–3 MB per-key indexed-bucket exchanges
-      // feeding MILLIONS of generated pair rows in theilSen / motif /
-      // TF-cosine / PPJoin) down to 2–3 tasks, serializing the pair
-      // expansion on a 32-core host. 256k chosen by a three-way
-      // interleaved min-of-2 A/B at sf0.1 (1m / 256k / 64k):
-      // ts_theil_sen 4.18/1.77/1.10 s, ts_motif 3.81/1.61/1.06,
-      // dedup_tf_cosine 3.69/1.77/1.22, dedup_ngram_prefix
-      // 3.11/1.51/1.35 — but 64k REGRESSES the fixed-point-loop family
-      // (emb_eigengap 3.41/3.38/4.84, emb_pca_power 1.97/1.99/2.95:
-      // their KB-scale per-round states fragment into extra tasks ×
-      // dozens of stages), and disabling coalescing outright measured
-      // 15 s graph loops. 256k keeps the pair-expansion win with the
-      // loop family flat (probe-set total 44.3/35.9/37.1 s). Scale
-      // posture: parallelismFirst already divides data-sized shuffles
-      // by the cluster's defaultParallelism, far above this floor, so
-      // at 100 TB it binds only on sub-MB loop states. Env-overridable
-      // like every other scale-dependent knob here.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "256k"))
-      // Janino codegen class cache (r20 optimization round): the default
-      // 100-entry cache (spark.sql.codegen.cache.maxEntries, static conf)
-      // thrashes under a 399-query registry — by the time the macro
-      // tier's min-of-2 retry pass runs, every pass-1 compilation has
-      // been evicted, so each retry re-pays full Janino compilation of
-      // every whole-stage unit (measured: ana_pagerank 2.7 s codegen-cold
-      // vs 1.0 s codegen-warm on identical plans/jobs). 4096 entries keep
-      // the registry's ~3k distinct codegen units resident (~200 MB
-      // metaspace at ~50 KB/class — driver-side, scale-independent: any
-      // long-lived analytics driver serving hundreds of distinct query
-      // shapes wants its compiled classes cached). Env-overridable like
-      // every scale-dependent knob here.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE_ENTRIES", "4096"))
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-wh").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     // JVM/codegen warmup so the alphabetically-first query doesn't absorb
     // several seconds of one-time JIT + classloading cost. Runs on the
     // sf0.001 fixture (NOT the benched sfDir — no page-cache preloading
@@ -255,15 +207,15 @@ object Bench {
     // bit_xor, not sum: summing 2048M xxhash64 longs overflows under
     // ANSI mode; xor folds are overflow-free and equally unprunable.
     val (canarySec, stealCan) = minOf3(() =>
-      spark.range(0L, 2048L * 1000 * 1000, 1L, cpus.toInt)
+      spark.range(0L, 2048L * 1000 * 1000, 1L, cpus)
         .selectExpr("bit_xor(xxhash64(id)) AS h").collect())
     val (canaryShufSec, stealShuf) = minOf3(() =>
-      spark.range(0L, 64L * 1000 * 1000, 1L, cpus.toInt)
+      spark.range(0L, 64L * 1000 * 1000, 1L, cpus)
         .selectExpr("id % 1000000 AS k")
         .groupBy("k").count()
         .selectExpr("bit_xor(xxhash64(k, count)) AS h").collect())
     val (canaryMembwSec, stealMembw) = minOf3(() =>
-      spark.range(0L, 4096L, 1L, cpus.toInt)
+      spark.range(0L, 4096L, 1L, cpus)
         .selectExpr(
           "aggregate(sequence(id, id + 65535), 0L, (a, x) -> a + x) AS s")
         .selectExpr("bit_xor(s) AS h").collect())
@@ -465,7 +417,7 @@ object Bench {
     // record-until-calibrated rule every other signal followed.
     var canaryMembwMid: Option[(Double, Double)] = None
     val membwJob: () => Unit = () =>
-      spark.range(0L, 4096L, 1L, cpus.toInt)
+      spark.range(0L, 4096L, 1L, cpus)
         .selectExpr(
           "aggregate(sequence(id, id + 65535), 0L, (a, x) -> a + x) AS s")
         .selectExpr("bit_xor(s) AS h").collect()

@@ -79,94 +79,25 @@ object SparkEntry {
       .select("src", "dst")
   }
 
-  /** Process-local memo of the checkpointed edge frame, keyed by
-    * (session, dir) — 21 graph queries each re-derived the identical
-    * edge set (~1–3 s apiece per bench/verify run) because the per-query
-    * `(s, dir) => DF` contract gives them nowhere to share it. The memo
-    * is that shared place: the first caller pays one eager
-    * localCheckpoint of [[copurchaseEdgesFresh]]; everyone after reads
-    * the materialized blocks. This mirrors what a real pipeline does
-    * (materialize the edge table once), while every query stays a pure
-    * `(s, dir) => DF` to the harness — the memoized frame is
-    * deterministic, so results are unchanged (EntrySpec asserts edge-set
-    * parity vs a fresh derivation). Lifetime: entries live until the
-    * JVM (or their owning session) dies — bounded by sessions × sf-dirs,
-    * a handful in every harness process; checkpoint blocks are tied to
-    * their SparkContext, hence the per-session key.
+  /** 21 graph queries each re-derived the identical edge set (~1–3 s
+    * apiece per bench/verify run): the first caller now pays one eager
+    * localCheckpoint of [[copurchaseEdgesFresh]], everyone after reads
+    * the materialized blocks.
     */
-  private val edgeMemo =
-    scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
-
-  /** Memo lookup with the derivation OUTSIDE the monitor: the build is
-    * a multi-second Spark job, and holding the map lock through it
-    * would serialize concurrent callers of UNRELATED keys (parallel
-    * suites in one JVM). A rare duplicate race derives twice and keeps
-    * the first insert — the loser's checkpoint blocks idle until the
-    * session stops, a bounded leak traded for never blocking a Spark
-    * job on a map monitor.
-    *
-    * Each access first EVICTS entries whose owning session has been
-    * stopped: their checkpoint blocks are gone with the SparkContext,
-    * so the handles are dead weight — and a long-lived embedder that
-    * churns through many short-lived sessions would otherwise
-    * accumulate them for the JVM lifetime (the "handful of sessions"
-    * assumption holds for the harness, not for library users).
-    */
-  private def memoized(memo: scala.collection.mutable.Map[(SparkSession, String), DataFrame],
-                       name: String, s: SparkSession, dir: String)
-                      (build: => DataFrame): DataFrame = {
-    touched.synchronized(touched += name)
-    sweepDead(memo, sess => sess.sparkContext.isStopped)
-    memo.synchronized(memo.get((s, dir))).getOrElse {
-      val built = build.localCheckpoint()
-      memo.synchronized(memo.getOrElseUpdate((s, dir), built))
-    }
-  }
-
-  /** The eviction sweep, factored out so the PREDICATE path is unit-
-    * testable without stopping a SparkContext (one JVM = one context, so
-    * a test can't hold both a stopped and a live session; EntrySpec
-    * instead pins that entries leave exactly when the predicate says
-    * dead, and the single production call site above binds the predicate
-    * to `sparkContext.isStopped`).
-    */
-  private[graft] def sweepDead(
-      memo: scala.collection.mutable.Map[(SparkSession, String), DataFrame],
-      isDead: SparkSession => Boolean): Unit =
-    memo.synchronized {
-      memo.filterInPlace { case ((sess, _), _) => !isDead(sess) }
-    }
-
-  /** `_derive_*` names touched since the last drain — how graft.Bench
-    * discovers memo-family membership AT RUN TIME: pass 1 drains after
-    * each timed query, so pass 2 can re-derive exactly the derivations
-    * its retried consumers actually read (re-deriving ALL of them paid
-    * the quarantined N² baselines twice on every profile with a
-    * non-empty retry set — ~17 s of a ~300 s profile). A hand-written
-    * consumer map would drift the first time a query gains or loses a
-    * memo read; recording at the accessor can't.
-    */
-  private val touched = scala.collection.mutable.Set.empty[String]
-  private[graft] def drainTouchedDerivations(): Set[String] =
-    touched.synchronized { val t = touched.toSet; touched.clear(); t }
-
-  private[graft] def copurchaseEdges(s: SparkSession, dir: String): DataFrame =
-    memoized(edgeMemo, "_derive_copurchase_edges", s, dir)(copurchaseEdgesFresh(s, dir))
+  private[graft] val copurchaseEdges =
+    Derivation("_derive_copurchase_edges", Seq("lineitem"), copurchaseEdgesFresh)
 
   /** Near-dup cluster labels over the documents table (trigram Jaccard
-    * ≥ 0.5 pairs → star-contraction components) — the second shared
-    * derivation behind a (session, dir) memo: four queries
+    * ≥ 0.5 pairs → star-contraction components): four queries
     * (`dedup_clusters`, `dedup_cluster_stats`, `dedup_keep_best`,
     * `sample_split`) consume the IDENTICAL label frame, and a real
-    * pipeline materializes cluster labels once. Same lifetime/purity
-    * contract as [[copurchaseEdges]]; parity vs a fresh derivation is
-    * asserted in EntrySpec.
+    * pipeline materializes cluster labels once.
     */
   private[graft] def docClustersFresh(s: SparkSession, dir: String): DataFrame = {
     val docs = T(s, dir, "documents")
     // strict: the four consumers' oracles assume EXACT components (the
     // graph_cc_stars rationale), and the memo would otherwise pin one
-    // under-merged derivation for the process lifetime. Adaptive (r15
+    // under-merged derivation for the memo's lifetime. Adaptive (r15
     // judge item 8): a 2-round min-propagation probe answers outright on
     // the shallow families near-dup mining actually produces (measured
     // 1.1 s vs 1.9 s star-only on the sf0.1 graph, identical labels);
@@ -176,141 +107,98 @@ object SparkEntry {
       strict = true)
   }
 
-  private val clusterMemo =
-    scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
+  private[graft] val docClusters = Derivation("_derive_doc_clusters", Seq("documents"),
+    docClustersFresh)
 
-  private[graft] def docClusters(s: SparkSession, dir: String): DataFrame =
-    memoized(clusterMemo, "_derive_doc_clusters", s, dir)(docClustersFresh(s, dir))
-
-  /** The d×d embedding covariance matrix — the third shared derivation:
-    * five emb_* queries (covariance, pca_power, eigengap, abtt,
-    * effective_rank) all start from the identical (i, j, cov) frame,
-    * which costs one full corpus pass each time. Same lifetime/purity
-    * contract as [[copurchaseEdges]]; parity is free (covarianceMatrix
-    * is deterministic and the memo IS its checkpoint).
+  /** The d×d embedding covariance matrix: five emb_* queries
+    * (covariance, pca_power, eigengap, abtt, effective_rank) all start
+    * from the identical (i, j, cov) frame, which costs one full corpus
+    * pass each time.
     */
-  private val covMemo =
-    scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
+  private[graft] val embCov = Derivation("_derive_emb_cov", Seq("embeddings"),
+    (s, dir) => Similarity.covarianceMatrix(T(s, dir, "embeddings")))
 
-  private[graft] def embCov(s: SparkSession, dir: String): DataFrame =
-    memoized(covMemo, "_derive_emb_cov", s, dir)(
-      Similarity.covarianceMatrix(T(s, dir, "embeddings")))
-
-  /** The exact brute-force 5-NN neighbor list over the embeddings —
-    * the fourth shared derivation: it is the N² verify BASELINE that
-    * both `ann_knn_graph` (the graph itself) and `ann_knn_graph_agree`
-    * (the graph's overlap with the LSH swap) consume, and at ~5 s per
-    * derivation it topped every r15 profile twice. Deterministic
-    * (cosine ties break on neighbor id), so the memo IS its
-    * checkpoint; parity vs a fresh derivation is asserted in EntrySpec.
+  /** The exact brute-force 5-NN neighbor list over the embeddings: the
+    * N² verify BASELINE that both `ann_knn_graph` (the graph itself) and
+    * `ann_knn_graph_agree` (the graph's overlap with the LSH swap)
+    * consume; at ~5 s per derivation it topped every r15 profile twice.
+    * Cosine ties break on neighbor id.
     */
-  private val knnMemo =
-    scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
-
   private[graft] def knnExactFresh(s: SparkSession, dir: String): DataFrame = {
     val emb = T(s, dir, "embeddings")
     Similarity.bruteForceTopK(emb, emb, 5)
   }
 
-  private[graft] def knnExact(s: SparkSession, dir: String): DataFrame =
-    memoized(knnMemo, "_derive_knn_exact", s, dir)(knnExactFresh(s, dir))
+  private[graft] val knnExact = Derivation("_derive_knn_exact", Seq("embeddings"),
+    knnExactFresh)
 
-  /** The exact TwoNN intrinsic-dimension estimate (one row) — the fifth
-    * shared derivation: `emb_intrinsic_dim` returns it verbatim and
-    * `emb_intrinsic_dim_agree` diffs the ANN estimate against it, so
-    * the N² all-pairs distance pass behind it ran twice per profile.
-    * Deterministic single-row output; same contract as [[knnExact]].
+  /** The exact TwoNN intrinsic-dimension estimate (one row):
+    * `emb_intrinsic_dim` returns it verbatim and `emb_intrinsic_dim_agree`
+    * diffs the ANN estimate against it, so the N² all-pairs distance pass
+    * behind it ran twice per profile.
     */
-  private val twoNNMemo =
-    scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
-
-  private[graft] def twoNNExact(s: SparkSession, dir: String): DataFrame =
-    memoized(twoNNMemo, "_derive_twonn_exact", s, dir)(
-      Similarity.intrinsicDimension(T(s, dir, "embeddings")))
+  private[graft] val twoNNExact = Derivation("_derive_twonn_exact", Seq("embeddings"),
+    (s, dir) => Similarity.intrinsicDimension(T(s, dir, "embeddings")))
 
   /** The LSH self-top-5 neighbor list (the registered 100 TB swap for
-    * the brute kNN) — sixth shared derivation: `ann_knn_graph_lsh`
-    * consumes it directly and `ann_knn_graph_agree` re-derived the
-    * identical frame for its ANN side (~3.5 s each at sf0.1). Same
-    * determinism argument as [[knnExact]] (ties break on neighbor id;
-    * SRP planes and plane COUNT derive from fixed seeds and the corpus
-    * count). ScaleGate still clears memos per measurement, so the gate
-    * ratio for ann_knn_graph_lsh keeps paying the full derivation.
+    * the brute kNN): `ann_knn_graph_lsh` consumes it directly and
+    * `ann_knn_graph_agree` re-derived the identical frame for its ANN
+    * side (~3.5 s each at sf0.1). Ties break on neighbor id; SRP planes
+    * and plane COUNT derive from fixed seeds and the corpus count.
+    * ScaleGate still clears memos per measurement, so the gate ratio for
+    * ann_knn_graph_lsh keeps paying the full derivation.
     */
-  private val knnLshMemo =
-    scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
-
   private[graft] def knnLshFresh(s: SparkSession, dir: String): DataFrame = {
     val emb = T(s, dir, "embeddings")
     Similarity.lshSelfTopK(emb, 5, dim = 64,
       nPlanes = Similarity.srpAutoPlanes(emb.count()), nTables = 8)
   }
 
-  private[graft] def knnLsh(s: SparkSession, dir: String): DataFrame =
-    memoized(knnLshMemo, "_derive_knn_lsh", s, dir)(knnLshFresh(s, dir))
+  private[graft] val knnLsh = Derivation("_derive_knn_lsh", Seq("embeddings"), knnLshFresh)
 
-  /** The ANN-fed TwoNN estimate (one row) — seventh shared derivation:
-    * `emb_intrinsic_dim_ann` returns it verbatim and
-    * `emb_intrinsic_dim_agree` re-ran the identical candidate pass for
-    * its ANN side. Memoizing the ESTIMATE (not the candidate pair
-    * frame) keeps the checkpoint a single row instead of N·c vector
-    * pairs.
+  /** The ANN-fed TwoNN estimate (one row): `emb_intrinsic_dim_ann`
+    * returns it verbatim and `emb_intrinsic_dim_agree` re-ran the
+    * identical candidate pass for its ANN side. Memoizing the ESTIMATE
+    * (not the candidate pair frame) keeps the checkpoint a single row
+    * instead of N·c vector pairs.
     */
-  private val twoNNAnnMemo =
-    scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
+  private[graft] val twoNNAnn = Derivation("_derive_twonn_ann", Seq("embeddings"), (s, dir) => {
+    val emb = T(s, dir, "embeddings")
+    // the fused collisions→d2→dedup form: byte-identical to composing
+    // intrinsicDimensionFromCandidates(lshSelfCandidates(...)), but the
+    // pair-dedup shuffle carries a scalar d2 instead of both vectors
+    Similarity.intrinsicDimensionLshSelf(emb, dim = 64,
+      nPlanes = Similarity.srpAutoPlanes(emb.count()), nTables = 8)
+  })
 
-  private[graft] def twoNNAnn(s: SparkSession, dir: String): DataFrame =
-    memoized(twoNNAnnMemo, "_derive_twonn_ann", s, dir) {
-      val emb = T(s, dir, "embeddings")
-      // the fused collisions→d2→dedup form: byte-identical to composing
-      // intrinsicDimensionFromCandidates(lshSelfCandidates(...)), but the
-      // pair-dedup shuffle carries a scalar d2 instead of both vectors
-      Similarity.intrinsicDimensionLshSelf(emb, dim = 64,
-        nPlanes = Similarity.srpAutoPlanes(emb.count()), nTables = 8)
-    }
-
-  /** The per-user event-type transition matrix — eighth shared
-    * derivation (r19 optimization round): SEVEN queries read the
-    * identical frame (ana_transitions verbatim; ana_markov_stationary /
-    * ana_markov_entropy as their chain matrix — entropy previously paid
-    * the corpus pass TWICE, once inside its stationary call and once for
-    * its own entropy terms; ana_pagerank / ana_pagerank_pers /
-    * graph_hits / graph_reciprocity as their edge list), each paying the
-    * events scan + user-keyed window + pair count (~0.5–1 s at sf0.1).
-    * Deterministic (the window orders by (ts, event_id)); same
-    * lifetime/purity contract as [[copurchaseEdges]].
+  /** The per-user event-type transition matrix (r19 optimization round):
+    * SEVEN queries read the identical frame (ana_transitions verbatim;
+    * ana_markov_stationary / ana_markov_entropy as their chain matrix —
+    * entropy previously paid the corpus pass TWICE, once inside its
+    * stationary call and once for its own entropy terms; ana_pagerank /
+    * ana_pagerank_pers / graph_hits / graph_reciprocity as their edge
+    * list), each paying the events scan + user-keyed window + pair count
+    * (~0.5–1 s at sf0.1). The window orders by (ts, event_id).
     */
-  private val transMemo =
-    scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
-
-  private[graft] def eventTransitions(s: SparkSession, dir: String): DataFrame =
-    memoized(transMemo, "_derive_event_transitions", s, dir)(
-      Analytics.transitions(T(s, dir, "events")))
+  private[graft] val eventTransitions = Derivation("_derive_event_transitions", Seq("events"),
+    (s, dir) => Analytics.transitions(T(s, dir, "events")))
 
   /** The self-consistency NB prediction frame (doc_id, y, pred) over the
-    * documents corpus — ninth shared derivation (r19): ml_nb_accuracy /
-    * ml_confusion / ml_class_report / ml_mcc_kappa each re-trained and
-    * re-scored the identical model (~2.4 s apiece at sf0.1) to then run
-    * a sub-100 ms aggregate. Deterministic (6-dp score quantization,
-    * ties → lower label); same contract as [[copurchaseEdges]].
+    * documents corpus (r19): ml_nb_accuracy / ml_confusion /
+    * ml_class_report / ml_mcc_kappa each re-trained and re-scored the
+    * identical model (~2.4 s apiece at sf0.1) to then run a sub-100 ms
+    * aggregate. 6-dp score quantization, ties → lower label.
     */
-  private val nbPredMemo =
-    scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
+  private[graft] val nbPred = Derivation("_derive_nb_pred", Seq("documents"), (s, dir) => {
+    val d = T(s, dir, "documents")
+    operators.ML.naiveBayesPredict(d, d, "lang")
+  })
 
-  private[graft] def nbPred(s: SparkSession, dir: String): DataFrame =
-    memoized(nbPredMemo, "_derive_nb_pred", s, dir) {
-      val d = T(s, dir, "documents")
-      operators.ML.naiveBayesPredict(d, d, "lang")
-    }
-
-  /** The 2-round LPA community labels over the co-purchase graph —
-    * tenth shared derivation (r20): graph_label_prop, graph_modularity
-    * and graph_conductance each re-ran the IDENTICAL propagation (same
-    * edges, same node%3 init, same 2 rounds, ~1–1.5 s apiece at sf0.1)
-    * to then run a per-community aggregate. Deterministic (vote ties →
-    * lowest label via the row_number ordering); same lifetime/purity
-    * contract as [[copurchaseEdges]]; parity vs a fresh derivation is
-    * asserted in EntrySpec.
+  /** The 2-round LPA community labels over the co-purchase graph (r20):
+    * graph_label_prop, graph_modularity and graph_conductance each re-ran
+    * the IDENTICAL propagation (same edges, same node%3 init, same 2
+    * rounds, ~1–1.5 s apiece at sf0.1) to then run a per-community
+    * aggregate. Vote ties → lowest label via the row_number ordering.
     */
   private[graft] def lpaLabelsFresh(s: SparkSession, dir: String): DataFrame = {
     val edges = copurchaseEdges(s, dir)
@@ -320,11 +208,13 @@ object SparkEntry {
     operators.Graph.labelPropagate(edges, init, 2)
   }
 
-  private val lpaMemo =
-    scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
+  private[graft] val lpaLabels = Derivation("_derive_lpa_labels", copurchaseEdges.tables,
+    lpaLabelsFresh)
 
-  private[graft] def lpaLabels(s: SparkSession, dir: String): DataFrame =
-    memoized(lpaMemo, "_derive_lpa_labels", s, dir)(lpaLabelsFresh(s, dir))
+  /** The ten shared derivations, each declared once above. */
+  private[graft] val sharedDerivations: Seq[Derivation] = Seq(copurchaseEdges,
+    docClusters, embCov, knnExact, knnLsh, twoNNExact, twoNNAnn,
+    eventTransitions, nbPred, lpaLabels)
 
   /** The shared derivations as NAMED bench lines: graft.Bench times
     * each one per pass (after clearMemos) under its `_derive_*` name,
@@ -337,40 +227,16 @@ object SparkEntry {
     * internal materializations, each already parity-checked in
     * EntrySpec and consumed by oracle-checked queries.
     */
-  private[graft] val derivations: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
-    "_derive_copurchase_edges" -> ((s, d) => copurchaseEdges(s, d)),
-    "_derive_doc_clusters" -> ((s, d) => docClusters(s, d)),
-    "_derive_emb_cov" -> ((s, d) => embCov(s, d)),
-    "_derive_knn_exact" -> ((s, d) => knnExact(s, d)),
-    "_derive_knn_lsh" -> ((s, d) => knnLsh(s, d)),
-    "_derive_twonn_exact" -> ((s, d) => twoNNExact(s, d)),
-    "_derive_twonn_ann" -> ((s, d) => twoNNAnn(s, d)),
-    "_derive_event_transitions" -> ((s, d) => eventTransitions(s, d)),
-    "_derive_nb_pred" -> ((s, d) => nbPred(s, d)),
-    "_derive_lpa_labels" -> ((s, d) => lpaLabels(s, d)))
+  private[graft] val derivations: Seq[(String, (SparkSession, String) => DataFrame)] =
+    sharedDerivations.map(d => d.name -> (d(_, _)))
 
-  /** Drop all (session, dir) memo entries. Measurement harnesses call
-    * this to keep recorded times honest: Bench clears per PASS (each
-    * pass's total contains every shared derivation exactly once — the
-    * materialize-once pipeline shape — and a min-of-2 retry can never
-    * record a memo hit as the query's cost), ScaleGate per MEASUREMENT
-    * (gate ratios must include the derivation's own scaling). The
-    * checkpointed blocks themselves live until their session stops;
-    * clearing only forgets the handles, which is fine for the handful
-    * of entries a harness process creates.
+  /** Drops every memoized derivation and unpersists its blocks, so a
+    * frame built before the clear must not be executed after it. See
+    * [[Derivation.clear]] for who clears and why.
     */
-  private[graft] def clearMemos(): Unit = {
-    edgeMemo.synchronized(edgeMemo.clear())
-    clusterMemo.synchronized(clusterMemo.clear())
-    covMemo.synchronized(covMemo.clear())
-    knnMemo.synchronized(knnMemo.clear())
-    knnLshMemo.synchronized(knnLshMemo.clear())
-    twoNNMemo.synchronized(twoNNMemo.clear())
-    twoNNAnnMemo.synchronized(twoNNAnnMemo.clear())
-    transMemo.synchronized(transMemo.clear())
-    nbPredMemo.synchronized(nbPredMemo.clear())
-    lpaMemo.synchronized(lpaMemo.clear())
-  }
+  private[graft] def clearMemos(): Unit = Derivation.clear()
+
+  private[graft] def drainTouchedDerivations(): Set[String] = Derivation.drainTouched()
 
   /** Tie-free 8-dp quantization of a COMPUTED double, engine-identical.
     * `cast(x AS DECIMAL(18,8))` is NOT: Spark casts through the

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,30 +9,7 @@ object Verify {
     val sfDir = args(0); val outDir = args(1)
     val keep: String => Boolean =
       if (args.length > 2) s => s.matches(args(2)) else _ => true
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.parquet stores ts as timestamp[ns]; read as long nanos
-      // (Ingest.readEvents truncates to micros, matching DuckDB).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // same AQE coalescing floor as graft.Bench (see the rationale
-      // there) — results are partitioning-independent by the repo's
-      // determinism discipline; this only speeds the sweep up
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "256k"))
-      // same codegen-class-cache sizing as graft.Bench (see the rationale
-      // there) — results are unaffected; this only speeds the sweep up
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE_ENTRIES", "4096"))
-      // catalog DDL queries must not depend on the driver's CWD
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-wh").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     new java.io.File(outDir).mkdirs()
     // Manifest of attempted/failed keys: a query that throws must not
     // silently vanish from the sweep's denominator (the dump dir simply

@@ -11,9 +11,8 @@ import org.apache.spark.sql.SparkSession
   *  - otherwise one `<outDir>/<query>_<suffix>.txt` per query, suffix
   *    from SPARK_GRAFT_PLAN_SUFFIX (default "plan") — how the r19
   *    optimization round captures `plans/r19/<q>_{before,after}.txt`.
-  * Session config mirrors graft.Bench (local[32], shuffle.partitions=32)
-  * so the captured plans are the benched plans, not a differently-sized
-  * session's.
+  * It runs on graft.Sessions, graft.Bench's session, so the captured
+  * plans are the benched plans, not a differently-sized session's.
   */
 object Plans {
   def main(args: Array[String]): Unit = {
@@ -22,38 +21,14 @@ object Plans {
     val names = if (args.length > 2) args.drop(2).toSeq
       else Seq("op07_filter", "op06_join3", "ana_top_parts", "q1_pricing", "q3_top_orders")
     val suffix = sys.env.getOrElse("SPARK_GRAFT_PLAN_SUFFIX", "plan")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // mirror graft.Bench's AQE floor (ADVICE r19: Plans omitted the
-      // one knob the r19 round changed, so captured runtime behavior
-      // diverged from the benched sessions)
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "256k"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.local("ERROR")
     outDir.foreach(d => java.nio.file.Files.createDirectories(java.nio.file.Paths.get(d)))
     graft.expressions.GraftFunctions.register(spark)
     // `_derive_*` names resolve to their FRESH builders: the memoized
-    // accessors eagerly localCheckpoint, which both runs the job and
+    // lookups eagerly localCheckpoint, which both runs the job and
     // collapses the interesting plan to an ExistingRDD scan.
-    import graft.operators.Similarity
-    def emb(s: SparkSession) = graft.etl.Ingest.readTable(s, sfDir, "embeddings")
-    val fresh: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame] = Map(
-      "_derive_copurchase_edges" -> ((s, d) => graft.SparkEntry.copurchaseEdgesFresh(s, d)),
-      "_derive_doc_clusters" -> ((s, d) => graft.SparkEntry.docClustersFresh(s, d)),
-      "_derive_emb_cov" -> ((s, _) => Similarity.covarianceMatrix(emb(s))),
-      "_derive_knn_exact" -> ((s, d) => graft.SparkEntry.knnExactFresh(s, d)),
-      "_derive_knn_lsh" -> ((s, d) => graft.SparkEntry.knnLshFresh(s, d)),
-      "_derive_twonn_exact" -> ((s, _) => Similarity.intrinsicDimension(emb(s))),
-      "_derive_twonn_ann" -> ((s, _) =>
-        Similarity.intrinsicDimensionLshSelf(emb(s), dim = 64,
-          nPlanes = Similarity.srpAutoPlanes(emb(s).count()), nTables = 8)))
     val all: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame] =
-      graft.SparkEntry.queries ++ fresh
+      graft.SparkEntry.queries ++ graft.SparkEntry.sharedDerivations.map(d => d.name -> d.build)
     names.foreach { name =>
       val plan = all(name)(spark, sfDir).queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)

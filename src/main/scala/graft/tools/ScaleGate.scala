@@ -218,7 +218,7 @@ object ScaleGate {
     }
 
     def time(name: String, dir: String): Double = {
-      // The (session, dir) memos (copurchaseEdges, docClusters) would
+      // The shared derivation memos (SparkEntry's `_derive_*`) would
       // otherwise let the second sample and every later family member
       // read pre-materialized blocks — recording near-zero and hiding
       // the derivation's scaling from exactly the gate that watches it.

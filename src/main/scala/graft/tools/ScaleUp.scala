@@ -30,16 +30,7 @@ object ScaleUp {
     val Array(src, out, factorS) = args.take(3)
     val factor = factorS.toInt
     require(factor >= 1, s"need factor >= 1, got $factor")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local()
     generate(spark, src, out, factor)
     spark.stop()
   }

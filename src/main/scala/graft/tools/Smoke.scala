@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler._
 
 /** Scratch profiling main (dev tool, not harness contract) — edit the
@@ -14,18 +13,7 @@ import org.apache.spark.scheduler._
 object Smoke {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "256k")
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-wh").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.local("ERROR")
     graft.expressions.GraftFunctions.register(spark)
 
     // r20c: component costs of the dedup pair-mining family + the new

@@ -98,68 +98,95 @@ class EntrySpec extends SparkSpec {
     }
   }
 
-  test("memoized copurchaseEdges: edge-set parity with a fresh derivation, same frame reused") {
-    val dir = "/root/testdata/sf0.001"
-    val memo1 = SparkEntry.copurchaseEdges(spark, dir)
-    val memo2 = SparkEntry.copurchaseEdges(spark, dir)
-    // second call returns the SAME checkpointed frame — no re-derivation
-    assert(memo1 eq memo2)
-    val fresh = SparkEntry.copurchaseEdgesFresh(spark, dir)
-    assert(memo1.count() == fresh.count() &&
-      memo1.join(fresh, Seq("src", "dst"), "left_anti").isEmpty &&
-      fresh.join(memo1, Seq("src", "dst"), "left_anti").isEmpty,
-      "memoized edge set diverges from a fresh derivation")
-    // key-uniqueness pin: (src, dst) is unique (the derivation ends in a
-    // groupBy), so set equality above IS full-frame equality
-    assert(memo1.count() == memo1.select("src", "dst").distinct().count())
+  // One memo-vs-fresh parity case per shared derivation, named after its
+  // accessor. twoNNAnn is also checked against its unfused reference
+  // below, so its case says "its fresh builder".
+  val parityCase = Map(
+    "_derive_copurchase_edges" -> "memoized copurchaseEdges: edge-set parity with a fresh derivation",
+    "_derive_doc_clusters" -> "memoized docClusters: label parity with a fresh derivation",
+    "_derive_emb_cov" -> "memoized embCov: covariance parity with a fresh derivation",
+    "_derive_knn_exact" -> "memoized knnExact: neighbor-list parity with a fresh derivation",
+    "_derive_twonn_exact" -> "memoized twoNNExact: estimate parity with a fresh derivation",
+    "_derive_knn_lsh" -> "memoized knnLsh: neighbor-list parity with a fresh derivation",
+    "_derive_twonn_ann" -> "memoized twoNNAnn: estimate parity with its fresh builder",
+    "_derive_event_transitions" -> "memoized eventTransitions: transition parity with a fresh derivation",
+    "_derive_nb_pred" -> "memoized nbPred: prediction parity with a fresh derivation",
+    "_derive_lpa_labels" -> "memoized lpaLabels: label parity with a fresh derivation")
+  // Derivations whose rows are unique on a key: multiset parity alone would
+  // pass if both the memo and the fresh build emitted the same duplicates.
+  val uniqueKey = Map(
+    "_derive_copurchase_edges" -> Seq("src", "dst"),
+    "_derive_doc_clusters" -> Seq("doc_id"),
+    "_derive_knn_exact" -> Seq("query_id", "rank"),
+    "_derive_knn_lsh" -> Seq("query_id", "rank"),
+    "_derive_lpa_labels" -> Seq("node"))
+  SparkEntry.sharedDerivations.foreach { d =>
+    test(parityCase.getOrElse(d.name, s"memoized ${d.name}: parity with a fresh derivation") +
+        ", same frame reused") {
+      import org.apache.spark.sql.functions.col
+      val dir = "/root/testdata/sf0.001"
+      // row multisets, compared on the driver: every derivation is small at
+      // sf0.001 (exceptAll trips a Spark binding error on the kNN plans)
+      def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq.sortBy(_.toString)
+      val memo = d(spark, dir)
+      assert(memo eq d(spark, dir), s"${d.name}: second lookup must return the same frame")
+      val memoRows = rows(memo)
+      assert(memoRows.nonEmpty, s"${d.name} is empty at sf0.001, so parity proves nothing")
+      val fresh = d.build(spark, dir)
+      assert(memoRows == rows(fresh), s"${d.name}: memoized frame diverges from a fresh build")
+      uniqueKey.get(d.name).foreach { key =>
+        assert(memo.count() == memo.select(key.map(col): _*).distinct().count(),
+          s"${d.name}: rows are not unique on ${key.mkString("(", ", ", ")")}")
+      }
+      // the fingerprint lists only the declared tables, so a build must
+      // read nothing else
+      val declared = d.tables.map(t => s"$dir/$t.parquet")
+      val undeclared = fresh.inputFiles.map(f => new org.apache.hadoop.fs.Path(f).toUri.getPath)
+        .filterNot(f => declared.exists(t => f == t || f.startsWith(t + "/")))
+      assert(undeclared.isEmpty, s"${d.name} reads undeclared inputs: ${undeclared.mkString(", ")}")
+    }
   }
 
-  test("memoized docClusters: label parity with a fresh derivation, same frame reused") {
-    val dir = "/root/testdata/sf0.001"
-    val memo1 = SparkEntry.docClusters(spark, dir)
-    assert(memo1 eq SparkEntry.docClusters(spark, dir))
-    val fresh = SparkEntry.docClustersFresh(spark, dir)
-    assert(memo1.count() == fresh.count() &&
-      memo1.join(fresh, Seq("doc_id", "cluster_id"), "left_anti").isEmpty &&
-      fresh.join(memo1, Seq("doc_id", "cluster_id"), "left_anti").isEmpty,
-      "memoized cluster labels diverge from a fresh derivation")
+  test("a derivation rebuilds when the files under its dir are rewritten") {
+    import org.apache.spark.sql.functions.col
+    val src = java.nio.file.Paths.get("/root/testdata/sf0.001")
+    val tmp = java.nio.file.Files.createTempDirectory("graft-stale")
+    try {
+      java.nio.file.Files.list(src).forEach(f =>
+        java.nio.file.Files.copy(f, tmp.resolve(f.getFileName)))
+      val dir = tmp.toString
+      val before = SparkEntry.copurchaseEdges(spark, dir).collect().toSet
+      // rewrite lineitem under the live session: every other order only
+      val lineitem = tmp.resolve("lineitem.parquet")
+      val half = spark.read.parquet(src.resolve("lineitem.parquet").toString)
+        .filter(col("l_orderkey") % 2 === 0)
+      java.nio.file.Files.delete(lineitem)
+      half.write.parquet(lineitem.toString)
+      val fresh = SparkEntry.copurchaseEdgesFresh(spark, dir).collect().toSet
+      val served = SparkEntry.copurchaseEdges(spark, dir).collect().toSet
+      val (changed, current) = (fresh != before, served == fresh)
+      assert(changed, "the rewrite must change the edge set")
+      assert(current, s"the memo served ${served.size} edges, a fresh build has " +
+        s"${fresh.size} (${before.size} before the rewrite)")
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
+    }
   }
 
-  test("memoized lpaLabels: label parity with a fresh derivation, same frame reused") {
+  test("clearMemos unpersists every derivation's checkpoint blocks") {
     val dir = "/root/testdata/sf0.001"
-    val memo1 = SparkEntry.lpaLabels(spark, dir)
-    assert(memo1 eq SparkEntry.lpaLabels(spark, dir))
-    val fresh = SparkEntry.lpaLabelsFresh(spark, dir)
-    assert(memo1.count() == fresh.count() &&
-      memo1.join(fresh, Seq("node", "label"), "left_anti").isEmpty &&
-      fresh.join(memo1, Seq("node", "label"), "left_anti").isEmpty,
-      "memoized LPA labels diverge from a fresh derivation")
-  }
-
-  test("memoized knnExact: neighbor-list parity with a fresh derivation, same frame reused") {
-    val dir = "/root/testdata/sf0.001"
-    val memo1 = SparkEntry.knnExact(spark, dir)
-    assert(memo1 eq SparkEntry.knnExact(spark, dir))
-    val fresh = SparkEntry.knnExactFresh(spark, dir)
-    // (query_id, rank) is unique (row_number window), so keyed set
-    // equality over all four columns IS full-frame equality
-    val cols = Seq("query_id", "rank", "neighbor_id", "cosine")
-    assert(memo1.count() == fresh.count() &&
-      memo1.join(fresh, cols, "left_anti").isEmpty &&
-      fresh.join(memo1, cols, "left_anti").isEmpty,
-      "memoized exact-kNN list diverges from a fresh derivation")
-  }
-
-  test("memoized knnLsh: neighbor-list parity with a fresh derivation, same frame reused") {
-    val dir = "/root/testdata/sf0.001"
-    val memo1 = SparkEntry.knnLsh(spark, dir)
-    assert(memo1 eq SparkEntry.knnLsh(spark, dir))
-    val fresh = SparkEntry.knnLshFresh(spark, dir)
-    val cols = Seq("query_id", "rank", "neighbor_id", "cosine")
-    assert(memo1.count() == fresh.count() &&
-      memo1.join(fresh, cols, "left_anti").isEmpty &&
-      fresh.join(memo1, cols, "left_anti").isEmpty,
-      "memoized LSH-kNN list diverges from a fresh derivation")
+    val rdds = SparkEntry.derivations.map { case (name, fn) =>
+      name -> (fn(spark, dir).queryExecution.logical match {
+        case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+        case p => fail(s"$name: memoized frame is not a checkpoint: ${p.nodeName}")
+      })
+    }
+    val persisted = spark.sparkContext.getPersistentRDDs
+    assert(rdds.forall(r => persisted.contains(r._2)), "derivations must be checkpointed")
+    SparkEntry.clearMemos()
+    val left = spark.sparkContext.getPersistentRDDs
+    assert(rdds.forall(r => !left.contains(r._2)),
+      s"blocks still held after clearMemos: ${rdds.filter(r => left.contains(r._2)).map(_._1)}")
   }
 
   test("memoized twoNNAnn: estimate parity with a fresh derivation, same frame reused") {
@@ -175,16 +202,6 @@ class EntrySpec extends SparkSpec {
       "memoized ANN TwoNN estimate diverges from a fresh derivation")
   }
 
-  test("memoized twoNNExact: estimate parity with a fresh derivation, same frame reused") {
-    val dir = "/root/testdata/sf0.001"
-    val memo1 = SparkEntry.twoNNExact(spark, dir)
-    assert(memo1 eq SparkEntry.twoNNExact(spark, dir))
-    val fresh = graft.operators.Similarity.intrinsicDimension(
-      spark.read.parquet(s"$dir/embeddings.parquet"))
-    assert(memo1.collect().toSeq == fresh.collect().toSeq,
-      "memoized TwoNN estimate diverges from a fresh derivation")
-  }
-
   test("derivations registry: every _derive_* name is prefixed and disjoint from queries") {
     val names = SparkEntry.derivations.map(_._1)
     assert(names.distinct == names)
@@ -196,23 +213,27 @@ class EntrySpec extends SparkSpec {
 
   test("memo eviction: entries leave exactly when the predicate marks their session dead") {
     val dir = "/root/testdata/sf0.001"
+    SparkEntry.clearMemos()
     val s2 = spark.newSession()
-    val before = SparkEntry.copurchaseEdges(s2, dir)
-    assert(before eq SparkEntry.copurchaseEdges(s2, dir),
-      "live-session memo entry must survive an eviction sweep")
+    val mine = SparkEntry.copurchaseEdges(s2, dir)
+    val theirs = SparkEntry.copurchaseEdges(spark, dir)
     // One JVM = one SparkContext, so a test can't hold a stopped session
-    // beside a live one — pin the sweep itself on a scratch map instead:
-    // entries must leave exactly when the predicate says dead (the
-    // production call site binds the predicate to sparkContext.isStopped).
-    val scratch = scala.collection.mutable.Map[(org.apache.spark.sql.SparkSession, String),
-      org.apache.spark.sql.DataFrame]((s2, dir) -> before, (spark, dir) -> before)
-    SparkEntry.sweepDead(scratch, _ => false)
-    assert(scratch.size == 2, "all-alive predicate must evict nothing")
-    SparkEntry.sweepDead(scratch, _ eq s2)
-    assert(scratch.keySet == Set((spark, dir)),
-      "dead predicate must evict exactly the dead session's entries")
-    SparkEntry.sweepDead(scratch, _ => true)
-    assert(scratch.isEmpty, "all-dead predicate must evict everything")
+    // beside a live one — pin the sweep on live sessions instead: entries
+    // must leave exactly when the predicate says dead (the lookup binds
+    // the predicate to sparkContext.isStopped).
+    Derivation.sweepDead(_ => false)
+    assert((SparkEntry.copurchaseEdges(s2, dir) eq mine) &&
+      (SparkEntry.copurchaseEdges(spark, dir) eq theirs),
+      "all-alive predicate must evict nothing")
+    Derivation.sweepDead(_ eq s2)
+    assert(SparkEntry.copurchaseEdges(spark, dir) eq theirs,
+      "a live session's entry must survive the sweep")
+    assert(!(SparkEntry.copurchaseEdges(s2, dir) eq mine),
+      "dead predicate must evict the dead session's entry")
+    Derivation.sweepDead(_ => true)
+    assert(!(SparkEntry.copurchaseEdges(spark, dir) eq theirs),
+      "all-dead predicate must evict everything")
+    SparkEntry.clearMemos()
   }
 
   test("memo-family membership is discoverable via drainTouchedDerivations") {
