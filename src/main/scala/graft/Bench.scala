@@ -1,4 +1,11 @@
 package graft
+
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import graft.Verify.{q => jq}
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
+import scala.util.Try
+
 object Bench {
   /** A profile whose START loadavg (1-min or 5-min) exceeds this is
     * CONTAMINATED by construction — r11 and r12 both committed dirty
@@ -17,9 +24,6 @@ object Bench {
     * times. A second defense, the history-aware retry (see
     * HistRetryFactor below), re-runs outliers vs the last clean profile
     * so one hot pass can't become the committed number.
-    * Override knobs: SPARK_GRAFT_LOADAVG_MAX (threshold, default 2.0),
-    * SPARK_GRAFT_WAIT_BUDGET_SEC (idle-wait budget, default 600; 0 to
-    * skip waiting entirely).
     */
   val LoadavgMax = 2.0
   val WaitBudgetSec = 600
@@ -30,18 +34,17 @@ object Bench {
     * vs 274.3 s on identical code in a quiet window — so steal now
     * GATES the stamp (r15 judge item 1). 0.5% is the calibration pair's
     * separator: every quiet-window pass measured ≤ 0.14%, the inflated
-    * ones 1.9%+. Override: SPARK_GRAFT_STEAL_MAX.
+    * ones 1.9%+.
     */
   val StealMaxPct = 0.5
-  /** Looser gate for the CANARY window only: the canary is a pure
+  /** Looser gate for the CPU canary's kept window: the canary is a pure
     * 32-thread spin, and pinning every vCPU at 100% induces ~0.5%
     * scheduling steal on this host even in quiet windows (measured
     * 0.51/0.52% on back-to-back runs whose pass windows read
     * 0.01–0.15%) — a systematic full-load artifact, not tenant noise.
     * The gate exists to catch bursts like r15's 1.9%, which would
     * corrupt the recorded host-speed provenance; 2% separates the two
-    * regimes while min-of-3 already blunts sub-burst noise. Override:
-    * SPARK_GRAFT_CANARY_STEAL_MAX.
+    * regimes while min-of-3 already blunts sub-burst noise.
     */
   val CanaryStealMaxPct = 2.0
   /** Max PRE-RUN membw-canary seconds for a `clean:true` stamp — the
@@ -60,10 +63,7 @@ object Bench {
     * under the contended event — band-separated on 10 calibration
     * points, vs the normalize-the-total option which would need a
     * fitted slope that one contended point cannot give (SCALE.md
-    * round-18 calibration table). Only the PRE-run reading gates: the
-    * post-run re-measure below records until its own quiet band is
-    * characterized (heap/GC state after 388 queries could inflate it
-    * independently of the host). Override: SPARK_GRAFT_MEMBW_MAX.
+    * round-18 calibration table).
     */
   val MembwMaxSec = 2.0
   /** Max MID-RUN membw-canary reading as a RATIO of the same run's
@@ -71,8 +71,8 @@ object Bench {
     * verdict's item 4: the r19 32-core driver profile carried
     * clean:true with a mid-run membw reading of 1.678 s against a
     * 0.864 s pre-run reading while its retry tail was demonstrably
-    * contended — end membw 8.4 s — and the committed min-of-2 numbers
-    * for the 6 "suspect" queries came from exactly that window).
+    * contended, and the committed min-of-2 numbers for the 6 "suspect"
+    * queries came from exactly that window).
     * Ratio-to-pre, not absolute: the canary's quiet reading scales
     * with the core count (min-of-3 at 8 cores reads 1.6–2.1 s where
     * 32 cores read 0.67–0.95 s), and pre/mid share JVM, cpus and host.
@@ -80,36 +80,157 @@ object Bench {
     * quiet 32-core mid/pre = 0.97–0.98, the 8-core clean control 1.32;
     * contended profiles 1.74 / 1.77 / 1.94 / 2.74. 1.6 sits above the
     * quiet band's max with ~20% margin and under every contended
-    * reading. A -1 mid reading (subset run too small to reach the
-    * midpoint hook) never gates. Override:
-    * SPARK_GRAFT_MEMBW_MID_RATIO_MAX.
+    * reading.
     */
   val MembwMidRatioMax = 1.6
+  /** A steal window below ~5 s of aggregate jiffies (32 cpus × 100 Hz ×
+    * ms) is quantization noise — a SINGLE stolen jiffy in a near-empty
+    * pass-2 window would read as >1% and stamp a quiet subset run
+    * dirty — so a pass window below this size never gates.
+    */
+  val MinStealWindowJiffies = 500L
+
+  /** The host readings a bench line records that its `clean` verdict
+    * reads: start loadavg (1-min, 5-min), the kept CPU-canary window's
+    * steal, each pass's steal with its window size in aggregate jiffies,
+    * and the pre-run and mid-run membw canary seconds. A reading that was
+    * not taken is -1 (a subset run too small to reach the mid-run hook,
+    * an unreadable /proc file) and never gates: an unmeasurable signal
+    * downgrades the verdict rather than poisoning every profile.
+    */
+  final case class HostReadings(
+      load1: Double, load5: Double,
+      canaryStealPct: Double = -1,
+      pass1StealPct: Double = -1, pass1Jiffies: Long = 0,
+      pass2StealPct: Double = -1, pass2Jiffies: Long = 0,
+      membwSec: Double = -1, membwMidSec: Double = -1)
+
+  object HostReadings {
+    /** The readings a recorded bench line carries. History lines are
+      * full-registry runs, so their pass windows are taken to reach
+      * [[MinStealWindowJiffies]]. `steal_pct` is [pass1, pass2] before
+      * round 16 and [canary, pass1, pass2] since. */
+    def of(line: JsonNode): HostReadings = {
+      def num(n: JsonNode) = n.asDouble(-1)
+      val steal = line.path("steal_pct")
+      val Seq(canary, pass1, pass2) =
+        Seq.fill(3 - steal.size)(-1.0) ++ (0 until steal.size).map(i => num(steal.get(i)))
+      HostReadings(num(line.path("loadavg").path(0)), num(line.path("loadavg5").path(0)),
+        canary, pass1, MinStealWindowJiffies, pass2, MinStealWindowJiffies,
+        num(line.path("canary_membw_sec")), num(line.path("canary_membw_mid_sec")))
+    }
+  }
+
+  /** The five `clean` gates; `field` names the JSON flag each one sets. */
+  sealed abstract class Gate(val field: String)
+  object Gate {
+    case object Load extends Gate("contaminated")
+    case object CanarySteal extends Gate("steal_high")
+    case object PassSteal extends Gate("steal_high")
+    case object Membw extends Gate("membw_high")
+    case object MembwMid extends Gate("membw_mid_high")
+  }
+
+  /** The gates `r` fires, each with its reading against its own
+    * threshold. A profile is clean when none fires. */
+  def verdict(r: HostReadings): Seq[(Gate, String)] = {
+    def pass(n: Int, pct: Double, jiffies: Long) =
+      Option.when(jiffies >= MinStealWindowJiffies && pct > StealMaxPct)(
+        Gate.PassSteal -> f"pass$n steal $pct%.2f%% > $StealMaxPct%.2f%%")
+    Seq(
+      Option.when(r.load1 > LoadavgMax || r.load5 > LoadavgMax)(Gate.Load ->
+        f"start loadavg ${r.load1}%.2f/${r.load5}%.2f (1m/5m) > $LoadavgMax%.2f"),
+      Option.when(r.canaryStealPct > CanaryStealMaxPct)(Gate.CanarySteal ->
+        f"canary-cpu steal ${r.canaryStealPct}%.2f%% > $CanaryStealMaxPct%.2f%%"),
+      pass(1, r.pass1StealPct, r.pass1Jiffies),
+      pass(2, r.pass2StealPct, r.pass2Jiffies),
+      // Memory-bandwidth contention the steal counter cannot see.
+      Option.when(r.membwSec > MembwMaxSec)(Gate.Membw ->
+        f"membw canary ${r.membwSec}%.2f s > $MembwMaxSec%.2f s"),
+      // Contention that arrives mid-pass, after the pre-run reading.
+      Option.when(r.membwSec > 0 && r.membwMidSec > MembwMidRatioMax * r.membwSec)(
+        Gate.MembwMid -> (f"mid-run membw canary ${r.membwMidSec}%.2f s > " +
+          f"$MembwMidRatioMax%.2f x pre-run ${r.membwSec}%.2f s"))
+    ).flatten
+  }
+
+  /** (1-min, 5-min) system load from /proc/loadavg; (-1, -1) if unreadable. */
+  def loadavg(): (Double, Double) =
+    try {
+      val f = scala.io.Source.fromFile("/proc/loadavg").mkString.split("\\s+")
+      (f(0).toDouble, f(1).toDouble)
+    } catch { case _: Throwable => (-1.0, -1.0) }
+
+  /** Waits for idle BEFORE an expensive run: a profile started under
+    * load is noise (r11/r12 incidents in BENCH_HISTORY.jsonl), but a
+    * refused run is a lost round artifact (r13 incident). Polls BOTH
+    * loadavg windows until the load gate passes or the budget runs out,
+    * then returns regardless: the start readings and the seconds waited.
+    * From ~2.5 an idle machine's 5-min average decays under 2.0 in
+    * ~1–2 min (exponential, 300 s constant), well inside the budget.
+    */
+  def waitForIdle(tag: String): ((Double, Double), Int) = {
+    var waited = 0
+    var load = loadavg()
+    while (verdict(HostReadings(load._1, load._2)).nonEmpty && waited < WaitBudgetSec) {
+      System.err.println(f"$tag: loadavg ${load._1}%.2f/${load._2}%.2f (1m/5m) > " +
+        f"$LoadavgMax%.2f — waiting for idle (${waited}s/${WaitBudgetSec}s)")
+      Thread.sleep(PollSec * 1000L)
+      waited += PollSec
+      load = loadavg()
+    }
+    (load, waited)
+  }
+
+  private val json = new ObjectMapper()
+
+  /** The JSON lines of `path`; a missing file or an unparseable line
+    * yields nothing. */
+  def readJsonLines(path: Path): Seq[JsonNode] =
+    Try(Files.readAllLines(path).asScala.toSeq).getOrElse(Nil)
+      .flatMap(l => Try(json.readTree(l)).toOption)
+
+  private def queriesOf(line: JsonNode): Map[String, Double] =
+    line.path("queries").properties().asScala
+      .map(e => e.getKey -> e.getValue.asDouble).toMap
+
+  /** A full-registry line at `sfDir` that times each shared derivation on
+    * its own `_derive_*` line. A line at another scale factor would
+    * poison the yardstick (10× times mask every real regression; 0.1×
+    * times flag every healthy macro as an outlier), and lines from before
+    * the r16 derivation split attribute `_derive_*` cost to whichever
+    * consumer ran first, so their per-query times are not comparable.
+    */
+  private def comparable(line: JsonNode, sfDir: String): Boolean =
+    !line.has("only") && line.path("sf").asText == sfDir &&
+      queriesOf(line).keys.exists(_.startsWith("_derive_"))
+
+  /** The history lines the retry yardstick reads: the last FIVE comparable
+    * lines stamped clean that today's [[verdict]] also passes — so a rule
+    * added after a line was written still keeps it out (the r14 round
+    * profile, stamped clean with a hot 5-min average and 5–8× inflated
+    * graph timings, is exactly such a line). Five, not one: round 15
+    * measured clean-stamped profiles on identical code ranging
+    * 274–398 s, so the per-query min over recent honest lines is the
+    * right "is this pass contaminated" denominator.
+    */
+  def yardstickLines(history: Seq[JsonNode], sfDir: String): Seq[JsonNode] =
+    history.reverse.filter(l => l.path("clean").asBoolean(false) &&
+      comparable(l, sfDir) && verdict(HostReadings.of(l)).isEmpty).take(5)
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = Sessions.cpus
-    // (1-min, 5-min) system load from /proc/loadavg — recorded before each
-    // pass and at the end, so an inflated profile is diagnosable as
-    // sandbox cross-talk (r5/r7 both saw ~2.5x run-level inflation on
-    // unchanged queries) instead of being misread as a code regression.
-    def loadavg(): (Double, Double) =
-      try {
-        val f = scala.io.Source.fromFile("/proc/loadavg").mkString.split("\\s+")
-        (f(0).toDouble, f(1).toDouble)
-      } catch { case _: Throwable => (-1.0, -1.0) }
     // (steal, total) jiffies from /proc/stat's aggregate cpu line. Steal
     // is the contention signal loadavg CANNOT see: cycles the hypervisor
     // gave to other tenants while our runnable threads waited. Round-15
     // forensics: two clean-stamped profiles on identical code measured
     // 274 s vs 343 s with a uniform ~1.25× per-query factor across
     // unrelated queries — invisible to both loadavg windows, exactly the
-    // signature of cross-tenant steal. Measured per pass; since round 16
-    // the `clean` stamp gates on it (StealMaxPct above). Total sums only
-    // the first 8 fields (user..steal): guest/guest_nice are already
-    // folded into user/nice by the kernel, so including them would
-    // double-count guest time and understate steal on guest-running
-    // hosts.
+    // signature of cross-tenant steal. Total sums only the first 8
+    // fields (user..steal): guest/guest_nice are already folded into
+    // user/nice by the kernel, so including them would double-count
+    // guest time and understate steal on guest-running hosts.
     def cpuTicks(): (Long, Long) =
       try {
         val f = scala.io.Source.fromFile("/proc/stat").getLines().next()
@@ -118,39 +239,7 @@ object Bench {
       } catch { case _: Throwable => (0L, 0L) }
     def stealPct(a: (Long, Long), b: (Long, Long)): Double =
       if (b._2 > a._2) 100.0 * (b._1 - a._1) / (b._2 - a._2) else -1.0
-    val loadMax = sys.env.get("SPARK_GRAFT_LOADAVG_MAX")
-      .flatMap(s => scala.util.Try(s.toDouble).toOption).getOrElse(LoadavgMax)
-    // Wait-for-idle BEFORE the expensive run: a profile started under
-    // load is noise (r11/r12 incidents in BENCH_HISTORY.jsonl), but a
-    // refused run is a lost round artifact (r13 incident). Poll BOTH
-    // loadavg windows until they settle under the threshold or the
-    // budget runs out, then run regardless. The 5-min average joined
-    // the gate in r15: r14's driver profile started at 1-min 1.88 but
-    // 5-min 2.37–2.61 (minutes after the correctness sweep) and carried
-    // clean:true while four graph queries ran 5–8× their idle times —
-    // residual sweep threads the 1-min window had already forgotten.
-    // From ~2.5 an idle machine's 5-min average decays under 2.0 in
-    // ~1–2 min (exponential, 300 s constant), well inside the budget.
-    val waitBudget = sys.env.get("SPARK_GRAFT_WAIT_BUDGET_SEC")
-      .flatMap(s => scala.util.Try(s.toInt).toOption).getOrElse(WaitBudgetSec)
-    var waited = 0
-    var (cur1, cur5) = loadavg()
-    while ((cur1 > loadMax || cur5 > loadMax) && waited < waitBudget) {
-      System.err.println(f"bench: loadavg $cur1%.2f/$cur5%.2f (1m/5m) > " +
-        f"$loadMax%.2f — waiting for idle (${waited}s/${waitBudget}s)")
-      Thread.sleep(PollSec * 1000L)
-      waited += PollSec
-      val l = loadavg(); cur1 = l._1; cur5 = l._2
-    }
-    val (start1, start5) = (cur1, cur5)
-    // Provenance only — the run proceeds either way. `contaminated` means
-    // "load never settled; discount these numbers", not "no numbers".
-    // BOTH windows must be under threshold for clean:true (the r14
-    // lesson above).
-    val contaminated = start1 > loadMax || start5 > loadMax
-    if (contaminated)
-      System.err.println(f"bench: proceeding DIRTY — loadavg $start1%.2f " +
-        f"still > $loadMax%.2f after ${waited}s; profile will carry clean:false")
+    val ((start1, start5), waited) = waitForIdle("bench")
     val spark = Sessions.local()
     // JVM/codegen warmup so the alphabetically-first query doesn't absorb
     // several seconds of one-time JIT + classloading cost. Runs on the
@@ -161,32 +250,21 @@ object Bench {
       try SparkEntry.queries(q)(spark, "/root/testdata/sf0.001").count()
       catch { case _: Throwable => () }
     }
-    // Host-speed CANARY — PROVENANCE ONLY since round 17. The r16 field
-    // value_per_canary was built as a cross-round comparator, but its two
-    // clean same-code r16 profiles disagreed by 18% while the raw totals
-    // disagreed by 8%: a pure-CPU spin doesn't share the bench's
-    // sensitivity profile (shuffle, memory bandwidth, JIT state), so
-    // dividing by it ANTI-corrected — the slower profile got the LARGER
-    // normalized value (r16 judge item 1). The field is gone; no one
-    // should divide by one component. What remains is a THREE-component
-    // host-speed vector, recorded so a future round with >= 4 clean
-    // same-code profiles can calibrate the mix that actually minimizes
-    // clean-profile variance before anything cites it as a comparator:
-    //  - cpu:     2048M xxhash64 folds (register-bound, zero I/O)
-    //  - shuffle: 64M-row modulo-keyed groupBy through a real exchange
-    //  - membw:   2 GiB of per-row long-array builds + reductions
+    // Host-speed CANARIES, recorded as provenance and gating `clean`;
+    // no one should divide the total by them (a pure-CPU spin doesn't
+    // share the bench's sensitivity profile, so the r16 normalized value
+    // ANTI-corrected):
+    //  - cpu:   2048M xxhash64 folds (register-bound, zero I/O); its
+    //    kept window's steal gates (CanaryStealMaxPct)
+    //  - membw: 2 GiB of per-row long-array builds + reductions
     //    (allocation + stream bandwidth; sequence(id, ...) keeps it
-    //    off the constant-folding path)
-    // All are fixed-size, deterministic, and touch none of the benched
-    // data (no page-cache preload). Min-of-3 each.
-    // Steal is measured around EACH run; the CPU canary's kept (fastest)
-    // window still gates the clean stamp (its systematic steal level is
-    // calibrated — see CanaryStealMaxPct), while the shuffle/membw
-    // windows are recorded in canary_steal_pct but never gate: see the
-    // gate-site comment. A burst in a DISCARDED run is already absorbed
-    // by the min (observed live — a 6.29% burst in run 1's window while
-    // the kept run and both passes were quiet would have dirtied the
-    // whole profile under a span-wide gate).
+    //    off the constant-folding path), read before the run and at the
+    //    pass-1 midpoint (MembwMaxSec, MembwMidRatioMax)
+    // Both are fixed-size, deterministic, and touch none of the benched
+    // data (no page-cache preload). Min-of-3 each, with steal measured
+    // around EACH run: a burst in a DISCARDED run is already absorbed by
+    // the min (observed live — a 6.29% burst in run 1's window while the
+    // kept run and both passes were quiet).
     def canaryRun(job: () => Unit): (Double, Double) = {
       val a = cpuTicks()
       val t0 = System.nanoTime()
@@ -194,10 +272,9 @@ object Bench {
       val sec = (System.nanoTime() - t0) / 1e9
       (sec, stealPct(a, cpuTicks()))
     }
-    // Total wall spent inside canary windows (r19, judge polish item 7):
-    // recorded as canary_overhead_sec so the history yardstick can
-    // subtract instrument cost when comparing totals across schema
-    // generations (the five canaries cost 4-5 min-of-3 Spark jobs/run).
+    // Total wall spent inside canary windows, recorded as
+    // canary_overhead_sec so instrument cost can be subtracted when
+    // comparing totals across schema generations.
     var canaryOverheadSec = 0.0
     def minOf3(job: () => Unit): (Double, Double) = {
       val runs = Seq.fill(3)(canaryRun(job))
@@ -209,109 +286,32 @@ object Bench {
     val (canarySec, stealCan) = minOf3(() =>
       spark.range(0L, 2048L * 1000 * 1000, 1L, cpus)
         .selectExpr("bit_xor(xxhash64(id)) AS h").collect())
-    val (canaryShufSec, stealShuf) = minOf3(() =>
-      spark.range(0L, 64L * 1000 * 1000, 1L, cpus)
-        .selectExpr("id % 1000000 AS k")
-        .groupBy("k").count()
-        .selectExpr("bit_xor(xxhash64(k, count)) AS h").collect())
-    val (canaryMembwSec, stealMembw) = minOf3(() =>
+    val membwJob: () => Unit = () =>
       spark.range(0L, 4096L, 1L, cpus)
         .selectExpr(
           "aggregate(sequence(id, id + 65535), 0L, (a, x) -> a + x) AS s")
-        .selectExpr("bit_xor(s) AS h").collect())
+        .selectExpr("bit_xor(s) AS h").collect()
+    val canaryMembwSec = minOf3(membwJob)._1
     // Repo root: user.dir when it looks like this sbt project (sbt runMain
     // sets it to the project root), overridable via SPARK_GRAFT_REPO,
     // /root/repo as the sandbox fallback — no hardcoded absolute path on
     // foreign checkouts.
     val repoRoot = sys.env.get("SPARK_GRAFT_REPO")
       .orElse(Option(System.getProperty("user.dir"))
-        .filter(d => java.nio.file.Files.exists(java.nio.file.Paths.get(d, "build.sbt"))))
+        .filter(d => Files.exists(Paths.get(d, "build.sbt"))))
       .getOrElse("/root/repo")
-    // Per-query reference timings from the most recent CLEAN full profile
-    // in BENCH_HISTORY.jsonl (fallback: BENCH_FULL.json whatever its
-    // provenance) — the yardstick for the history-aware retry below.
-    // Parsing is a targeted substring scan of our own writer's format:
-    // the "queries" object holds only identifier keys and bare numbers,
-    // so the first '}' after the key closes it.
-    def parseQueries(line: String): Map[String, Double] = {
-      val key = "\"queries\":{"
-      val i = line.indexOf(key)
-      if (i < 0) Map.empty
-      else {
-        val start = i + key.length
-        val end = line.indexOf('}', start)
-        if (end < 0) Map.empty
-        else line.substring(start, end).split(",").iterator.flatMap { kv =>
-          kv.split(":") match {
-            case Array(k, v) => scala.util.Try(
-              k.trim.stripPrefix("\"").stripSuffix("\"") -> v.trim.toDouble)
-              .toOption
-            case _ => None
-          }
-        }.toMap
-      }
+    val fullPath = s"$repoRoot/BENCH_FULL.json"
+    // Per-query reference timings, the per-query MIN over the yardstick
+    // lines of BENCH_HISTORY.jsonl (fallback: BENCH_FULL.json whatever
+    // its provenance) — the yardstick for the history-aware retry below.
+    val histTimes: Map[String, Double] = {
+      val hist = yardstickLines(
+        readJsonLines(Paths.get(s"$repoRoot/BENCH_HISTORY.jsonl")), sfDir)
+      val lines =
+        if (hist.nonEmpty) hist
+        else readJsonLines(Paths.get(fullPath)).filter(comparable(_, sfDir))
+      lines.flatMap(queriesOf).groupMapReduce(_._1)(_._2)(math.min)
     }
-    val histTimes: Map[String, Double] = try {
-      val histPath = java.nio.file.Paths.get(s"$repoRoot/BENCH_HISTORY.jsonl")
-      // Apply the r15 both-windows rule RETROACTIVELY when picking the
-      // yardstick: pre-r15 lines could stamp clean:true with a hot 5-min
-      // average (the r14 driver profile is exactly such a line, with
-      // 5–8× inflated graph timings — useless as an outlier baseline).
-      def start5Of(l: String): Double = {
-        val k = "\"loadavg5\":["
-        val i = l.indexOf(k)
-        if (i < 0) 0.0
-        else scala.util.Try(
-          l.substring(i + k.length, l.indexOf(',', i + k.length)).toDouble)
-          .getOrElse(0.0)
-      }
-      // Same-sf lines only: a full run at another scale factor would
-      // otherwise poison the yardstick (10× times mask every real
-      // regression; 0.1× times flag every healthy macro as an outlier).
-      // Per-query MIN over the last FIVE clean lines, not just the last
-      // one: round-15 measured clean-stamped profiles on identical code
-      // ranging 274–398 s (host-level variance invisible to loadavg AND
-      // steal) — the best recent honest time is the right "is this pass
-      // contaminated" denominator, where the merely-latest one inherits
-      // whatever slow window it ran in.
-      val sfTag = s""""sf":"$sfDir""""
-      // Schema cutover (r16 judge item 7): profiles BEFORE the r16
-      // derivation split attribute `_derive_*` cost to whichever consumer
-      // ran first alphabetically, so their per-query times are not
-      // comparable to post-split marginal-cost times — a retry yardstick
-      // built on them either masks regressions (consumer lines inflated)
-      // or cries wolf (derivation lines absent). Post-split profiles are
-      // self-identifying: their queries object contains `_derive_` keys.
-      // No epoch constant to maintain. (Since r18 lines also carry
-      // "schema_version":4 — future schema cutovers should dispatch on
-      // that int instead of adding another substring sniff.)
-      val cleanLines =
-        if (java.nio.file.Files.exists(histPath))
-          scala.io.Source.fromFile(histPath.toFile).getLines().toSeq.reverse
-            .filter(l => l.contains("\"clean\":true") && !l.contains("\"only\":") &&
-              l.contains(sfTag) && l.contains("\"_derive_") &&
-              start5Of(l) <= loadMax)
-            .take(5)
-        else Seq.empty
-      val fromHist = cleanLines.map(parseQueries).filter(_.nonEmpty)
-        .foldLeft(Map.empty[String, Double]) { (acc, m) =>
-          (acc.keySet ++ m.keySet).iterator.map { k =>
-            k -> math.min(acc.getOrElse(k, Double.MaxValue),
-              m.getOrElse(k, Double.MaxValue))
-          }.toMap
-        }
-      if (fromHist.nonEmpty) fromHist
-      else {
-        val fullPath = java.nio.file.Paths.get(s"$repoRoot/BENCH_FULL.json")
-        if (java.nio.file.Files.exists(fullPath)) {
-          val txt = new String(java.nio.file.Files.readAllBytes(fullPath),
-            java.nio.charset.StandardCharsets.UTF_8)
-          if (txt.contains(sfTag) && txt.contains("\"_derive_"))
-            parseQueries(txt)
-          else Map.empty
-        } else Map.empty
-      }
-    } catch { case _: Throwable => Map.empty }
     // (name, seconds, error) — a throwing query must NOT be recorded as a
     // normal fast timing; it gets an entry in "errors" instead.
     // Optional subset run (scale tests): SPARK_GRAFT_BENCH_ONLY is an
@@ -348,10 +348,10 @@ object Bench {
       val midAt = all.size / 2
       val touchedBy = scala.collection.mutable.Map.empty[String, Set[String]]
       val times = all.zipWithIndex.map { case ((name, fn), idx) =>
-        // Mid-run canary sample (r19, judge item 2): fires BETWEEN two
-        // queries at the pass midpoint, so no per-query timing absorbs
-        // it; it inflates the pass-1 steal window by its ~1 s of quiet
-        // wall, which is noise against a 200+ s window.
+        // Mid-run canary sample: fires BETWEEN two queries at the pass
+        // midpoint, so no per-query timing absorbs it; it inflates the
+        // pass-1 steal window by its ~1 s of quiet wall, which is noise
+        // against a 200+ s window.
         if (idx == midAt) midHook.foreach(_())
         SparkEntry.drainTouchedDerivations()
         val t0 = System.nanoTime()
@@ -409,20 +409,13 @@ object Bench {
       t >= MacroThresholdSec &&
         histTimes.get(n).exists(h => h > 0 && t > HistRetryFactor * h)
     val ticks0 = cpuTicks()
-    // Mid-run membw canary (r19, judge item 2): the pre-run gate
-    // certifies t=0 and the post-run re-measure t=end; contention that
-    // ARRIVES mid-window (the r17 352.6 s profile's failure mode) was
-    // visible to neither. One min-of-3 sample at the pass-1 midpoint —
-    // record-only until its quiet band is characterized, the same
-    // record-until-calibrated rule every other signal followed.
-    var canaryMembwMid: Option[(Double, Double)] = None
-    val membwJob: () => Unit = () =>
-      spark.range(0L, 4096L, 1L, cpus)
-        .selectExpr(
-          "aggregate(sequence(id, id + 65535), 0L, (a, x) -> a + x) AS s")
-        .selectExpr("bit_xor(s) AS h").collect()
+    // Mid-run membw canary: the pre-run reading certifies t=0 only;
+    // contention that ARRIVES mid-window (the r17 352.6 s profile's
+    // failure mode) is visible to this one min-of-3 sample at the
+    // pass-1 midpoint.
+    var canaryMembwMidSec = -1.0
     val (p1, touchedBy) = pass(midHook = Some(() =>
-      canaryMembwMid = Some(minOf3(membwJob))))
+      canaryMembwMidSec = minOf3(membwJob)._1))
     val (mid1, mid5) = loadavg()
     val ticksMid = cpuTicks()
     val retry = p1.collect {
@@ -443,96 +436,19 @@ object Bench {
     val p2 = pass(retry, extraDerivs = retryDerivs)._1.map(r => r._1 -> r).toMap
     val (end1, end5) = loadavg()
     val ticksEnd = cpuTicks()
-    // POST-run membw re-measure (r18): the pre-run canary only certifies
-    // the host at t=0; bandwidth contention starting mid-run would be
-    // invisible to it AND to the steal gate. Recorded, NOT gating — a
-    // post-388-query JVM's allocation behavior hasn't been characterized
-    // against the pre-run quiet band yet (same record-until-calibrated
-    // rule as the shuffle window). Placed after ticksEnd so the pass-2
-    // steal window stays pure.
-    val (canaryMembwEndSec, stealMembwEnd) = minOf3(membwJob)
-    val (canaryMembwMidSec, stealMembwMid) =
-      canaryMembwMid.getOrElse((-1.0, -1.0))
-    // steal over [pass1, pass2] — the in-run external-contention record,
-    // and since round 16 a `clean` gate: either pass above StealMaxPct
-    // means a neighboring tenant ate a measurable slice of our cycles
-    // mid-run, so the numbers carry clean:false however quiet loadavg
-    // looked. -1 (unreadable /proc/stat) never trips the gate — an
-    // unmeasurable signal downgrades to the loadavg-only stamp rather
-    // than poisoning every profile on hosts without the counter.
+    // steal over [pass1, pass2]: either pass above StealMaxPct means a
+    // neighboring tenant ate a measurable slice of our cycles mid-run,
+    // so the numbers carry clean:false however quiet loadavg looked.
     val steal1 = stealPct(ticks0, ticksMid)
     val steal2 = stealPct(ticksMid, ticksEnd)
-    val stealMax = sys.env.get("SPARK_GRAFT_STEAL_MAX")
-      .flatMap(s => scala.util.Try(s.toDouble).toOption).getOrElse(StealMaxPct)
-    // A window below ~5 s of aggregate jiffies (32 cpus × 100 Hz × ms) is
-    // quantization noise — a SINGLE stolen jiffy in a near-empty pass-2
-    // window would read as >1% and stamp a quiet subset run dirty — so
-    // tiny windows are recorded but never gate (same downgrade-not-poison
-    // rule as the -1 unreadable-/proc/stat sentinel). The kept canary
-    // windows gate too: a burst there corrupts the recorded host-speed
-    // provenance and signals contamination seconds before pass 1.
-    val MinStealWindowJiffies = 500L
-    val canaryStealMax = sys.env.get("SPARK_GRAFT_CANARY_STEAL_MAX")
-      .flatMap(s => scala.util.Try(s.toDouble).toOption)
-      .getOrElse(CanaryStealMaxPct)
-    def gates(a: (Long, Long), b: (Long, Long), s: Double,
-              max: Double): Boolean =
-      b._2 - a._2 >= MinStealWindowJiffies && s > max
-    // Only the CPU canary gates: its ~0.5% systematic full-load steal is
-    // CALIBRATED (CanaryStealMaxPct scaladoc), so 2% separates artifact
-    // from burst. The r17 shuffle/membw components measured 3.25–8%
-    // steal in their kept windows on a QUIET host (cpu canary 0.00,
-    // pass windows 0.08–0.15% in the same profile, twice in a row) —
-    // their windows are short (0.5–2 s) and bursty (shuffle fetch
-    // threads, allocation spikes), and this hypervisor charges the
-    // scheduling churn as steal. Until a signal's clean-window spread is
-    // characterized it records, it does not gate — the same demotion
-    // rule the canary normalizer itself got this round. All three are
-    // recorded per kept window in canary_steal_pct for forensics.
-    val canaryHigh = Seq("cpu" -> stealCan)
-      .filter { case (_, s) => s >= 0 && s > canaryStealMax }
-    val pass1High = gates(ticks0, ticksMid, steal1, stealMax)
-    val pass2High = gates(ticksMid, ticksEnd, steal2, stealMax)
-    val stealHigh = canaryHigh.nonEmpty || pass1High || pass2High
-    // Membw-canary TIME gate (r18, see MembwMaxSec scaladoc): marks
-    // memory-bandwidth contention that steals no jiffies. Pre-run
-    // reading only; min-of-3 already absorbed any single burst.
-    val membwMax = sys.env.get("SPARK_GRAFT_MEMBW_MAX")
-      .flatMap(s => scala.util.Try(s.toDouble).toOption).getOrElse(MembwMaxSec)
-    val membwHigh = canaryMembwSec > membwMax
-    if (membwHigh)
-      System.err.println(f"bench: membw canary $canaryMembwSec%.2f s > " +
-        f"$membwMax%.2f s quiet-band gate — memory-bandwidth contention " +
-        "the steal counter cannot see; profile will carry clean:false")
-    // Mid-run membw gate (r20, MembwMidRatioMax scaladoc): contention
-    // that ARRIVES mid-pass — the r19 failure mode the record-only
-    // sample documented but did not act on.
-    val membwMidRatioMax = sys.env.get("SPARK_GRAFT_MEMBW_MID_RATIO_MAX")
-      .flatMap(s => scala.util.Try(s.toDouble).toOption)
-      .getOrElse(MembwMidRatioMax)
-    val membwMidHigh = canaryMembwMidSec > 0 && canaryMembwSec > 0 &&
-      canaryMembwMidSec > membwMidRatioMax * canaryMembwSec
-    if (membwMidHigh)
-      System.err.println(f"bench: MID-RUN membw canary $canaryMembwMidSec%.2f s" +
-        f" > $membwMidRatioMax%.2f x pre-run $canaryMembwSec%.2f s — " +
-        "contention arrived mid-pass; profile will carry clean:false")
-    // Forensics names the window(s) that actually fired with each one's
-    // OWN threshold — the r16 message always printed the pass gate's
-    // 0.5% even when only the 2% canary gate tripped (ADVICE r16).
-    if (stealHigh) {
-      val fired =
-        canaryHigh.map { case (n, s) =>
-          f"canary-$n $s%.2f%% > $canaryStealMax%.2f%%" } ++
-        (if (pass1High) Seq(f"pass1 $steal1%.2f%% > $stealMax%.2f%%") else Nil) ++
-        (if (pass2High) Seq(f"pass2 $steal2%.2f%% > $stealMax%.2f%%") else Nil)
-      System.err.println("bench: hypervisor steal " +
-        fired.mkString(", ") + " — profile will carry clean:false")
-    }
-    val steals = f"""[$stealCan%.2f,$steal1%.2f,$steal2%.2f]"""
-    // 4th entry since r18: the post-run membw re-measure's kept window.
-    // 5th entry since r19: the mid-run membw sample's kept window.
-    val canarySteals =
-      f"""[$stealCan%.2f,$stealShuf%.2f,$stealMembw%.2f,$stealMembwEnd%.2f,$stealMembwMid%.2f]"""
+    val fired = verdict(HostReadings(start1, start5, stealCan,
+      steal1, ticksMid._2 - ticks0._2, steal2, ticksEnd._2 - ticksMid._2,
+      canaryMembwSec, canaryMembwMidSec))
+    def firedOn(field: String) = fired.exists(_._1.field == field)
+    // Forensics names each gate that fired with its OWN threshold.
+    if (fired.nonEmpty)
+      System.err.println("bench: profile will carry clean:false — " +
+        fired.map(_._2).mkString("; "))
     val results = p1.map { case (n, t1, e1) =>
       p2.get(n) match {
         case None => (n, t1, e1, false)
@@ -544,8 +460,6 @@ object Bench {
         }
       }
     }
-    def jq(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"")
-      .replaceAll("[\\x00-\\x1f]", " ") + "\""
     // The harness keeps only the LAST ~2000 bytes of stdout (plus sbt's
     // trailing "[success] Total time" line), and with 100+ queries one JSON
     // line is ~3000+ bytes — every past round's artifact was truncated and
@@ -581,20 +495,17 @@ object Bench {
     // min-of-2, micro single-pass) so totals aren't read as comparable to
     // the flat min-of-2 rounds 6-12 (flat min-of-2 is systematically
     // lower on the micro tail) or the single-pass rounds 1-5.
-    val fullPath = s"$repoRoot/BENCH_FULL.json"
-    // Provenance: "clean" is the machine-readable verdict (start load
-    // under threshold), so the driver/judge selects the authoritative
+    // Provenance: "clean" is the machine-readable verdict (no gate of
+    // [[verdict]] fired), so a reader selects the authoritative
     // profile without loadavg archaeology. loadavg = [start, mid, end]
-    // 1-min values; loadavg5 the 5-min values at the same instants.
+    // 1-min values; loadavg5 the 5-min values at the same instants;
+    // steal_pct = [cpu canary, pass1, pass2].
     val loads = f"""[$start1%.2f,$mid1%.2f,$end1%.2f]"""
     val loads5 = f"""[$start5%.2f,$mid5%.2f,$end5%.2f]"""
-    // clean = start loadavg (both windows) under threshold AND in-run
-    // hypervisor steal under StealMaxPct AND the pre-run membw canary
-    // inside its calibrated quiet band AND the mid-run membw reading
-    // within ratio of the pre-run one — the full trust verdict.
-    val clean = !contaminated && !stealHigh && !membwHigh && !membwMidHigh
+    val steals = f"""[$stealCan%.2f,$steal1%.2f,$steal2%.2f]"""
+    val clean = fired.isEmpty
     val onlyTag = only.map(r => s""","only":${jq(r)}""").getOrElse("")
-    // schema_version (r17 judge polish): BENCH_HISTORY spans four
+    // schema_version (r17 judge polish): BENCH_HISTORY spans several
     // generations of line schema; tooling should dispatch on this int
     // instead of substring-sniffing. 4 = tiered-2 passes + per-derivation
     // `_derive_*` lines (r16 split) + 3-component canary vector (r17).
@@ -602,9 +513,12 @@ object Bench {
     // reach the midpoint hook), canary_overhead_sec, and the mid window
     // as the 5th canary_steal_pct entry. 6 (r20) adds the mid-run membw
     // RATIO gate fields (membw_mid_ratio_max, membw_mid_high — the mid
-    // reading now gates `clean`). Absent field = version <= 3.
+    // reading now gates `clean`). 7 retires the record-only shuffle and
+    // post-run membw canaries (canary_shuffle_sec, canary_membw_end_sec)
+    // and canary_steal_pct, whose one gating entry repeats steal_pct[0].
+    // Absent field = version <= 3.
     val line =
-      s"""{"schema_version":6,"metric":"total","unit":"sec","passes":"tiered-2","macro_threshold_sec":$MacroThresholdSec,"n_macro":${retry.size},"hist_retry_factor":$HistRetryFactor,"hist_retries":${histRetries.map(jq).sorted.mkString("[", ",", "]")},"suspect":$suspect,"clean":$clean,"contaminated":$contaminated,"loadavg_max":$loadMax,"waited_sec":$waited,"loadavg":$loads,"loadavg5":$loads5,"steal_pct":$steals,"steal_max_pct":$stealMax,"steal_high":$stealHigh,"canary_sec":${f"$canarySec%.3f"},"canary_shuffle_sec":${f"$canaryShufSec%.3f"},"canary_membw_sec":${f"$canaryMembwSec%.3f"},"canary_membw_end_sec":${f"$canaryMembwEndSec%.3f"},"canary_membw_mid_sec":${f"$canaryMembwMidSec%.3f"},"canary_overhead_sec":${f"$canaryOverheadSec%.3f"},"membw_max_sec":$membwMax,"membw_high":$membwHigh,"membw_mid_ratio_max":$membwMidRatioMax,"membw_mid_high":$membwMidHigh,"canary_steal_pct":$canarySteals,"flaky":$flaky,"errors":$errs,"queries":$qsFull,"n_ok":$nOk,"value":$total,"sf":"$sfDir","full":${jq(fullPath)}$onlyTag}"""
+      s"""{"schema_version":7,"metric":"total","unit":"sec","passes":"tiered-2","macro_threshold_sec":$MacroThresholdSec,"n_macro":${retry.size},"hist_retry_factor":$HistRetryFactor,"hist_retries":${histRetries.map(jq).sorted.mkString("[", ",", "]")},"suspect":$suspect,"clean":$clean,"contaminated":${firedOn("contaminated")},"loadavg_max":$LoadavgMax,"waited_sec":$waited,"loadavg":$loads,"loadavg5":$loads5,"steal_pct":$steals,"steal_max_pct":$StealMaxPct,"steal_high":${firedOn("steal_high")},"canary_sec":${f"$canarySec%.3f"},"canary_membw_sec":${f"$canaryMembwSec%.3f"},"canary_membw_mid_sec":${f"$canaryMembwMidSec%.3f"},"canary_overhead_sec":${f"$canaryOverheadSec%.3f"},"membw_max_sec":$MembwMaxSec,"membw_high":${firedOn("membw_high")},"membw_mid_ratio_max":$MembwMidRatioMax,"membw_mid_high":${firedOn("membw_mid_high")},"flaky":$flaky,"errors":$errs,"queries":$qsFull,"n_ok":$nOk,"value":$total,"sf":"$sfDir","full":${jq(fullPath)}$onlyTag}"""
     println(line)
     // Short line: slowest-first entries until the byte budget is spent.
     val budget = 1600
@@ -627,7 +541,7 @@ object Bench {
       .orElse(sys.env.get("SPARK_GRAFT_BENCH_OUT"))
       .getOrElse("/tmp/graft-bench.json")
     (if (only.isDefined) Seq(outPath) else Seq(fullPath, outPath)).distinct.foreach { p =>
-      try java.nio.file.Files.write(java.nio.file.Paths.get(p),
+      try Files.write(Paths.get(p),
         (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
       catch { case e: Throwable =>
         System.err.println(s"bench: could not write $p: ${e.getMessage}") }
@@ -639,8 +553,8 @@ object Bench {
     val histLine = "{\"epoch\":" + (System.currentTimeMillis() / 1000) + "," +
       line.drop(1) + "\n"
     if (only.isEmpty)
-    try java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$repoRoot/BENCH_HISTORY.jsonl"),
+    try Files.write(
+      Paths.get(s"$repoRoot/BENCH_HISTORY.jsonl"),
       histLine.getBytes(java.nio.charset.StandardCharsets.UTF_8),
       java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.APPEND)
     catch { case e: Throwable =>

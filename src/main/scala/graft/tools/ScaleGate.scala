@@ -1,5 +1,7 @@
 package graft.tools
 
+import graft.Bench
+import graft.Verify.{q => jq}
 import org.apache.spark.sql.SparkSession
 
 /** Standing per-round SCALE GATE: run the most expensive registered
@@ -158,35 +160,13 @@ object ScaleGate {
     val sf01 = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val sf1 = args.lift(1).getOrElse("/tmp/sf1")
     val outJson = args.lift(2).getOrElse("SCALE_GATE.json")
-    // Same wait-for-idle policy as graft.Bench (the r13 hard refusal
-    // cost a round its bench artifact): a gate verdict from a loaded
-    // machine is untrustworthy in BOTH directions (noise can breach a
-    // ratio or mask one), so poll the 1-min loadavg until it settles or
-    // the budget runs out, then run regardless — a verdict with a dirty
+    // graft.Bench's wait-for-idle and load gate: a gate verdict from a
+    // loaded machine is untrustworthy in BOTH directions (noise can breach
+    // a ratio or mask one), so wait for both loadavg windows to settle or
+    // the budget to run out, then run regardless — a verdict with a dirty
     // provenance stamp beats no verdict.
-    def loadavg2(): Double =
-      try scala.io.Source.fromFile("/proc/loadavg").mkString
-        .split("\\s+")(0).toDouble
-      catch { case _: Throwable => -1.0 }
-    val loadMax = sys.env.get("SPARK_GRAFT_LOADAVG_MAX")
-      .flatMap(s => scala.util.Try(s.toDouble).toOption)
-      .getOrElse(graft.Bench.LoadavgMax)
-    val waitBudget = sys.env.get("SPARK_GRAFT_WAIT_BUDGET_SEC")
-      .flatMap(s => scala.util.Try(s.toInt).toOption)
-      .getOrElse(graft.Bench.WaitBudgetSec)
-    var waited = 0
-    var start1 = loadavg2()
-    while (start1 > loadMax && waited < waitBudget) {
-      System.err.println(f"[scalegate] loadavg $start1%.2f > $loadMax%.2f " +
-        f"— waiting for idle (${waited}s/${waitBudget}s)")
-      Thread.sleep(graft.Bench.PollSec * 1000L)
-      waited += graft.Bench.PollSec
-      start1 = loadavg2()
-    }
-    val startClean = start1 <= loadMax
-    if (!startClean)
-      System.err.println(f"[scalegate] proceeding DIRTY — loadavg " +
-        f"$start1%.2f still > $loadMax%.2f after ${waited}s")
+    val ((start1, start5), _) = Bench.waitForIdle("[scalegate]")
+    val startClean = Bench.verdict(Bench.HostReadings(start1, start5)).isEmpty
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       math.min(32, Runtime.getRuntime.availableProcessors()).toString)
     val spark = SparkSession.builder()
@@ -205,11 +185,6 @@ object ScaleGate {
       System.err.println(s"[scalegate] $sf1 missing — generating 10x fixture")
       ScaleUp.generate(spark, sf01, sf1, 10)
     }
-
-    def loadavg(): Double =
-      try scala.io.Source.fromFile("/proc/loadavg").mkString
-        .split("\\s+")(0).toDouble
-      catch { case _: Throwable => -1.0 }
 
     // warmup on sf0.001 (JIT + classloading; not the timed data)
     Seq("q1_pricing", "ana_favorite_type").foreach { q =>
@@ -232,11 +207,11 @@ object ScaleGate {
     // min-of-2 per (query, scale); sf0.1 pass first so the JVM is equally
     // warm (warmer, if anything) for the larger scale — bias favors
     // CATCHING regressions, not hiding them.
-    val load0 = loadavg()
+    val load0 = Bench.loadavg()._1
     val small = Subset.map(q => q -> math.min(time(q, sf01), time(q, sf01))).toMap
-    val load1 = loadavg()
+    val load1 = Bench.loadavg()._1
     val big = Subset.map(q => q -> math.min(time(q, sf1), time(q, sf1))).toMap
-    val load2 = loadavg()
+    val load2 = Bench.loadavg()._1
 
     // Adaptive third sample: a query whose min-of-2 ratio breaches its
     // bound gets ONE more timed run at each scale before judgment
@@ -272,7 +247,6 @@ object ScaleGate {
       (if (aggOk) Nil else Seq("__aggregate__"))
     val pass = failures.isEmpty
 
-    def jq(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
     val qjson = rows.sortBy(-_._4).map { case (q, a, b, r, ex, ok) =>
       val reason = ExemptReasons.get(q)
         .map(why => s""","reason":${jq(why)}""").getOrElse("")
