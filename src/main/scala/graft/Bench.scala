@@ -482,7 +482,7 @@ object Bench {
     // total INCLUDES the `_derive_*` lines (the derivation work was part
     // of every pre-r16 total too, attributed to a consumer); n_ok counts
     // only registered queries, so it stays comparable to the registry
-    // size the docs and artifact_check pin.
+    // size the docs pin.
     val total = results.collect { case (_, v, None, _) => v }.sum
     val nOk = results.count(r => r._3.isEmpty && !r._1.startsWith("_derive_"))
     // Queries whose FINAL (post-retry) time still exceeds the history

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 import graft.analytics.Analytics
+import graft.entries.{EmbEntry, Q}
 import graft.etl.{Ingest, Merge, Transforms}
 import graft.functions.Fns
 import graft.operators.{AsOfJoin, BloomJoin, Dedup, Layout, Multimodal, Sampling, Similarity, Sketch, Skew, TextAnalysis}
@@ -38,7 +39,7 @@ import graft.streaming.{StatefulJobs, StreamingJobs}
   */
 object SparkEntry {
 
-  private def T(s: SparkSession, dir: String, name: String): DataFrame = {
+  private[graft] def T(s: SparkSession, dir: String, name: String): DataFrame = {
     // Every query funnels through here: make graft's native expressions
     // (graft_cosine) available on whatever session the driver hands us.
     graft.expressions.GraftFunctions.register(s)
@@ -289,7 +290,19 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q1_pricing")(spark, "/root/testdata/sf0.001")
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  /** Every registered query: the families declared as [[entries.Q]]
+    * lists, plus the entries still written below as a name → frame map
+    * beside a name → oracle map.
+    */
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    remainingQueries ++ families.map(q => q.name -> q.spark)
+
+  def oracleSql: Map[String, String] =
+    remainingOracleSql ++ families.map(q => q.name -> q.oracle)
+
+  private def families: Seq[Q] = EmbEntry.queries
+
+  private def remainingQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // ---- headline aggregations (analytics capability, README.md:9) ----
 
@@ -1684,25 +1697,6 @@ object SparkEntry {
         .orderBy("query_id", "rank")
     }),
 
-    // Symmetric int8 quantization, exploded to (vec_id, i, q) rows so the
-    // driver's scalar hash-compare covers every code.
-    "emb_quantize" -> ((s, dir) =>
-      Similarity.quantizeInt8(T(s, dir, "embeddings"))
-        .select(col("vec_id"), round(col("scale"), 6).as("scale"), posexplode(col("q")))
-        .select(col("vec_id"), col("scale"), col("pos").cast("long").as("i"),
-          col("col").cast("long").as("q"))
-        .orderBy("vec_id", "i")),
-
-    // Unit-norm pre-pass (native graft_l2norm), exploded per element.
-    // Per-row IEEE arithmetic (square-sum fold, sqrt, divide) is exact on
-    // both engines; rounded to 6 dp to match house style for vector math.
-    "emb_normalize" -> ((s, dir) =>
-      Similarity.normalizeL2(T(s, dir, "embeddings"))
-        .select(col("vec_id"), posexplode(col("unit")))
-        .select(col("vec_id"), col("pos").cast("long").as("i"),
-          round(col("col"), 6).as("x"))
-        .orderBy("vec_id", "i")),
-
     // ---- LLM-data-pipeline: text analysis ----
 
     // Per-doc top-5 TF-IDF terms: (doc,term) tf shuffle + term df shuffle
@@ -1838,72 +1832,6 @@ object SparkEntry {
       Skew.keyProfile(T(s, dir, "orders"), "o_custkey", 10)
         .orderBy("rank")),
 
-    // Per-dimension z-score standardization of the embedding corpus
-    // (flattened rows; DECIMAL two-pass moments per dim).
-    "emb_standardize" -> ((s, dir) =>
-      Similarity.standardize(T(s, dir, "embeddings"))
-        .orderBy("vec_id", "dim")),
-
-    // One Lloyd k-means step (k=4, first-k seeds): DECIMAL-exact
-    // distances, argmin assignment, recomputed per-dim centroid means.
-    "emb_kmeans_iter" -> ((s, dir) =>
-      Similarity.kmeansIterate(T(s, dir, "embeddings"), 4)
-        .orderBy("cluster_id", "dim")),
-
-    // Centroid-based silhouette per vector (k=8 coarse clusters): a =
-    // own-centroid distance, b = nearest other centroid, s=(b-a)/max —
-    // the O(N*k) cluster-quality diagnostic.
-    "emb_silhouette" -> ((s, dir) =>
-      Similarity.silhouette(T(s, dir, "embeddings"), 8)
-        .orderBy("vec_id")),
-
-    // Supervised separability per LABEL: mean centroid margin + nearest-
-    // centroid accuracy — names exactly which class collapses into which
-    // (the silhouette question with classes given).
-    "emb_label_margin" -> ((s, dir) =>
-      Similarity.labelMargin(T(s, dir, "embeddings"))
-        .orderBy("label")),
-
-    // One spherical (cosine) k-means step (k=4, first-k seeds): argmax
-    // cosine assignment, L2-normalized mean centroids — the text-
-    // embedding variant beside the L2 Lloyd step.
-    "emb_kmeans_cosine" -> ((s, dir) =>
-      Similarity.kmeansCosineIterate(T(s, dir, "embeddings"), 4)
-        .orderBy("cluster_id", "dim")),
-
-    // Inertia (elbow) curve over k in {2,4,8}: total/mean
-    // within-cluster squared distance per candidate k — the
-    // choose-k-before-you-cluster pre-pass.
-    "emb_inertia" -> ((s, dir) =>
-      Similarity.inertiaCurve(T(s, dir, "embeddings"), Seq(2, 4, 8))
-        .orderBy("k")),
-
-    // External clustering quality: per-cluster majority ground-truth
-    // label and purity over the k=8 nearest-seed assignment — "do the
-    // geometric clusters recover the labels".
-    "emb_cluster_purity" -> ((s, dir) =>
-      Similarity.clusterPurity(T(s, dir, "embeddings"), 8)
-        .orderBy("cluster_id")),
-
-    // Linear CKA between the even-id vectors and their id+1 partners —
-    // the "same representation?" score for encoder swaps, from three
-    // covariance-Frobenius aggregates.
-    "emb_cka" -> ((s, dir) => {
-      val e = T(s, dir, "embeddings")
-      val a = e.filter(col("vec_id") % 2 === 0)
-        .select(col("vec_id"), col("embedding").as("x"))
-      val b = e.select((col("vec_id") - 1).as("vec_id"),
-        col("embedding").as("y"))
-      Similarity.linearCka(a.join(b, "vec_id"), "x", "y")
-    }),
-
-    // Product-quantization codes (IVF-PQ's compression leg): 64 dims ->
-    // 4 subspaces of 16, each assigned to its nearest of 4 deterministic
-    // sub-centroids; a vector serves ANN from 4 small ints.
-    "emb_pq" -> ((s, dir) =>
-      Similarity.productQuantize(T(s, dir, "embeddings"), 16, 4)
-        .orderBy("vec_id", "subspace")),
-
     // ADC serving over the PQ codes: queries (vec_id < 8) ranked by the
     // sum of per-subspace code distances — the corpus is scanned as
     // 4 ints/vector, never as vectors.
@@ -1912,123 +1840,6 @@ object SparkEntry {
       Similarity.annAdcTopK(emb, emb.filter(col("vec_id") < 8), 5, 16, 4)
         .orderBy("query_id", "rank")
     }),
-
-    // Per-cluster distance-percentile outlier gate: vectors in their own
-    // cluster's top-decile distance tail — the embedding-space quality
-    // filter (mislabeled / out-of-domain suspects).
-    "emb_outlier" -> ((s, dir) =>
-      Similarity.embeddingOutliers(T(s, dir, "embeddings"), 8, 0.9)
-        .orderBy("vec_id")),
-
-    // Exact 64x64 covariance matrix of the embedding space (PCA/whitening
-    // input): row-local outer products -> d^2-key aggregate with map-side
-    // combine; no self-join, no N-proportional shuffle.
-    "emb_covariance" -> ((s, dir) =>
-      embCov(s, dir).orderBy("i", "j")),
-
-    // Effective rank trace(C)²/‖C‖²_F — "how many dimensions are in
-    // use", no eigendecomposition (anisotropy-collapse alarm).
-    "emb_effective_rank" -> ((s, dir) =>
-      Similarity.effectiveRank(T(s, dir, "embeddings"),
-        precomputedCov = Some(embCov(s, dir)))),
-
-    // TwoNN intrinsic dimension: d̂ = n / Σ ln(r₂/r₁) over each vector's
-    // two nearest neighbors — exact N² baseline (ann_knn_graph
-    // discipline: NOT in the scale gate; ANN candidates swap in at 100 TB).
-    "emb_intrinsic_dim" -> ((s, dir) => twoNNExact(s, dir)),
-
-    // The registered 100 TB swap for emb_intrinsic_dim: the IDENTICAL
-    // rank→μ→MLE tail fed from SRP bucket-mate candidates (linear in the
-    // candidate list) instead of the N² all-pairs join. This, not the
-    // brute baseline, is the form in the scale gate. srpAutoPlanes
-    // planes (4 at the 500-vector fixture scale) × 8 tables: TwoNN only
-    // needs each point's 2-NN, so this point spends
-    // ~¼ of the all-pairs dot products for a d̂ within a few percent of
-    // exact (the agree row below measures it).
-    "emb_intrinsic_dim_ann" -> ((s, dir) => twoNNAnn(s, dir)),
-
-    // Estimator agreement: d̂ from the exact baseline and from the ANN
-    // candidate feed side by side (|Δ| on the two 6-dp estimates) — the
-    // measured claim that the scale path estimates the same quantity.
-    "emb_intrinsic_dim_agree" -> ((s, dir) => {
-      val ex = twoNNExact(s, dir)
-        .select(col("n_points").as("n_exact"), col("id_twonn").as("d_exact"))
-      val an = twoNNAnn(s, dir)
-        .select(col("n_points").as("n_ann"), col("id_twonn").as("d_ann"))
-      // two single-row aggregates — the broadcast-scalar crossJoin shape
-      ex.crossJoin(an)
-        .select(col("n_exact"), col("n_ann"), col("d_exact"), col("d_ann"),
-          round(abs(col("d_ann") - col("d_exact")), 6).as("abs_diff"))
-    }),
-
-    // JL distortion audit of the ±1 signed projection: projected vs
-    // original squared distance (÷ outDims) over the id-adjacent pair
-    // chain — all-integer distances, mean ≈ 1 is the JL promise.
-    "emb_jl_distortion" -> ((s, dir) =>
-      Similarity.jlDistortion(T(s, dir, "embeddings"), dim = 64, outDims = 8)),
-
-    // Greedy k-center (farthest-point) seeding, k = 4: deterministic
-    // spread-out kmeans++ stand-in; per round one broadcast seed join +
-    // scalar max, 9-dp-quantized argmax ties to lowest id.
-    "emb_kcenter" -> ((s, dir) =>
-      Similarity.kCenterSeeds(T(s, dir, "embeddings"), 4).orderBy("round")),
-
-    // λ₁/λ₂ by Hotelling deflation: one-dominant-direction vs
-    // no-preferred-axis, the top of the spectrum effectiveRank averages.
-    "emb_eigengap" -> ((s, dir) =>
-      Similarity.eigenGap(T(s, dir, "embeddings"),
-        precomputedCov = Some(embCov(s, dir)))),
-
-    // 1-bit (sign) binary quantization retrieval quality: Hamming top-10
-    // vs the exact cosine ranking — the 64×-compression recall question.
-    // Codes split into two 32-bit halves (bit 63 via single-long shifts
-    // overflows DuckDB's checked `<<`).
-    "emb_binary_recall" -> ((s, dir) => {
-      val emb = T(s, dir, "embeddings")
-      val codes = Similarity.binaryCodes(emb)
-      val q = codes.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("query_id"), col("lo").as("qlo"),
-          col("hi").as("qhi"))
-      val scored = codes
-        .select(col("vec_id").as("neighbor_id"), col("lo").as("clo"),
-          col("hi").as("chi"))
-        .join(broadcast(q), col("query_id") =!= col("neighbor_id"))
-        .select(col("query_id"), col("neighbor_id"),
-          (expr("bit_count(qlo ^ clo)") + expr("bit_count(qhi ^ chi)"))
-            .as("ham"))
-      val w = Window.partitionBy(col("query_id"))
-        .orderBy(col("ham").asc, col("neighbor_id").asc)
-      val approx = scored.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 10)
-      Similarity.recallAtK(approx,
-        Similarity.bruteForceTopK(emb, emb.filter(col("vec_id") < 8), 10))
-    }),
-
-    // Matryoshka truncation quality: recall@10 of prefix-dim cosine
-    // retrieval against the full-dim exact ranking (MRL deployment
-    // question: how many dims can the index drop?).
-    "emb_matryoshka" -> ((s, dir) => {
-      val emb = T(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") < 8)
-      val exact = Similarity.bruteForceTopK(emb, q, 10)
-      def trunc(df: org.apache.spark.sql.DataFrame, p: Int) =
-        df.select(col("vec_id"),
-          slice(col("embedding"), 1, p).as("embedding"))
-      Seq(32, 16, 8).map { p =>
-        Similarity.recallAtK(
-            Similarity.bruteForceTopK(trunc(emb, p), trunc(q, p), 10),
-            exact)
-          .select(lit(p.toLong).as("prefix_dim"), col("n_queries"),
-            col("mean_recall"))
-      }.reduce(_ unionByName _).orderBy("prefix_dim")
-    }),
-
-    // Leading principal direction via 3 power iterations on the
-    // covariance matrix (9-dp-quantized trajectory, unrolled CTE oracle).
-    "emb_pca_power" -> ((s, dir) =>
-      Similarity.pcaPowerIteration(T(s, dir, "embeddings"), 3,
-          cov = Some(embCov(s, dir)))
-        .orderBy("i")),
 
     // PageRank (3 power iterations, d=0.85) over the event-type
     // transition graph — DECIMAL in-sums + dangling mass each round, the
@@ -2695,16 +2506,6 @@ object SparkEntry {
       operators.ML.knnAccuracy(T(s, dir, "embeddings"), 5, 10)
         .orderBy("label")),
 
-    // Centroid drift between the even and odd vec_id cohorts: cosine +
-    // L2 between per-dim mean vectors — the cheap embedding-distribution
-    // monitor (two d-key aggregates, one d-row join).
-    "emb_drift" -> ((s, dir) => {
-      val e = T(s, dir, "embeddings")
-      operators.Similarity.centroidDrift(
-        e.filter(col("vec_id") % 2 === 0),
-        e.filter(col("vec_id") % 2 === 1))
-    }),
-
     // Watermark late-data cost report: replay under a pseudo-shuffled
     // arrival order (Knuth-hash of event_id — bijective mod 2^31, so
     // the replay is deterministic and tie-free) and count what a
@@ -2771,33 +2572,6 @@ object SparkEntry {
     // containment Jaccard |S_src|/|S_union|.
     "sketch_minhash_union" -> ((s, dir) =>
       Sketch.minhashUnionCard(T(s, dir, "documents")).orderBy("source")),
-
-    // Embedding L2-norm histogram — the encoder-health monitor
-    // (collapsed or bimodal norms read off the 10-bin card).
-    "emb_norm_hist" -> ((s, dir) =>
-      operators.Similarity.normHistogram(T(s, dir, "embeddings"), 10)
-        .orderBy("bin")),
-
-    // Isotropy card: exact mean pairwise cosine from the sum-vector
-    // identity ‖Σv̂‖² − Σ‖v̂‖² — the all-pairs average with NO pair term
-    // (near 1 = embedding collapse, cosine retrieval stops working).
-    "emb_isotropy" -> ((s, dir) =>
-      operators.Similarity.isotropy(T(s, dir, "embeddings"))),
-
-    // All-but-the-top correction: subtract the mean and the top
-    // principal direction (emb_pca_power's component) — mean and PC
-    // pack into ONE broadcast row; the corpus never joins itself.
-    "emb_abtt" -> ((s, dir) =>
-      operators.Similarity.allButTheTop(T(s, dir, "embeddings"),
-          cov = Some(embCov(s, dir)))
-        .orderBy("vec_id", "dim")),
-
-    // PQ codebook-quality card: per subspace, codes used + mean/max
-    // assignment distortion over the emb_pq code table.
-    "emb_pq_distortion" -> ((s, dir) =>
-      operators.Similarity.pqDistortion(
-        operators.Similarity.productQuantize(T(s, dir, "embeddings"), 16, 4))
-        .orderBy("subspace")),
 
     // Per-event-type mean global quantile of `value` (midrank ECDF, the
     // quantile-normalization substrate) — stochastic-dominance-at-a-
@@ -3980,14 +3754,6 @@ object SparkEntry {
       Sampling.kfoldBalance(T(s, dir, "documents"), "doc_id", "lang", 5)
         .orderBy("fold", "label")),
 
-    // Random-signs projection on int8 codes: exact integer dots, 8 longs
-    // per vector — the JL-style distance sketch. NULL-quantized rows
-    // (zero/empty vectors) are dropped on both sides.
-    "emb_project" -> ((s, dir) =>
-      Similarity.signedProjection(T(s, dir, "embeddings"), dim = 64, outDims = 8)
-        .na.drop(Seq("proj_0"))
-        .orderBy("vec_id")),
-
     // Dynamic partition pruning: the fact is partitioned on the join key,
     // the filter lives on the DIM side only — static pruning can't fire,
     // so the scan's partition list must come from the broadcast result at
@@ -4181,7 +3947,7 @@ object SparkEntry {
     TextAnalysis.stopwords.map(w => s"'$w'").mkString("[", ", ", "]")
 
   /** Shared oracle fragment: embeddings as DOUBLE lists. */
-  private val embCte =
+  private[graft] val embCte =
     "SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings"
 
   /** Shared nearest-seed assignment CTE chain — mirrors
@@ -4189,7 +3955,7 @@ object SparkEntry {
     * relations `e` (vec_id, v), `f` (flattened), and `a` (vec_id, cid).
     * Used by the kmeans / SemDeDup / hard-negative oracles.
     */
-  private def assignCtes(k: Int): String =
+  private[graft] def assignCtes(k: Int): String =
     s"""e AS ($embCte),
        |f AS (SELECT vec_id, CAST(generate_subscripts(v, 1) AS BIGINT) AS dim,
        |        unnest(v) AS x FROM e),
@@ -4440,7 +4206,7 @@ object SparkEntry {
   /** Exact all-pairs cosine top-10 for the < 8 query vectors — shared by
     * ann_brute_topk and as the truth side of ann_recall.
     */
-  private val bruteAnnOracle: String =
+  private[graft] val bruteAnnOracle: String =
     """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
       |           FROM embeddings),
       |q AS (SELECT vec_id AS query_id, v AS qe FROM e WHERE vec_id < 8),
@@ -4543,65 +4309,13 @@ object SparkEntry {
       s"SELECT vec_id, v, $t AS tbl, $bucket AS bucket FROM e, np"
     }.mkString("\nUNION ALL\n")
 
-  private def srpSelfCandCte(nTables: Int): String =
+  private[graft] def srpSelfCandCte(nTables: Int): String =
     s"""$srpNpCte,
        |b AS (${srpBucketTablesDynSql(64, nTables)}),
        |cand AS (SELECT q.vec_id AS id, c.vec_id AS nid
        |         FROM b q JOIN b c ON q.tbl = c.tbl AND q.bucket = c.bucket
        |         WHERE q.vec_id <> c.vec_id
        |         GROUP BY 1, 2)""".stripMargin
-
-  /** TwoNN exact-baseline oracle (shared with the agreement row). */
-  private val twoNNExactOracle: String =
-    s"""WITH e AS ($embCte),
-       |n AS (SELECT vec_id, v, list_dot_product(v, v) AS n2 FROM e),
-       |p AS (SELECT a.vec_id AS id, b.vec_id AS nid,
-       |        a.n2 + b.n2 - 2.0 * list_dot_product(a.v, b.v) AS d2
-       |      FROM n a, n b WHERE a.vec_id <> b.vec_id),
-       |r AS (SELECT id, d2, row_number() OVER (PARTITION BY id
-       |        ORDER BY d2, nid) AS rk
-       |      FROM p QUALIFY rk <= 2),
-       |g AS (SELECT id, min(CASE WHEN rk = 1 THEN d2 END) AS d1,
-       |        min(CASE WHEN rk = 2 THEN d2 END) AS dn
-       |      FROM r GROUP BY 1),
-       |f AS (SELECT CAST(round(0.5 * ln(dn / d1), 9) AS DECIMAL(18,9))
-       |        AS t
-       |      FROM g WHERE d1 > 0 AND dn IS NOT NULL)
-       |SELECT CAST(count(*) AS BIGINT) AS n_points,
-       |  CAST(round(sum(t), 6) AS DOUBLE) AS sum_log_mu,
-       |  CAST(round((CAST(count(*) AS DOUBLE)
-       |    / nullif(CAST(sum(t) AS DOUBLE), 0.0)
-       |   ) * 1000000) / 1000000 AS DOUBLE) AS id_twonn
-       |FROM f""".stripMargin
-
-  /** ANN-fed TwoNN oracle: SRP self-candidates → per-pair squared-L2 via
-    * the same dot identity (per-pair dots — identical accumulation order
-    * to the fused graft_dot) → the IDENTICAL rank→μ→MLE tail as the
-    * exact baseline.
-    */
-  private val twoNNAnnOracle: String =
-    s"""WITH e AS ($embCte),
-       |${srpSelfCandCte(8)},
-       |p AS (SELECT cand.id, cand.nid,
-       |        list_dot_product(qe.v, qe.v) + list_dot_product(ce.v, ce.v)
-       |          - 2.0 * list_dot_product(qe.v, ce.v) AS d2
-       |      FROM cand JOIN e qe ON qe.vec_id = cand.id
-       |                JOIN e ce ON ce.vec_id = cand.nid),
-       |r AS (SELECT id, d2, nid, row_number() OVER (PARTITION BY id
-       |        ORDER BY d2, nid) AS rk
-       |      FROM p QUALIFY rk <= 2),
-       |g AS (SELECT id, min(CASE WHEN rk = 1 THEN d2 END) AS d1,
-       |        min(CASE WHEN rk = 2 THEN d2 END) AS dn
-       |      FROM r GROUP BY 1),
-       |f AS (SELECT CAST(round(0.5 * ln(dn / d1), 9) AS DECIMAL(18,9))
-       |        AS t
-       |      FROM g WHERE d1 > 0 AND dn IS NOT NULL)
-       |SELECT CAST(count(*) AS BIGINT) AS n_points,
-       |  CAST(round(sum(t), 6) AS DOUBLE) AS sum_log_mu,
-       |  CAST(round((CAST(count(*) AS DOUBLE)
-       |    / nullif(CAST(sum(t) AS DOUBLE), 0.0)
-       |   ) * 1000000) / 1000000 AS DOUBLE) AS id_twonn
-       |FROM f""".stripMargin
 
   /** Exact mutual-5-NN-graph oracle (shared with the agreement row). */
   private val knnGraphExactOracle: String =
@@ -4665,7 +4379,7 @@ object SparkEntry {
        |ORDER BY id_a, id_b""".stripMargin
   }
 
-  def oracleSql: Map[String, String] = Map(
+  private def remainingOracleSql: Map[String, String] = Map(
 
     "q1_pricing" ->
       """SELECT l_returnflag, l_linestatus,
@@ -6312,78 +6026,6 @@ object SparkEntry {
          |    / 1000000 AS mean_recall
          |FROM m""".stripMargin,
 
-    // Binary-quantization recall: the same two-half sign codes, Hamming
-    // rank, recall vs the exact cosine pairs.
-    "emb_binary_recall" ->
-      s"""WITH e AS ($embCte),
-         |fl AS (SELECT vec_id, unnest(v) AS x,
-         |        generate_subscripts(v, 1) - 1 AS i FROM e),
-         |codes AS (SELECT vec_id,
-         |        bit_or(CASE WHEN x > 0 AND i < 32
-         |          THEN CAST(1 AS BIGINT) << CAST(i AS INTEGER)
-         |          ELSE CAST(0 AS BIGINT) END) AS lo,
-         |        bit_or(CASE WHEN x > 0 AND i >= 32
-         |          THEN CAST(1 AS BIGINT) << CAST(i - 32 AS INTEGER)
-         |          ELSE CAST(0 AS BIGINT) END) AS hi
-         |      FROM fl GROUP BY 1),
-         |q AS (SELECT vec_id AS query_id, lo AS qlo, hi AS qhi
-         |      FROM codes WHERE vec_id < 8),
-         |appx AS (SELECT query_id, neighbor_id FROM (
-         |      SELECT query_id, c.vec_id AS neighbor_id,
-         |        bit_count(xor(qlo, c.lo)) + bit_count(xor(qhi, c.hi))
-         |          AS ham
-         |      FROM q, codes c WHERE c.vec_id <> query_id)
-         |      QUALIFY row_number() OVER (PARTITION BY query_id
-         |        ORDER BY ham, neighbor_id) <= 10),
-         |b AS (SELECT query_id, neighbor_id FROM ($bruteAnnOracle)),
-         |m AS (SELECT b.query_id, count(appx.neighbor_id) AS hits,
-         |        count(*) AS k
-         |      FROM b LEFT JOIN appx ON appx.query_id = b.query_id
-         |        AND appx.neighbor_id = b.neighbor_id
-         |      GROUP BY 1)
-         |SELECT count(*) AS n_queries,
-         |  round((CAST(sum(CAST(round((CAST(hits AS DOUBLE) / k) * 1000000)
-         |    / 1000000 AS DECIMAL(18,6))) AS DOUBLE) / count(*)) * 1000000)
-         |    / 1000000 AS mean_recall
-         |FROM m""".stripMargin,
-
-    // Matryoshka: the brute oracle re-ranked on list prefixes, each
-    // prefix's pairs recall-scored against the full-dim exact pairs.
-    "emb_matryoshka" -> {
-      def one(p: Int) =
-        s"""SELECT CAST($p AS BIGINT) AS prefix_dim,
-           |  CAST(count(*) AS BIGINT) AS n_queries,
-           |  round((CAST(sum(CAST(round((CAST(hits AS DOUBLE) / k) * 1000000)
-           |    / 1000000 AS DECIMAL(18,6))) AS DOUBLE) / count(*)) * 1000000)
-         |    / 1000000 AS mean_recall
-           |FROM (SELECT b.query_id, count(t.neighbor_id) AS hits,
-           |        count(*) AS k
-           |      FROM b LEFT JOIN (
-           |        SELECT query_id, neighbor_id FROM (
-           |          SELECT query_id, c.vec_id AS neighbor_id,
-           |            list_cosine_similarity(qe[1:$p], c.v[1:$p]) AS cos
-           |          FROM q, e c WHERE c.vec_id <> query_id)
-           |        QUALIFY row_number() OVER (PARTITION BY query_id
-           |          ORDER BY cos DESC, neighbor_id) <= 10) t
-           |        ON t.query_id = b.query_id
-           |          AND t.neighbor_id = b.neighbor_id
-           |      GROUP BY 1)""".stripMargin
-      s"""WITH e AS (SELECT vec_id,
-         |        list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-         |      FROM embeddings),
-         |q AS (SELECT vec_id AS query_id, v AS qe FROM e
-         |      WHERE vec_id < 8),
-         |b AS (SELECT query_id, neighbor_id FROM (
-         |      SELECT query_id, c.vec_id AS neighbor_id,
-         |        list_cosine_similarity(qe, c.v) AS cos
-         |      FROM q, e c WHERE c.vec_id <> query_id)
-         |      QUALIFY row_number() OVER (PARTITION BY query_id
-         |        ORDER BY cos DESC, neighbor_id) <= 10)
-         |SELECT * FROM (${Seq(32, 16, 8).map(one).mkString(
-            "\nUNION ALL\n")})
-         |ORDER BY prefix_dim""".stripMargin
-    },
-
     "text_quality" ->
       s"""WITH base AS ($docToks)
          |SELECT doc_id, CAST(length(text) AS BIGINT) AS n_chars,
@@ -6571,27 +6213,6 @@ object SparkEntry {
         |         / count(*)
         |  FROM orders o2 WHERE o2.o_custkey = o.o_custkey)
         |ORDER BY o_orderkey""".stripMargin,
-
-    "emb_quantize" ->
-      s"""WITH e AS ($embCte),
-         |s AS (SELECT vec_id, v,
-         |        list_aggregate(list_transform(v, x -> abs(x)), 'max') AS scale
-         |      FROM e)
-         |SELECT vec_id, round(scale, 6) AS scale, CAST(i - 1 AS BIGINT) AS i,
-         |  CAST(floor(v[i] * CAST(127.0 AS DOUBLE) / scale + CAST(0.5 AS DOUBLE)) AS BIGINT) AS q
-         |FROM s CROSS JOIN range(1, 65) t(i)
-         |WHERE scale > 0
-         |ORDER BY vec_id, i""".stripMargin,
-
-    // Per-row IEEE math end-to-end (square-sum fold ≡ list_dot_product,
-    // correctly-rounded sqrt, exact divide); 6-dp rounding is house style.
-    "emb_normalize" ->
-      s"""WITH e AS ($embCte),
-         |n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM e)
-         |SELECT vec_id, CAST(i - 1 AS BIGINT) AS i, round((v[i] / nrm) * 1000000) / 1000000 AS x
-         |FROM n CROSS JOIN range(1, 65) t(i)
-         |WHERE nrm > 0
-         |ORDER BY vec_id, i""".stripMargin,
 
     "text_tfidf" ->
       s"""WITH base AS ($docToks),
@@ -7001,61 +6622,6 @@ object SparkEntry {
         |            WHERE b.t > a.t))
         |SELECT * FROM p0 UNION ALL SELECT * FROM p1
         |ORDER BY stage_idx""".stripMargin,
-
-    // Norm histogram: DECIMAL-exact squared sums, one rounded sqrt,
-    // PSI binning arithmetic.
-    "emb_norm_hist" ->
-      """WITH f AS (SELECT vec_id,
-        |        CAST(unnest(embedding) AS DOUBLE) AS x FROM embeddings),
-        |n AS (SELECT vec_id, round(sqrt(CAST(sum(CAST(round(x * x, 6)
-        |          AS DECIMAL(18,6))) AS DOUBLE)) * 1000000) / 1000000 AS nrm
-        |      FROM f GROUP BY 1),
-        |b AS (SELECT CAST(min(nrm) AS DOUBLE) AS lo,
-        |        CAST(max(nrm) AS DOUBLE) AS hi FROM n),
-        |bb AS (SELECT CASE WHEN hi = lo THEN 0 ELSE
-        |        CAST(least(greatest(floor((nrm - lo) / ((hi - lo) / 10)), 0),
-        |          9) AS INT) END AS bin, nrm FROM n CROSS JOIN b)
-        |SELECT bin, count(*) AS n, min(nrm) AS min_norm,
-        |  max(nrm) AS max_norm
-        |FROM bb GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // Isotropy: unit components DECIMAL-routed to 6 dp, so per-dim sums
-    // and the self term are exact and the sum-vector identity holds
-    // EXACTLY on the quantized vectors; only su^2 rides a routed double.
-    "emb_isotropy" ->
-      """WITH f AS (SELECT vec_id,
-        |        CAST(generate_subscripts(embedding, 1) AS BIGINT) AS dim,
-        |        CAST(unnest(embedding) AS DOUBLE) AS x FROM embeddings),
-        |n AS (SELECT vec_id, round(sqrt(CAST(sum(CAST(round(x * x, 6)
-        |          AS DECIMAL(18,6))) AS DOUBLE)) * 1000000) / 1000000 AS nrm
-        |      FROM f GROUP BY 1 HAVING round(sqrt(CAST(sum(CAST(round(x * x, 6)
-        |          AS DECIMAL(18,6))) AS DOUBLE)) * 1000000) / 1000000 > 0),
-        |u AS (SELECT f.vec_id, f.dim,
-        |        CAST(round((f.x / n.nrm) * 1000000) / 1000000
-        |          AS DECIMAL(18,6)) AS u
-        |      FROM f JOIN n ON n.vec_id = f.vec_id),
-        |d AS (SELECT dim, CAST(sum(u) AS DECIMAL(38,6)) AS su,
-        |        CAST(sum(CAST(u * u AS DECIMAL(38,12))) AS DECIMAL(38,12))
-        |          AS self_d
-        |      FROM u GROUP BY 1),
-        |t AS (SELECT count(*) AS n_dims,
-        |        CAST(sum(CAST(round((CAST(su AS DOUBLE)
-        |          * CAST(su AS DOUBLE)) * 1000000) / 1000000
-        |          AS DECIMAL(18,6))) AS DECIMAL(38,6)) AS ss,
-        |        CAST(sum(self_d) AS DECIMAL(38,12)) AS self_sum
-        |      FROM d),
-        |c AS (SELECT count(*) AS n_vectors FROM n)
-        |SELECT n_vectors, n_dims,
-        |  CAST(round((CAST(ss AS DOUBLE)) * 1000000) / 1000000
-        |    AS DOUBLE) AS norm_sum_sq,
-        |  CAST(round((CAST(self_sum AS DOUBLE)) * 1000000) / 1000000
-        |    AS DOUBLE) AS self_cos_sum,
-        |  CAST(round((CASE WHEN n_vectors > 1 THEN
-        |      (CAST(ss AS DOUBLE) - CAST(self_sum AS DOUBLE))
-        |      / (CAST(n_vectors AS DOUBLE) * CAST(n_vectors - 1 AS DOUBLE))
-        |    ELSE NULL END) * 1000000) / 1000000 AS DOUBLE)
-        |    AS mean_pairwise_cos
-        |FROM c CROSS JOIN t""".stripMargin,
 
     // Peak concurrency: ana_interval_union's interval arithmetic, ±1
     // deltas netted per second, ONE global running-sum window (sf-scale
@@ -7650,202 +7216,6 @@ object SparkEntry {
         |  n_rows, n_keys
         |FROM top CROSS JOIN tot ORDER BY rank""".stripMargin,
 
-    // Per-dim DECIMAL two-pass moments, same recipe as ana_outliers.
-    "emb_standardize" ->
-      s"""WITH e AS ($embCte),
-         |f AS (SELECT vec_id, CAST(generate_subscripts(v, 1) AS BIGINT) AS dim,
-         |        unnest(v) AS x FROM e),
-         |m AS (SELECT dim, count(*) AS n,
-         |        CAST(sum(CAST(round(x, 6) AS DECIMAL(18,6))) AS DOUBLE)
-         |          / count(*) AS mean
-         |      FROM f GROUP BY 1),
-         |s AS (SELECT f.dim, any_value(m.mean) AS mean, any_value(m.n) AS n,
-         |        sum(CAST(round((f.x - m.mean) * (f.x - m.mean), 6)
-         |          AS DECIMAL(18,6))) AS ss
-         |      FROM f JOIN m USING (dim) GROUP BY 1),
-         |st AS (SELECT dim, mean, sqrt(CAST(ss AS DOUBLE) / (n - 1)) AS sd
-         |       FROM s)
-         |SELECT f.vec_id, f.dim, round(((f.x - st.mean) / st.sd) * 1000000) / 1000000 AS z
-         |FROM f JOIN st USING (dim) ORDER BY vec_id, dim""".stripMargin,
-
-    // Spherical k-means mirror: argmax-cosine assignment (ties -> lower
-    // cid), 6-dp mean centroids normalized by the norm of the ROUNDED
-    // means; zero-norm mean -> NULL centroid. The assignment cosine is
-    // 6-dp-rounded on BOTH sides (membership-deciding values are always
-    // Elbow curve: per-k nearest-seed assignment (the assignCtes
-    // algebra with suffixed CTE names, keeping the winning d2), exact
-    // DECIMAL inertia sums.
-    "emb_inertia" -> {
-      val perK = Seq(2, 4, 8).map { k =>
-        s"""s$k AS (SELECT vec_id FROM e ORDER BY vec_id LIMIT $k),
-           |c$k AS (SELECT f.vec_id AS cid, f.dim, f.x AS cx
-           |      FROM f JOIN s$k USING (vec_id)),
-           |d$k AS (SELECT f.vec_id, c$k.cid,
-           |        sum(CAST(round((f.x - c$k.cx) * (f.x - c$k.cx), 6)
-           |          AS DECIMAL(18,6))) AS d2
-           |      FROM f JOIN c$k ON c$k.dim = f.dim GROUP BY 1, 2),
-           |a$k AS (SELECT vec_id, d2 FROM
-           |        (SELECT vec_id, d2, row_number() OVER (PARTITION BY vec_id
-           |           ORDER BY d2, cid) AS rn FROM d$k) WHERE rn = 1),
-           |i$k AS (SELECT CAST($k AS BIGINT) AS k, count(*) AS n_vectors,
-           |        round(CAST(sum(d2) AS DOUBLE), 6) AS inertia,
-           |        round((CAST(sum(d2) AS DOUBLE) / count(*)) * 1000000) / 1000000 AS mean_d2
-           |      FROM a$k)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH e AS ($embCte),
-         |f AS (SELECT vec_id, CAST(generate_subscripts(v, 1) AS BIGINT)
-         |        AS dim, unnest(v) AS x FROM e),
-         |$perK
-         |SELECT * FROM i2 UNION ALL SELECT * FROM i4
-         |UNION ALL SELECT * FROM i8 ORDER BY k""".stripMargin
-    },
-
-    // Purity over the shared nearest-seed assignment; majority vote by
-    // (count DESC, label ASC) row_number — the Spark window tie-break.
-    "emb_cluster_purity" ->
-      s"""WITH ${assignCtes(8)},
-         |al AS (SELECT a.vec_id, a.cid, e2.label AS lbl
-         |      FROM a JOIN embeddings e2 USING (vec_id)),
-         |mem AS (SELECT cid, count(*) AS n_members FROM al GROUP BY 1),
-         |v AS (SELECT cid, lbl, count(*) AS n FROM al
-         |      WHERE lbl IS NOT NULL GROUP BY 1, 2),
-         |top AS (SELECT cid, lbl AS majority_label, n AS n_majority FROM (
-         |      SELECT cid, lbl, n, row_number() OVER (PARTITION BY cid
-         |        ORDER BY n DESC, lbl) AS rn FROM v) WHERE rn = 1)
-         |SELECT mem.cid AS cluster_id, n_members, majority_label,
-         |  coalesce(n_majority, 0) AS n_majority,
-         |  CAST(round((CAST(coalesce(n_majority, 0) AS DOUBLE)
-         |    / CAST(n_members AS DOUBLE)) * 1000000) / 1000000 AS DOUBLE)
-         |    AS purity
-         |FROM mem LEFT JOIN top USING (cid) ORDER BY cluster_id""".stripMargin,
-
-    // CKA: three cov-Frobenius chains on the emb_covariance quantized
-    // recipe (1e9 products, BIGINT/HUGEINT exact sums, 6-dp cells
-    // re-quantized at 1e6 for the square sums).
-    "emb_cka" -> {
-      def frobCtes(tag: String, aF: String, bF: String,
-                   aS: String, bS: String) =
-        s"""p$tag AS (SELECT a.i AS i, b.i AS j,
-           |        sum(CAST(round(a.x * b.x * 1e9, 0) AS BIGINT)) AS sp,
-           |        count(*) AS n
-           |      FROM $aF a JOIN $bF b ON a.pid = b.pid GROUP BY 1, 2),
-           |g$tag AS (SELECT round((CAST(sp AS DOUBLE) / 1e9 / n
-           |          - (CAST(sa.s AS DOUBLE) / n)
-           |          * (CAST(sb.s AS DOUBLE) / n)) * 1000000) / 1000000
-           |          + 0.0 AS g
-           |      FROM p$tag JOIN $aS sa ON sa.i = p$tag.i
-           |      JOIN $bS sb ON sb.i = p$tag.j),
-           |f$tag AS (SELECT CAST(sum(CAST(CAST(round(g * 1e6, 0) AS BIGINT)
-           |          AS HUGEINT) * CAST(round(g * 1e6, 0) AS BIGINT))
-           |        AS DOUBLE) / 1e12 AS f2 FROM g$tag)""".stripMargin
-      s"""WITH e AS ($embCte),
-         |pr AS (SELECT a.vec_id AS pid, a.v AS xv, b.v AS yv
-         |      FROM e a JOIN e b ON b.vec_id = a.vec_id + 1
-         |      WHERE a.vec_id % 2 = 0),
-         |fx AS (SELECT pid, unnest(xv) AS x,
-         |        generate_subscripts(xv, 1) - 1 AS i FROM pr),
-         |fy AS (SELECT pid, unnest(yv) AS x,
-         |        generate_subscripts(yv, 1) - 1 AS i FROM pr),
-         |sx AS (SELECT i, sum(CAST(round(x, 9) AS DECIMAL(28,9))) AS s
-         |      FROM fx GROUP BY 1),
-         |sy AS (SELECT i, sum(CAST(round(x, 9) AS DECIMAL(28,9))) AS s
-         |      FROM fy GROUP BY 1),
-         |${frobCtes("xy", "fx", "fy", "sx", "sy")},
-         |${frobCtes("xx", "fx", "fx", "sx", "sx")},
-         |${frobCtes("yy", "fy", "fy", "sy", "sy")},
-         |np AS (SELECT count(*) AS n_pairs FROM pr)
-         |SELECT n_pairs,
-         |  CAST(round((sqrt(fxx.f2)) * 1000000) / 1000000 AS DOUBLE)
-         |    AS x_norm,
-         |  CAST(round((sqrt(fyy.f2)) * 1000000) / 1000000 AS DOUBLE)
-         |    AS y_norm,
-         |  CAST(round((fxy.f2
-         |    / nullif(sqrt(fxx.f2) * sqrt(fyy.f2), 0e0)
-         |   ) * 1000000) / 1000000 AS DOUBLE) AS cka
-         |FROM np CROSS JOIN fxy CROSS JOIN fxx CROSS JOIN fyy""".stripMargin
-    },
-
-    // quantized — a last-ulp engine disagreement would flip a cluster);
-    // NaN (zero-norm vector) maps to NULL to mirror graft_cosine, and
-    // NULLS LAST + the cid tie-break sends it to the lowest seed.
-    "emb_kmeans_cosine" ->
-      s"""WITH e AS ($embCte),
-         |f AS (SELECT vec_id, CAST(generate_subscripts(v, 1) AS BIGINT) AS dim,
-         |        unnest(v) AS x FROM e),
-         |seeds AS (SELECT vec_id AS cid, v AS sv FROM e ORDER BY vec_id LIMIT 4),
-         |sc AS (SELECT e.vec_id, s.cid,
-         |        CASE WHEN isnan(list_cosine_similarity(e.v, s.sv))
-         |          THEN NULL
-         |          ELSE round(list_cosine_similarity(e.v, s.sv), 6) END AS cos
-         |      FROM e CROSS JOIN seeds s),
-         |a AS (SELECT vec_id, cid FROM (SELECT vec_id, cid,
-         |        row_number() OVER (PARTITION BY vec_id
-         |          ORDER BY cos DESC NULLS LAST, cid) AS rn FROM sc)
-         |      WHERE rn = 1),
-         |mm AS (SELECT a.cid, f.dim, count(*) AS n_members,
-         |        round((CAST(sum(CAST(round(f.x, 6) AS DECIMAL(18,6)))
-         |          AS DOUBLE) / count(*)) * 1000000) / 1000000 AS m
-         |      FROM a JOIN f USING (vec_id) GROUP BY 1, 2),
-         |nn AS (SELECT cid, sqrt(CAST(sum(CAST(round(m * m, 6)
-         |          AS DECIMAL(18,6))) AS DOUBLE)) AS nrm
-         |      FROM mm GROUP BY 1)
-         |SELECT mm.cid AS cluster_id, mm.dim,
-         |  round((mm.m / nullif(nn.nrm, 0)) * 1000000) / 1000000 AS centroid, mm.n_members
-         |FROM mm JOIN nn USING (cid) ORDER BY cluster_id, dim""".stripMargin,
-
-    // PQ mirror: per-subspace argmin-L2 against the 4 lowest-id vectors'
-    // subvectors — same 6-dp DECIMAL distance quantization and lower-cid
-    // tie rule as every assignment in the library.
-    "emb_pq" ->
-      s"""WITH e AS ($embCte),
-         |f AS (SELECT vec_id, CAST(generate_subscripts(v, 1) AS BIGINT) AS dim,
-         |        unnest(v) AS x FROM e),
-         |ff AS (SELECT vec_id, dim,
-         |        CAST(floor((dim - 1) / 16) AS BIGINT) AS sub, x FROM f),
-         |seeds AS (SELECT vec_id FROM e ORDER BY vec_id LIMIT 4),
-         |cent AS (SELECT ff.vec_id AS cid, ff.dim, ff.x AS c
-         |      FROM ff JOIN seeds USING (vec_id)),
-         |d AS (SELECT ff.vec_id, ff.sub, cent.cid,
-         |        sum(CAST(round((ff.x - cent.c) * (ff.x - cent.c), 6)
-         |          AS DECIMAL(18,6))) AS d2
-         |      FROM ff JOIN cent USING (dim) GROUP BY 1, 2, 3),
-         |r AS (SELECT vec_id, sub, cid, d2,
-         |        row_number() OVER (PARTITION BY vec_id, sub
-         |          ORDER BY d2, cid) AS rn
-         |      FROM d)
-         |SELECT vec_id, sub AS subspace, cid AS code,
-         |  round(CAST(d2 AS DOUBLE), 6) AS distortion
-         |FROM r WHERE rn = 1 ORDER BY vec_id, subspace""".stripMargin,
-
-    // The emb_pq chain with a per-subspace codebook-quality aggregate on
-    // top — distortions 6-dp-quantized before the DECIMAL mean.
-    "emb_pq_distortion" ->
-      s"""WITH e AS ($embCte),
-         |f AS (SELECT vec_id, CAST(generate_subscripts(v, 1) AS BIGINT) AS dim,
-         |        unnest(v) AS x FROM e),
-         |ff AS (SELECT vec_id, dim,
-         |        CAST(floor((dim - 1) / 16) AS BIGINT) AS sub, x FROM f),
-         |seeds AS (SELECT vec_id FROM e ORDER BY vec_id LIMIT 4),
-         |cent AS (SELECT ff.vec_id AS cid, ff.dim, ff.x AS c
-         |      FROM ff JOIN seeds USING (vec_id)),
-         |d AS (SELECT ff.vec_id, ff.sub, cent.cid,
-         |        sum(CAST(round((ff.x - cent.c) * (ff.x - cent.c), 6)
-         |          AS DECIMAL(18,6))) AS d2
-         |      FROM ff JOIN cent USING (dim) GROUP BY 1, 2, 3),
-         |r AS (SELECT vec_id, sub, cid, d2,
-         |        row_number() OVER (PARTITION BY vec_id, sub
-         |          ORDER BY d2, cid) AS rn
-         |      FROM d),
-         |pq AS (SELECT vec_id, sub, cid,
-         |        round(CAST(d2 AS DOUBLE), 6) AS distortion
-         |      FROM r WHERE rn = 1)
-         |SELECT sub AS subspace, count(*) AS n,
-         |  count(DISTINCT cid) AS codes_used,
-         |  round((CAST(sum(CAST(distortion AS DECIMAL(28,6))) AS DOUBLE)
-         |    / count(*)) * 1000000) / 1000000 AS mean_distortion,
-         |  max(distortion) AS max_distortion
-         |FROM pq GROUP BY 1 ORDER BY 1""".stripMargin,
-
     // ADC top-k mirror: the emb_pq code chain, a (query, subspace, code)
     // distance table from the same sub-centroids, code-joined sums,
     // per-query rank.
@@ -7883,404 +7253,6 @@ object SparkEntry {
          |SELECT query_id, CAST(rn AS BIGINT) AS rank, neighbor_id,
          |  round(CAST(adc AS DOUBLE), 6) AS adc_d2
          |FROM rk WHERE rn <= 5 ORDER BY query_id, rank""".stripMargin,
-
-    // Outlier gate on the shared assignment CTEs (k=8): the winning d2
-    // becomes the distance, per-cluster quantile_cont(0.9) mirrors
-    // Spark's exact percentile.
-    "emb_outlier" ->
-      s"""WITH ${assignCtes(8)},
-         |own AS (SELECT vec_id, cid, d2,
-         |        row_number() OVER (PARTITION BY vec_id ORDER BY d2, cid) AS rn
-         |      FROM d),
-         |o AS (SELECT vec_id, cid,
-         |        round(sqrt(CAST(d2 AS DOUBLE)) * 1000000) / 1000000 AS dist
-         |      FROM own WHERE rn = 1),
-         |t AS (SELECT cid,
-         |        round(quantile_cont(dist, 0.9) * 1000000) / 1000000 AS thr
-         |      FROM o GROUP BY 1)
-         |SELECT o.vec_id, CAST(o.cid AS BIGINT) AS cluster_id, o.dist, t.thr,
-         |  o.dist > t.thr AS is_outlier
-         |FROM o JOIN t USING (cid) ORDER BY o.vec_id""".stripMargin,
-
-    // Simplified silhouette on the shared assignment CTEs (k=8):
-    // centroids are 6-dp member means (the kmeans convention), distances
-    // the same DECIMAL-summed squared-deviation shape; a=b=0 -> s=0.
-    "emb_silhouette" ->
-      s"""WITH ${assignCtes(8)},
-         |cent AS (SELECT a.cid, f.dim,
-         |    round(CAST(sum(CAST(round(f.x, 6) AS DECIMAL(18,6))) AS DOUBLE)
-         |      / count(*) * 1000000) / 1000000 AS cc
-         |  FROM a JOIN f USING (vec_id) GROUP BY 1, 2),
-         |dd AS (SELECT f.vec_id, cent.cid,
-         |    sqrt(CAST(sum(CAST(round((f.x - cent.cc) * (f.x - cent.cc), 6)
-         |      AS DECIMAL(18,6))) AS DOUBLE)) AS dist
-         |  FROM f JOIN cent USING (dim) GROUP BY 1, 2),
-         |ab AS (SELECT dd.vec_id, a.cid AS cluster_id,
-         |    min(CASE WHEN dd.cid = a.cid THEN dist END) AS ad,
-         |    min(CASE WHEN dd.cid <> a.cid THEN dist END) AS bd
-         |  FROM dd JOIN a ON a.vec_id = dd.vec_id GROUP BY 1, 2)
-         |SELECT vec_id, CAST(cluster_id AS BIGINT) AS cluster_id,
-         |  round(ad * 1000000) / 1000000 AS a_dist,
-         |  round(bd * 1000000) / 1000000 AS b_dist,
-         |  round((CASE WHEN greatest(ad, bd) = 0 THEN 0.0
-         |        ELSE (bd - ad) / greatest(ad, bd) END) * 1000000) / 1000000
-         |    AS silhouette
-         |FROM ab ORDER BY vec_id""".stripMargin,
-
-    // Label-centroid margin: silhouette's DECIMAL distance recipe with
-    // the given labels as clusters; rounded-tie distances count correct.
-    "emb_label_margin" ->
-      """WITH f AS (SELECT vec_id,
-        |        CAST(generate_subscripts(embedding, 1) AS BIGINT) AS dim,
-        |        CAST(unnest(embedding) AS DOUBLE) AS x FROM embeddings),
-        |lab AS (SELECT vec_id, CAST(label AS BIGINT) AS lbl
-        |      FROM embeddings),
-        |cent AS (SELECT lbl AS clbl, dim,
-        |        round(CAST(sum(CAST(round(x, 6) AS DECIMAL(18,6)))
-        |          AS DOUBLE) / count(*) * 1000000) / 1000000 AS c
-        |      FROM f JOIN lab USING (vec_id) GROUP BY 1, 2),
-        |d AS (SELECT vec_id, clbl,
-        |        round(sqrt(CAST(sum(CAST(round((x - c) * (x - c), 6)
-        |          AS DECIMAL(18,6))) AS DOUBLE)) * 1000000) / 1000000 AS dist
-        |      FROM f JOIN cent USING (dim) GROUP BY 1, 2),
-        |m AS (SELECT d.vec_id, lbl,
-        |        min(CASE WHEN clbl = lbl THEN dist END) AS own,
-        |        min(CASE WHEN clbl <> lbl THEN dist END) AS other
-        |      FROM d JOIN lab ON d.vec_id = lab.vec_id GROUP BY 1, 2)
-        |SELECT lbl AS label, count(*) AS n_vecs,
-        |  round(CAST(sum(CAST(round(other - own, 6) AS DECIMAL(18,6)))
-        |    AS DOUBLE) / count(*) * 1000000) / 1000000 AS mean_margin,
-        |  round(CAST(sum(CASE WHEN own <= other THEN 1 ELSE 0 END)
-        |    AS DOUBLE) / CAST(count(*) AS DOUBLE) * 1000000) / 1000000
-        |    AS frac_correct
-        |FROM m GROUP BY 1 ORDER BY label""".stripMargin,
-
-    // Products are 9-dp-quantized as scaled int64s (round(x*1e9) ->
-    // BIGINT) and summed exactly — mirrors the Scala side's long path.
-    "emb_covariance" ->
-      s"""WITH e AS ($embCte),
-         |x AS (SELECT vec_id, unnest(v) AS xi,
-         |        generate_subscripts(v, 1) - 1 AS i FROM e),
-         |m AS (SELECT i, sum(CAST(round(xi, 9) AS DECIMAL(28,9))) AS sx
-         |      FROM x GROUP BY 1),
-         |p AS (SELECT a.i AS i, b.i AS j,
-         |        sum(CAST(round(a.xi * b.xi * 1e9, 0) AS BIGINT)) AS sp,
-         |        count(*) AS n
-         |      FROM x a JOIN x b ON a.vec_id = b.vec_id GROUP BY 1, 2)
-         |SELECT CAST(p.i AS BIGINT) AS i, CAST(p.j AS BIGINT) AS j,
-         |  round((CAST(sp AS DOUBLE) / 1e9 / n
-         |    - (CAST(mi.sx AS DOUBLE) / n) * (CAST(mj.sx AS DOUBLE) / n)) * 1000000) / 1000000
-         |    + 0.0
-         |    AS cov
-         |FROM p JOIN m mi ON mi.i = p.i JOIN m mj ON mj.i = p.j
-         |ORDER BY i, j""".stripMargin,
-
-    // Effective rank from the SAME cov chain: exact diagonal DECIMAL
-    // trace, 9-dp-rounded square sums.
-    "emb_effective_rank" ->
-      s"""WITH e AS ($embCte),
-         |x AS (SELECT vec_id, unnest(v) AS xi,
-         |        generate_subscripts(v, 1) - 1 AS i FROM e),
-         |m AS (SELECT i, sum(CAST(round(xi, 9) AS DECIMAL(28,9))) AS sx
-         |      FROM x GROUP BY 1),
-         |p AS (SELECT a.i AS i, b.i AS j,
-         |        sum(CAST(round(a.xi * b.xi * 1e9, 0) AS BIGINT)) AS sp,
-         |        count(*) AS n
-         |      FROM x a JOIN x b ON a.vec_id = b.vec_id GROUP BY 1, 2),
-         |cv AS (SELECT p.i, p.j,
-         |        round((CAST(sp AS DOUBLE) / 1e9 / n
-         |          - (CAST(mi.sx AS DOUBLE) / n)
-         |          * (CAST(mj.sx AS DOUBLE) / n)) * 1000000) / 1000000 + 0.0 AS cov
-         |      FROM p JOIN m mi ON mi.i = p.i JOIN m mj ON mj.i = p.j),
-         |k6 AS (SELECT i, j, cov,
-         |        CAST(round(cov * 1e6) AS BIGINT) AS k FROM cv),
-         |a AS (SELECT count(*) AS n_entries,
-         |        sum(CASE WHEN i = j
-         |          THEN CAST(cov AS DECIMAL(18,6)) END) AS tr,
-         |        CAST(sum((CAST(k AS HUGEINT) * k + 500) // 1000)
-         |          AS DECIMAL(38,0)) AS fr2i
-         |      FROM k6)
-         |SELECT n_entries, round(CAST(tr AS DOUBLE), 6) AS trace,
-         |  round(sqrt(CAST(fr2i AS DOUBLE) / 1e9) * 1000000) / 1000000
-         |    AS frob_norm,
-         |  round(CAST(tr AS DOUBLE) * CAST(tr AS DOUBLE)
-         |    / nullif(CAST(fr2i AS DOUBLE) / 1e9, 0.0) * 1000000) / 1000000
-         |    AS effective_rank
-         |FROM a""".stripMargin,
-
-    // TwoNN: squared-L2 via the identical ‖a‖²+‖b‖²−2a·b double algebra
-    // (list_dot_product matches the fused graft_dot accumulation order);
-    // ln μ terms 9-dp DECIMAL-summed, MLE one division.
-    "emb_intrinsic_dim" -> twoNNExactOracle,
-
-    // ANN-fed TwoNN: SRP self-candidates, identical MLE tail.
-    "emb_intrinsic_dim_ann" -> twoNNAnnOracle,
-
-    // Estimator agreement: exact vs ANN-fed d̂ side by side, abs diff
-    // of the two committed 6-dp estimates.
-    "emb_intrinsic_dim_agree" ->
-      s"""WITH ex AS ($twoNNExactOracle),
-         |an AS ($twoNNAnnOracle)
-         |SELECT ex.n_points AS n_exact, an.n_points AS n_ann,
-         |  ex.id_twonn AS d_exact, an.id_twonn AS d_ann,
-         |  round(abs(an.id_twonn - ex.id_twonn), 6) AS abs_diff
-         |FROM ex, an""".stripMargin,
-
-    // JL audit: the emb_project quantize+sign chain, integer distances
-    // on both sides of the ratio (projected sum of 8 squared diffs;
-    // original via per-i diffs — equals the dot identity exactly, all
-    // < 2^53), 9-dp DECIMAL mean.
-    "emb_jl_distortion" -> {
-      val signs = Similarity.projectionSigns(64, 8)
-      val projSums = (0 until 8).map { j =>
-        s"CAST(sum(qi * ([${signs(j).mkString(",")}])[i]) AS BIGINT) AS proj_$j"
-      }.mkString(",\n  ")
-      val dpExpr = (0 until 8)
-        .map(j => s"(a.proj_$j - b.proj_$j) * (a.proj_$j - b.proj_$j)")
-        .mkString("\n      + ")
-      s"""WITH e AS ($embCte),
-         |s AS (SELECT vec_id, v,
-         |        list_aggregate(list_transform(v, x -> abs(x)), 'max') AS scale
-         |      FROM e),
-         |q AS (SELECT vec_id, i,
-         |        CAST(floor(v[i] * CAST(127.0 AS DOUBLE) / scale
-         |          + CAST(0.5 AS DOUBLE)) AS BIGINT) AS qi
-         |      FROM s CROSS JOIN range(1, 65) t(i) WHERE scale > 0),
-         |pj AS (SELECT vec_id,
-         |  $projSums
-         |  FROM q GROUP BY vec_id),
-         |dq AS (SELECT a.vec_id AS ida,
-         |        CAST(sum((a.qi - b.qi) * (a.qi - b.qi)) AS BIGINT) AS dq
-         |      FROM q a JOIN q b ON b.vec_id = a.vec_id + 1 AND b.i = a.i
-         |      GROUP BY 1),
-         |dp AS (SELECT a.vec_id AS ida,
-         |      $dpExpr AS dp
-         |      FROM pj a JOIN pj b ON b.vec_id = a.vec_id + 1),
-         |r AS (SELECT CAST(dp.dp AS DOUBLE)
-         |        / (8.0 * CAST(dq.dq AS DOUBLE)) AS ratio
-         |      FROM dq JOIN dp ON dp.ida = dq.ida WHERE dq.dq > 0)
-         |SELECT CAST(count(*) AS BIGINT) AS n_pairs,
-         |  CAST(round((CAST(sum(CAST(round(ratio, 9) AS DECIMAL(18,9)))
-         |      AS DOUBLE) / CAST(count(*) AS DOUBLE)
-         |   ) * 1000000) / 1000000 AS DOUBLE) AS mean_ratio,
-         |  CAST(round((min(ratio)) * 1000000) / 1000000 AS DOUBLE)
-         |    AS min_ratio,
-         |  CAST(round((max(ratio)) * 1000000) / 1000000 AS DOUBLE)
-         |    AS max_ratio
-         |FROM r""".stripMargin
-    },
-
-    // Greedy k-center: 3 materialized rounds (ADVICE: unrolled chains
-    // materialize per round) of max-of-9-dp-min-distance with lowest-id
-    // ties, the identical quantized trajectory the Scala loop walks.
-    "emb_kcenter" -> {
-      val rounds = (1 to 3).map { r =>
-        val prev = s"d${r - 1}"
-        s"""m$r AS (SELECT max(d9) AS m FROM $prev),
-           |c$r AS (SELECT min(id) AS nid, max(m) AS nd
-           |      FROM $prev CROSS JOIN m$r WHERE d9 = m),
-           |s$r AS MATERIALIZED (SELECT p.id, p.v, p.n2, c$r.nd
-           |      FROM $prev p JOIN c$r ON p.id = c$r.nid),
-           |d$r AS MATERIALIZED (SELECT p.id, p.v, p.n2,
-           |        least(p.d9, round(p.n2 + s.n2
-           |          - 2.0 * list_dot_product(p.v, s.v), 9)) AS d9
-           |      FROM $prev p CROSS JOIN s$r s)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH e AS ($embCte),
-         |n AS MATERIALIZED (SELECT vec_id AS id, v,
-         |      list_dot_product(v, v) AS n2 FROM e),
-         |s0 AS MATERIALIZED (SELECT id, v, n2 FROM n
-         |      WHERE id = (SELECT min(id) FROM n)),
-         |d0 AS MATERIALIZED (SELECT n.id, n.v, n.n2,
-         |        round(n.n2 + s.n2 - 2.0 * list_dot_product(n.v, s.v), 9)
-         |          AS d9
-         |      FROM n CROSS JOIN s0 s),
-         |$rounds
-         |SELECT 0 AS round, id AS vec_id, CAST(NULL AS DOUBLE) AS dist2
-         |FROM s0
-         |UNION ALL SELECT 1, id,
-         |  CAST(round((nd) * 1000000) / 1000000 AS DOUBLE) FROM s1
-         |UNION ALL SELECT 2, id,
-         |  CAST(round((nd) * 1000000) / 1000000 AS DOUBLE) FROM s2
-         |UNION ALL SELECT 3, id,
-         |  CAST(round((nd) * 1000000) / 1000000 AS DOUBLE) FROM s3
-         |ORDER BY round""".stripMargin
-    },
-
-    // Unrolled power iteration on the SAME cov CTE as emb_covariance:
-    // each round is a j-keyed matrix-vector product with 9-dp DECIMAL
-    // sums, then a 9-dp normalized vector — the identical quantized
-    // trajectory the Scala loop walks, ending with the largest-|x|
-    // sign flip and 6-dp outputs.
-    "emb_pca_power" -> {
-      val covCtes =
-        s"""e AS ($embCte),
-           |xx AS (SELECT vec_id, unnest(v) AS xi,
-           |        generate_subscripts(v, 1) - 1 AS i FROM e),
-           |mm AS (SELECT i, sum(CAST(round(xi, 9) AS DECIMAL(28,9))) AS sx
-           |      FROM xx GROUP BY 1),
-           |pp AS (SELECT a.i AS i, b.i AS j,
-           |        sum(CAST(round(a.xi * b.xi * 1e9, 0) AS BIGINT)) AS sp,
-           |        count(*) AS n
-           |      FROM xx a JOIN xx b ON a.vec_id = b.vec_id GROUP BY 1, 2),
-           |cov AS (SELECT CAST(pp.i AS BIGINT) AS i, CAST(pp.j AS BIGINT) AS j,
-           |  round((CAST(sp AS DOUBLE) / 1e9 / n
-           |    - (CAST(mi.sx AS DOUBLE) / n) * (CAST(mj.sx AS DOUBLE) / n)) * 1000000) / 1000000
-           |    + 0.0
-           |    AS cov
-           |FROM pp JOIN mm mi ON mi.i = pp.i JOIN mm mj ON mj.i = pp.j)""".stripMargin
-      // q9/q6 forms in lockstep with Similarity.powerLoop (r18 seed-3
-      // fired the plain-round form: grid-product/quotient/sqrt rounds).
-      val iterCtes = (1 to 3).map { k =>
-        val prev = if (k == 1) "x0" else s"x${k - 1}"
-        s"""y$k AS (SELECT c.i,
-           |  CAST(sum(CAST(round(c.cov * p.x * 1e9) / 1e9 AS DECIMAL(28,9))) AS DOUBLE) AS y
-           |  FROM cov c JOIN $prev p ON p.i = c.j GROUP BY 1),
-           |n$k AS (SELECT sqrt(CAST(sum(CAST(round(y * y * 1e9) / 1e9 AS DECIMAL(28,9)))
-           |  AS DOUBLE)) AS nrm FROM y$k),
-           |x$k AS (SELECT i, round(y / nrm * 1e9) / 1e9 AS x FROM y$k CROSS JOIN n$k)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH $covCtes,
-         |d AS (SELECT count(DISTINCT i) AS d FROM cov),
-         |x0 AS (SELECT DISTINCT i, 1.0 / sqrt(d) AS x FROM cov CROSS JOIN d),
-         |$iterCtes,
-         |sgn AS (SELECT CASE WHEN x > 0 THEN 1.0 WHEN x < 0 THEN -1.0
-         |               ELSE 0.0 END AS sgn
-         |        FROM x3 ORDER BY abs(x) DESC, i LIMIT 1)
-         |SELECT i, round(x * sgn * 1000000) / 1000000 AS loading,
-         |  round(nrm * 1000000) / 1000000 AS eigenvalue_est
-         |FROM x3 CROSS JOIN sgn CROSS JOIN n3 ORDER BY i""".stripMargin
-    },
-
-    // Eigengap: the pca_power chain run twice — once on cov, once on
-    // the 9-dp deflated residual cov − λ₁·v₁v₁ᵀ built from the SAME
-    // 6-dp published (loading, eigenvalue) values Spark deflates with.
-    "emb_eigengap" -> {
-      val covCtes =
-        s"""e AS ($embCte),
-           |xx AS (SELECT vec_id, unnest(v) AS xi,
-           |        generate_subscripts(v, 1) - 1 AS i FROM e),
-           |mm AS (SELECT i, sum(CAST(round(xi, 9) AS DECIMAL(28,9))) AS sx
-           |      FROM xx GROUP BY 1),
-           |pp AS (SELECT a.i AS i, b.i AS j,
-           |        sum(CAST(round(a.xi * b.xi * 1e9, 0) AS BIGINT)) AS sp,
-           |        count(*) AS n
-           |      FROM xx a JOIN xx b ON a.vec_id = b.vec_id GROUP BY 1, 2),
-           |cov AS (SELECT CAST(pp.i AS BIGINT) AS i, CAST(pp.j AS BIGINT) AS j,
-           |  round((CAST(sp AS DOUBLE) / 1e9 / n
-           |    - (CAST(mi.sx AS DOUBLE) / n) * (CAST(mj.sx AS DOUBLE) / n)) * 1000000) / 1000000
-           |    + 0.0
-           |    AS cov
-           |FROM pp JOIN mm mi ON mi.i = pp.i JOIN mm mj ON mj.i = pp.j)""".stripMargin
-      // q9/q6 forms in lockstep with Similarity.powerLoop/eigenGap —
-      // seed-3 of the r18 multi-seed sweep fired the plain-round form
-      // HERE (λ₂ 0.022742 vs 0.022743): grid-product, quotient, sqrt
-      // and deflation rounds all ride round(x·10^k)/10^k now.
-      def iterChain(covName: String, p: String) = (1 to 3).map { k =>
-        val prev = if (k == 1) s"${p}x0" else s"$p" + s"x${k - 1}"
-        s"""${p}y$k AS (SELECT c.i,
-           |  CAST(sum(CAST(round(c.cov * q.x * 1e9) / 1e9 AS DECIMAL(28,9))) AS DOUBLE) AS y
-           |  FROM $covName c JOIN $prev q ON q.i = c.j GROUP BY 1),
-           |${p}n$k AS (SELECT sqrt(CAST(sum(CAST(round(y * y * 1e9) / 1e9 AS DECIMAL(28,9)))
-           |  AS DOUBLE)) AS nrm FROM ${p}y$k),
-           |${p}x$k AS (SELECT i, round((CASE WHEN nrm = 0 THEN 0.0
-           |  ELSE y / nrm END) * 1e9) / 1e9 AS x FROM ${p}y$k CROSS JOIN ${p}n$k)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH $covCtes,
-         |d AS (SELECT count(DISTINCT i) AS d FROM cov),
-         |ax0 AS (SELECT DISTINCT i, 1.0 / sqrt(d) AS x FROM cov CROSS JOIN d),
-         |${iterChain("cov", "a")},
-         |asgn AS (SELECT CASE WHEN x > 0 THEN 1.0 WHEN x < 0 THEN -1.0
-         |               ELSE 0.0 END AS sgn
-         |        FROM ax3 ORDER BY abs(x) DESC, i LIMIT 1),
-         |v1 AS (SELECT i, round(x * sgn * 1000000) / 1000000 AS v
-         |      FROM ax3 CROSS JOIN asgn),
-         |l1 AS (SELECT round(nrm * 1000000) / 1000000 AS lambda1 FROM an3),
-         |cov2 AS (SELECT c.i, c.j,
-         |        round((c.cov - l1.lambda1 * a.v * b.v) * 1e9) / 1e9 + 0.0 AS cov
-         |      FROM cov c JOIN v1 a ON a.i = c.i JOIN v1 b ON b.i = c.j
-         |      CROSS JOIN l1),
-         |bx0 AS (SELECT DISTINCT i, 1.0 / sqrt(d) AS x FROM cov2 CROSS JOIN d),
-         |${iterChain("cov2", "b")},
-         |l2 AS (SELECT round(nrm * 1000000) / 1000000 AS lambda2 FROM bn3)
-         |SELECT lambda1, lambda2,
-         |  round(lambda1 / nullif(lambda2, 0.0) * 1000000) / 1000000
-         |    AS gap_ratio
-         |FROM l1 CROSS JOIN l2""".stripMargin
-    },
-
-    // ABTT: the emb_pca_power CTE chain (cov + 3 power iterations +
-    // sign fix) extended with the routed per-dim mean, the 9-dp DECIMAL
-    // projection fold, and the routed corrected components.
-    "emb_abtt" -> {
-      val covCtes =
-        s"""e AS ($embCte),
-           |xx AS (SELECT vec_id, unnest(v) AS xi,
-           |        generate_subscripts(v, 1) - 1 AS i FROM e),
-           |mm AS (SELECT i, sum(CAST(round(xi, 9) AS DECIMAL(28,9))) AS sx
-           |      FROM xx GROUP BY 1),
-           |pp AS (SELECT a.i AS i, b.i AS j,
-           |        sum(CAST(round(a.xi * b.xi * 1e9, 0) AS BIGINT)) AS sp,
-           |        count(*) AS n
-           |      FROM xx a JOIN xx b ON a.vec_id = b.vec_id GROUP BY 1, 2),
-           |cov AS (SELECT CAST(pp.i AS BIGINT) AS i, CAST(pp.j AS BIGINT) AS j,
-           |  round((CAST(sp AS DOUBLE) / 1e9 / n
-           |    - (CAST(mi.sx AS DOUBLE) / n) * (CAST(mj.sx AS DOUBLE) / n)) * 1000000) / 1000000
-           |    + 0.0
-           |    AS cov
-           |FROM pp JOIN mm mi ON mi.i = pp.i JOIN mm mj ON mj.i = pp.j)""".stripMargin
-      // q9/q6 iteration forms in lockstep with Similarity.powerLoop
-      // (r18 multi-seed tie-class elimination; the mu/dt/final sites
-      // below stay plain — their inputs are raw-float combinations
-      // whose 17-significant-digit shortest reprs cannot terminate on
-      // a short half).
-      val iterCtes = (1 to 3).map { k =>
-        val prev = if (k == 1) "x0" else s"x${k - 1}"
-        s"""y$k AS (SELECT c.i,
-           |  CAST(sum(CAST(round(c.cov * p.x * 1e9) / 1e9 AS DECIMAL(28,9))) AS DOUBLE) AS y
-           |  FROM cov c JOIN $prev p ON p.i = c.j GROUP BY 1),
-           |n$k AS (SELECT sqrt(CAST(sum(CAST(round(y * y * 1e9) / 1e9 AS DECIMAL(28,9)))
-           |  AS DOUBLE)) AS nrm FROM y$k),
-           |x$k AS (SELECT i, round(y / nrm * 1e9) / 1e9 AS x FROM y$k CROSS JOIN n$k)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH $covCtes,
-         |d AS (SELECT count(DISTINCT i) AS d FROM cov),
-         |x0 AS (SELECT DISTINCT i, 1.0 / sqrt(d) AS x FROM cov CROSS JOIN d),
-         |$iterCtes,
-         |sgn AS (SELECT CASE WHEN x > 0 THEN 1.0 WHEN x < 0 THEN -1.0
-         |               ELSE 0.0 END AS sgn
-         |        FROM x3 ORDER BY abs(x) DESC, i LIMIT 1),
-         |v AS (SELECT i, round(x * sgn * 1000000) / 1000000 AS loading
-         |      FROM x3 CROSS JOIN sgn),
-         |cn AS (SELECT i, count(*) AS n FROM xx GROUP BY 1),
-         |mu AS (SELECT mm.i,
-         |        CAST(round((CAST(mm.sx AS DOUBLE) / cn.n
-         |         ) * 1000000) / 1000000 AS DOUBLE) AS mu
-         |      FROM mm JOIN cn ON cn.i = mm.i),
-         |xm AS (SELECT xx.vec_id, xx.i, xx.xi - mu.mu AS a,
-         |        v.loading AS b
-         |      FROM xx JOIN mu ON mu.i = xx.i JOIN v ON v.i = xx.i),
-         |dt AS (SELECT vec_id,
-         |        CAST(sum(CAST(round(a * b, 9) AS DECIMAL(28,9)))
-         |          AS DOUBLE) AS dot
-         |      FROM xm GROUP BY 1)
-         |SELECT xm.vec_id, CAST(xm.i + 1 AS BIGINT) AS dim,
-         |  CAST(round((xm.a - dt.dot * xm.b) * 1000000) / 1000000
-         |    AS DOUBLE) AS x_abtt
-         |FROM xm JOIN dt ON dt.vec_id = xm.vec_id
-         |ORDER BY xm.vec_id, dim""".stripMargin
-    },
-
-    // One Lloyd step: DECIMAL-exact distances -> argmin (ties -> lower
-    // cid) -> DECIMAL centroid means; first-4-by-id seeds.
-    "emb_kmeans_iter" ->
-      s"""WITH ${assignCtes(4)}
-         |SELECT a.cid AS cluster_id, f.dim,
-         |  round((CAST(sum(CAST(round(f.x, 6) AS DECIMAL(18,6))) AS DOUBLE)
-         |    / count(*)) * 1000000) / 1000000 AS centroid,
-         |  count(*) AS n_members
-         |FROM a JOIN f USING (vec_id)
-         |GROUP BY 1, 2 ORDER BY cluster_id, dim""".stripMargin,
 
     // PageRank unrolled: each iteration = DECIMAL in-sums + dangling mass
     // Naive a<b<c triangle closure over the same co-purchase edges —
@@ -9934,36 +8906,6 @@ object SparkEntry {
         |    + sy * (a12 * a23 - a22 * a13)) / dA) * 1000000) / 1000000
         |    AS beta2
         |FROM d""".stripMargin,
-
-    // Centroid drift: per-cohort dim-keyed DECIMAL means (6-dp-rounded
-    // before the dot/norm products, the kmeans-cosine discipline).
-    "emb_drift" ->
-      """WITH fa AS (SELECT CAST(generate_subscripts(embedding, 1) AS BIGINT)
-        |          AS dim, CAST(unnest(embedding) AS DOUBLE) AS x
-        |      FROM embeddings WHERE vec_id % 2 = 0),
-        |fb AS (SELECT CAST(generate_subscripts(embedding, 1) AS BIGINT)
-        |          AS dim, CAST(unnest(embedding) AS DOUBLE) AS x
-        |      FROM embeddings WHERE vec_id % 2 = 1),
-        |ma AS (SELECT dim, CAST(count(*) AS BIGINT) AS n_a,
-        |        round((CAST(sum(CAST(round(x, 6) AS DECIMAL(18,6)))
-        |          AS DOUBLE) / count(*)) * 1000000) / 1000000 AS m_a FROM fa GROUP BY 1),
-        |mb AS (SELECT dim, CAST(count(*) AS BIGINT) AS n_b,
-        |        round((CAST(sum(CAST(round(x, 6) AS DECIMAL(18,6)))
-        |          AS DOUBLE) / count(*)) * 1000000) / 1000000 AS m_b FROM fb GROUP BY 1),
-        |agg AS (SELECT CAST(min(n_a) AS BIGINT) AS n_a,
-        |        CAST(min(n_b) AS BIGINT) AS n_b,
-        |        CAST(sum(CAST(round((m_a * m_b) * 1000000) / 1000000
-        |          AS DECIMAL(18,6))) AS DOUBLE) AS dot,
-        |        CAST(sum(CAST(round((m_a * m_a) * 1000000) / 1000000
-        |          AS DECIMAL(18,6))) AS DOUBLE) AS na2,
-        |        CAST(sum(CAST(round((m_b * m_b) * 1000000) / 1000000
-        |          AS DECIMAL(18,6))) AS DOUBLE) AS nb2,
-        |        CAST(sum(CAST(round((m_a - m_b) * (m_a - m_b), 6)
-        |          AS DECIMAL(18,6))) AS DOUBLE) AS d2
-        |      FROM ma JOIN mb USING (dim))
-        |SELECT n_a, n_b,
-        |  round(dot / (sqrt(na2) * sqrt(nb2)) * 1000000) / 1000000 AS cosine,
-        |  round(sqrt(d2) * 1000000) / 1000000 AS l2 FROM agg""".stripMargin,
 
     // Readability: len(regexp_extract_all) counts, the two formulas
     // transcribed in the Spark side's operation order.
@@ -12722,25 +11664,6 @@ object SparkEntry {
         |    AS frac_in_fold
         |FROM c JOIN t ON c.fold = t.fold
         |ORDER BY c.fold, label""".stripMargin,
-
-    // int8 quantization (the emb_quantize formula) then exact integer
-    // dots against the ±1 sign rows embedded as literals.
-    "emb_project" -> {
-      val signs = Similarity.projectionSigns(64, 8)
-      val sums = (0 until 8).map { j =>
-        s"CAST(sum(qi * ([${signs(j).mkString(",")}])[i]) AS BIGINT) AS proj_$j"
-      }.mkString(",\n  ")
-      s"""WITH e AS ($embCte),
-         |s AS (SELECT vec_id, v,
-         |        list_aggregate(list_transform(v, x -> abs(x)), 'max') AS scale
-         |      FROM e),
-         |q AS (SELECT vec_id, i,
-         |        CAST(floor(v[i] * CAST(127.0 AS DOUBLE) / scale + CAST(0.5 AS DOUBLE)) AS BIGINT) AS qi
-         |      FROM s CROSS JOIN range(1, 65) t(i) WHERE scale > 0)
-         |SELECT vec_id,
-         |  $sums
-         |FROM q GROUP BY vec_id ORDER BY vec_id""".stripMargin
-    },
 
     // The partitioned roundtrip is content-neutral, so the oracle is the
     // plain dim-filtered join over the source table.

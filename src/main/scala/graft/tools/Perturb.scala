@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Verify.{q => jq}
 
 /** Second-seed fixture generator (tooling, not harness contract; VERDICT
   * r16 item 6): writes an alternate DRAW of an sf-dir — same schemas,
@@ -139,12 +140,11 @@ object Perturb {
 
     // Manifest stamp (r19, ADVICE): records that this dir IS a perturbed
     // draw, which seed drew it, and the source fixture's per-file sizes.
-    // tools/artifact_check.py keys its alternate-seed parity requirement
-    // on this stamp instead of "path does not end in sfX" — a renamed
-    // copy of a standard fixture no longer counts as an alt-seed sweep.
+    // tools/parity_sweep.sh records the seed in PARITY_SWEEPS.jsonl, so a
+    // renamed copy of a standard fixture does not pass for an alt-seed
+    // sweep.
     {
       import java.nio.file.{Files, Paths}
-      def jq(x: String) = "\"" + x.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
       val srcFiles = Files.list(Paths.get(src)).toArray.map(_.toString)
         .filter(_.endsWith(".parquet")).sorted
         .map(f => jq(Paths.get(f).getFileName.toString) + ":" +

@@ -1,7 +1,8 @@
 package graft
 
+import com.fasterxml.jackson.databind.ObjectMapper
 import graft.Bench.{Gate, HostReadings, MinStealWindowJiffies, verdict}
-import java.nio.file.Paths
+import java.nio.file.{Files, Paths}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Replays BENCH_HISTORY.jsonl through Bench's `clean` verdict. History
@@ -62,5 +63,30 @@ class BenchSpec extends AnyFunSuite {
     val sf = byEpoch(1787125312L).path("sf").asText
     assert(Bench.yardstickLines(recorded, sf).map(_.path("epoch").asLong) ==
       Seq(1787125312L, 1786913529L, 1786896209L, 1786887114L, 1786884637L))
+  }
+
+  // The committed artifacts parse strictly: readJsonLines skips a line it
+  // cannot parse, so the replays above would not notice a broken one.
+  private val mapper = new ObjectMapper()
+  private def read(path: String) = Files.readString(Paths.get(path))
+
+  test("every BENCH_HISTORY.jsonl line parses") {
+    val lines = read("BENCH_HISTORY.jsonl").split("\n").filter(_.trim.nonEmpty)
+    lines.foreach(l => mapper.readTree(l))
+    assert(lines.length == history.size)
+  }
+
+  test("BENCH_FULL.json parses and carries clean, queries, n_ok and value") {
+    val full = mapper.readTree(read("BENCH_FULL.json"))
+    for (k <- Seq("clean", "queries", "n_ok", "value")) assert(full.has(k), k)
+  }
+
+  test("SCALE_GATE.json parses and its agg_ratio is the last one SCALE.md quotes") {
+    val gate = mapper.readTree(read("SCALE_GATE.json"))
+    val quoted = "agg ratio \\*\\*([\\d.]+)×\\*\\*".r
+      .findAllMatchIn(read("SCALE.md")).map(_.group(1).toDouble).toSeq
+    assert(quoted.nonEmpty, "SCALE.md quotes no 'agg ratio **N×**'")
+    assert(math.abs(quoted.last - gate.path("agg_ratio").asDouble(-1)) < 0.0005,
+      s"SCALE.md quotes ${quoted.last}, SCALE_GATE.json says ${gate.path("agg_ratio")}")
   }
 }

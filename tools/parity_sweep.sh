@@ -45,10 +45,9 @@ python3 tools/parity.py "$SF" "$OUT"
 # PARITY_SWEEPS.jsonl keyed by a fingerprint of the CODE state it ran
 # against (index blobs + unstaged diff + untracked status over src/main
 # + tools — commit-invariant, so committing identical code keeps the
-# entry valid). tools/artifact_check.py fails the round close unless
-# the current fingerprint has green entries for sf0.01, sf0.1, and at
-# least one alternate-seed dir. Restricted (keyRegex) sweeps are NOT
-# recorded — they are not a certification.
+# entry valid). A code state is certified by green entries for sf0.01,
+# sf0.1, and at least one alternate-seed dir. Restricted (keyRegex)
+# sweeps are NOT recorded — they are not a certification.
 if [ -z "$REGEX" ]; then
   FP=$( { git ls-files -s -- src/main tools
           git diff -- src/main tools
