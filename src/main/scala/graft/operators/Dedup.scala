@@ -1424,33 +1424,8 @@ object Dedup {
       .dropDuplicates("id_a", "id_b")
   }
 
-  /** LSH banding calibration card: the MEASURED candidate rate per
-    * trigram-Jaccard bucket next to the theoretical S-curve
-    * 1 − (1 − s^r)^b — the tuning table that answers "will (b, r) catch
-    * my 0.7-similar pairs and skip my 0.2s" BEFORE a petabyte dedup run
-    * commits to a banding. Uses a fully ANSI-expressible MinHash
-    * (per-permutation affine maps of the polynomial shingle hash — the
-    * [[Sketch.cmsBucket]] constant convention) so the oracle rebuilds
-    * the signatures, bands, and candidates bit-for-bit: the curve is
-    * verified, not eyeballed.
-    *
-    * Fixed b = 8 bands × r = 2 rows (16 permutations): theory
-    * 1 − (1 − s²)⁸ evaluates by squaring alone (y², y⁴, y⁸) — no `pow`,
-    * so both engines produce the identical double. Population: pairs
-    * sharing ≥ 1 shingle (disjoint pairs have s = 0 and, with these
-    * exact-equality bands, candidate probability 0 — nothing to
-    * calibrate). Scale shape: signatures are one map-side-combined
-    * (doc, perm) min over the shingle×16 stream; candidates come from
-    * the banded equi-self-join; the exact-Jaccard verifier is the
-    * inverted-index join ([[ngramJaccardPairs]]'s cost class, the
-    * verify-scale baseline).
-    */
   private val P31L = 2147483647L
 
-  /** Distinct (doc_id, trigram-shingle-string) pairs — the ANSI-hashable
-    * shingle view shared by [[lshCalibrationCurve]] and
-    * [[minhashEstimatorCard]].
-    */
   /** Distinct (doc_id, shingle) plus `h64 = xxhash64(shingle)`: the
     * string column feeds the oracle-mirrorable 31-bit MinHash, the
     * 64-bit hash is the JOIN key of [[exactJaccardPairs]] — shuffling
@@ -1509,6 +1484,27 @@ object Dedup {
           (col("na") + col("nb") - col("ni")).cast("double")).as("j"))
   }
 
+  /** LSH banding calibration card: the MEASURED candidate rate per
+    * trigram-Jaccard bucket next to the theoretical S-curve
+    * 1 − (1 − s^r)^b — the tuning table that answers "will (b, r) catch
+    * my 0.7-similar pairs and skip my 0.2s" BEFORE a petabyte dedup run
+    * commits to a banding. Uses a fully ANSI-expressible MinHash
+    * (per-permutation affine maps of the polynomial shingle hash — the
+    * [[Sketch.cmsBucket]] constant convention) so the oracle rebuilds
+    * the signatures, bands, and candidates bit-for-bit: the curve is
+    * verified, not eyeballed.
+    *
+    * Fixed b = 8 bands × r = 2 rows (16 permutations): theory
+    * 1 − (1 − s²)⁸ evaluates by squaring alone (y², y⁴, y⁸) — no `pow`,
+    * so both engines produce the identical double. Population: pairs
+    * sharing ≥ 1 shingle (disjoint pairs have s = 0 and, with these
+    * exact-equality bands, candidate probability 0 — nothing to
+    * calibrate). Scale shape: signatures are one map-side-combined
+    * (doc, perm) min over the shingle×16 stream; candidates come from
+    * the banded equi-self-join; the exact-Jaccard verifier is the
+    * inverted-index join ([[ngramJaccardPairs]]'s cost class, the
+    * verify-scale baseline).
+    */
   def lshCalibrationCurve(docs: DataFrame, textCol: String = "text",
                           idCol: String = "doc_id"): DataFrame = {
     val P31 = P31L

@@ -100,7 +100,7 @@ object Perturb {
       .withColumn("l_discount", h(11, "d", seed, lk: _*) / lit(100.0))
       .withColumn("l_tax", h(9, "t", seed, lk: _*) / lit(100.0))
       .withColumn("l_shipdate",
-        expr(s"timestampadd(DAY, pmod(xxhash64(l_orderkey, l_linenumber, 's', '$seed'), 61) - 30, l_shipdate)")
+        timestamp_add("DAY", h(61, "s", seed, lk: _*) - 30, col("l_shipdate"))
           .cast("timestamp_ntz")), "lineitem")
 
     wr(rd("orders")
@@ -108,7 +108,8 @@ object Perturb {
         round(col("o_totalprice") *
           (lit(0.9) + h(2001, "p", seed, col("o_orderkey")) / lit(1e4)), 2))
       .withColumn("o_orderdate",
-        expr(s"timestampadd(DAY, pmod(xxhash64(o_orderkey, 's', '$seed'), 61) - 30, o_orderdate)")
+        timestamp_add("DAY", h(61, "s", seed, col("o_orderkey")) - 30,
+            col("o_orderdate"))
           .cast("timestamp_ntz")), "orders")
 
     wr(graft.etl.Ingest.readEvents(spark, src)
@@ -116,7 +117,8 @@ object Perturb {
         round(col("value") *
           (lit(0.8) + h(4001, "v", seed, col("event_id")) / lit(1e4)), 3))
       .withColumn("ts",
-        expr(s"timestampadd(SECOND, pmod(xxhash64(event_id, 'ts', '$seed'), 7201) - 3600, ts)")
+        timestamp_add("SECOND", h(7201, "ts", seed, col("event_id")) - 3600,
+            col("ts"))
           .cast("timestamp_ntz")), "events")
 
     // Empty tokens (consecutive/leading/trailing spaces) must pass

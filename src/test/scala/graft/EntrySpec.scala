@@ -13,6 +13,31 @@ class EntrySpec extends SparkSpec {
         s"oracles-only=${SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet}")
   }
 
+  test("every registry name is declared once: family names distinct, none in a remaining map") {
+    val names = SparkEntry.families.map(_.name)
+    assert(names.diff(names.distinct).isEmpty,
+      s"family names declared twice: ${names.diff(names.distinct).distinct}")
+    val remaining = SparkEntry.remainingQueries.keySet ++ SparkEntry.remainingOracleSql.keySet
+    assert(names.toSet.intersect(remaining).isEmpty,
+      s"family names shadowing a remaining map entry: ${names.toSet.intersect(remaining)}")
+  }
+
+  test("oracle SQL text is byte-identical to the pinned sha256 of every key") {
+    // src/test/resources/oracle_sql.sha256 holds `name sha256` per key of
+    // the oracle text. Moving a query family between files must not
+    // change one byte of any oracle; a deliberate oracle change updates
+    // the pinned line in the same commit.
+    val pinned = scala.io.Source.fromResource("oracle_sql.sha256", getClass.getClassLoader)
+      .getLines().map(_.split(' ')).map { case Array(k, h) => k -> h }.toMap
+    def sha256(s: String): String =
+      java.security.MessageDigest.getInstance("SHA-256")
+        .digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        .map(b => f"${b & 0xff}%02x").mkString
+    val got = SparkEntry.oracleSql.map { case (k, v) => k -> sha256(v) }
+    val differ = (got.keySet ++ pinned.keySet).filter(k => got.get(k) != pinned.get(k))
+    assert(differ.isEmpty, s"oracle text changed or keys differ: ${differ.toSeq.sorted}")
+  }
+
   test("README.md query count matches the actual registry size") {
     val readme = scala.io.Source.fromFile("README.md", "UTF-8").mkString
     val m = "(\\d+) named queries".r.findFirstMatchIn(readme)

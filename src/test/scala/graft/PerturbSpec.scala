@@ -11,7 +11,9 @@ class PerturbSpec extends SparkSpec {
   test("perturb_manifest.json parses for a seed with a tab and a quote") {
     val src = "/root/testdata/sf0.001"
     val out = Files.createTempDirectory("graft-perturb")
-    val seed = "s\t\"3"
+    // The single quote also reaches every hashed draw: the seed must never
+    // be parsed as SQL text.
+    val seed = "s\t'\"3"
     try {
       graft.tools.Perturb.generate(spark, src, out.toString, seed)
       val m = new ObjectMapper().readTree(
