@@ -5,6 +5,7 @@ import graft.Verify.{q => jq}
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 import scala.util.Try
+import scala.util.control.NonFatal
 
 object Bench {
   /** A profile whose START loadavg (1-min or 5-min) exceeds this is
@@ -159,7 +160,7 @@ object Bench {
     try {
       val f = scala.io.Source.fromFile("/proc/loadavg").mkString.split("\\s+")
       (f(0).toDouble, f(1).toDouble)
-    } catch { case _: Throwable => (-1.0, -1.0) }
+    } catch { case NonFatal(_) => (-1.0, -1.0) }
 
   /** Waits for idle BEFORE an expensive run: a profile started under
     * load is noise (r11/r12 incidents in BENCH_HISTORY.jsonl), but a
@@ -236,7 +237,7 @@ object Bench {
         val f = scala.io.Source.fromFile("/proc/stat").getLines().next()
           .trim.split("\\s+").drop(1).map(_.toLong)
         (if (f.length > 7) f(7) else 0L, f.take(8).sum)
-      } catch { case _: Throwable => (0L, 0L) }
+      } catch { case NonFatal(_) => (0L, 0L) }
     def stealPct(a: (Long, Long), b: (Long, Long)): Double =
       if (b._2 > a._2) 100.0 * (b._1 - a._1) / (b._2 - a._2) else -1.0
     val ((start1, start5), waited) = waitForIdle("bench")
@@ -248,7 +249,7 @@ object Bench {
     // events-timestamp paths.
     Seq("q1_pricing", "op09_dedup_latest", "ana_favorite_type").foreach { q =>
       try SparkEntry.queries(q)(spark, "/root/testdata/sf0.001").count()
-      catch { case _: Throwable => () }
+      catch { case NonFatal(_) => () }
     }
     // Host-speed CANARIES, recorded as provenance and gating `clean`;
     // no one should divide the total by them (a pure-CPU spin doesn't
@@ -356,7 +357,7 @@ object Bench {
         SparkEntry.drainTouchedDerivations()
         val t0 = System.nanoTime()
         val err = try { fn(spark, sfDir).count(); None }
-          catch { case e: Throwable =>
+          catch { case NonFatal(e) =>
             Some(s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(120)}") }
         touchedBy(name) = SparkEntry.drainTouchedDerivations() - name
         (name, (System.nanoTime() - t0) / 1e9, err)
@@ -543,7 +544,7 @@ object Bench {
     (if (only.isDefined) Seq(outPath) else Seq(fullPath, outPath)).distinct.foreach { p =>
       try Files.write(Paths.get(p),
         (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         System.err.println(s"bench: could not write $p: ${e.getMessage}") }
     }
     // Append-only history: consecutive committed profiles are how
@@ -557,7 +558,7 @@ object Bench {
       Paths.get(s"$repoRoot/BENCH_HISTORY.jsonl"),
       histLine.getBytes(java.nio.charset.StandardCharsets.UTF_8),
       java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.APPEND)
-    catch { case e: Throwable =>
+    catch { case NonFatal(e) =>
       System.err.println(s"bench: could not append history: ${e.getMessage}") }
     spark.stop()
   }

@@ -5,11 +5,12 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 import graft.analytics.Analytics
-import graft.entries.{DedupEntry, EmbEntry, Q}
+import graft.entries.{DedupEntry, EmbEntry, Q, SampleEntry, SketchEntry}
 import graft.entries.DedupEntry.{clusterLabelsCte, trigramCtes, trigramSizesCte}
 import graft.etl.{Ingest, Merge, Transforms}
 import graft.functions.Fns
-import graft.operators.{AsOfJoin, BloomJoin, Dedup, Layout, Multimodal, Sampling, Similarity, Sketch, Skew, TextAnalysis}
+import graft.operators.{AsOfJoin, BloomJoin, Dedup, Layout, Multimodal, Sampling, Similarity, Skew, TextAnalysis}
+import graft.operators.Sampling.samplingHashSql
 import graft.streaming.{StatefulJobs, StreamingJobs}
 
 /** Driver contract: every implemented operator (SURVEY.md §2 + the
@@ -301,7 +302,14 @@ object SparkEntry {
   def oracleSql: Map[String, String] =
     remainingOracleSql ++ families.map(q => q.name -> q.oracle)
 
-  private[graft] def families: Seq[Q] = EmbEntry.queries ++ DedupEntry.queries
+  /** Each family's name prefix beside its [[entries.Q]] list: every name
+    * in a list carries the prefix, and no remaining entry does.
+    */
+  private[graft] def familiesByPrefix: Seq[(String, Seq[Q])] = Seq(
+    "emb_" -> EmbEntry.queries, "dedup_" -> DedupEntry.queries,
+    "sample_" -> SampleEntry.queries, "sketch_" -> SketchEntry.queries)
+
+  private[graft] def families: Seq[Q] = familiesByPrefix.flatMap(_._2)
 
   private[graft] def remainingQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -1062,13 +1070,6 @@ object SparkEntry {
       Analytics.newVsReturning(T(s, dir, "events"))
         .orderBy("day")),
 
-    // Leak-free split: hash the CLUSTER id, not the doc id, so near-dups
-    // can never straddle the train/eval boundary.
-    "sample_split" -> ((s, dir) =>
-      Sampling.assignSplit(docClusters(s, dir), "cluster_id", 0.1, 0.1)
-        .select(col("doc_id"), col("cluster_id"), col("split"))
-        .orderBy("doc_id")),
-
     // Column-level completeness profile: rows / non-null / exact
     // distinct per column, reshaped one-row-per-column with stack() —
     // all in a single aggregation job. (Exact distinct expands the agg;
@@ -1140,197 +1141,6 @@ object SparkEntry {
           |  size(graft_minhash(text, 3, 32)) AS sig_len
           |FROM graft_docs ORDER BY doc_id""".stripMargin)
     }),
-
-    // ---- LLM-data-pipeline: deterministic sampling / data mixing ----
-
-    "sample_deterministic" -> ((s, dir) =>
-      Sampling.deterministicSample(T(s, dir, "events"), "event_id", 0.1)
-        .select("event_id", "user_id", "event_type")
-        .orderBy("event_id")),
-
-    "sample_stratified" -> ((s, dir) =>
-      Sampling.stratifiedQuota(T(s, dir, "documents"), "lang", "doc_id", 40)
-        .select("doc_id", "lang", "source")
-        .orderBy("doc_id")),
-
-    // Training-mixture composition: target source weights w(srcK)=K%4+1
-    // + a 10k-token budget → per-source deterministic sampling rates and
-    // the target-vs-achieved mixture card (the Pile/Dolma dataset-card
-    // step). Oracle derives the same weights from the source name.
-    "sample_mixture_card" -> ((s, dir) =>
-      Sampling.mixtureCard(T(s, dir, "documents"),
-          (0 until 20).map(k => s"src$k" -> (k % 4 + 1).toDouble).toMap,
-          10000L)
-        .orderBy("source")),
-
-    // Deterministic training-order shuffle: the output's ROW ORDER is the
-    // shuffle (the driver's hash-compare is order-sensitive, so the
-    // pseudorandom permutation itself is what's verified).
-    "sample_shuffle" -> ((s, dir) =>
-      Sampling.deterministicShuffle(
-          T(s, dir, "documents").select("doc_id", "lang"), "doc_id")
-        .select(col("doc_id"), col("lang"))),
-
-    // Temperature-weighted data mixing (quota_src ∝ √n_src, τ = 2):
-    // low-resource languages up-weighted vs a proportional sample.
-    "sample_mixture" -> ((s, dir) =>
-      Sampling.temperatureMixture(
-          T(s, dir, "documents").select("doc_id", "lang"), "lang", "doc_id", 1000L)
-        .select("doc_id", "lang").orderBy("doc_id")),
-
-    // Mixture-rate plan for a dictated 50/30/20 mix over three sources:
-    // largest exactly-proportioned sample with no oversampling.
-    "sample_rates" -> ((s, dir) =>
-      Sampling.mixtureRates(T(s, dir, "documents"), "source",
-          Seq("src0" -> 0.5, "src1" -> 0.3, "src2" -> 0.2))
-        .orderBy("source")),
-
-    // Temperature-share planning report (alpha = 0.5): derived per-source
-    // target shares p_s ∝ n_s^alpha with raw-share and boost columns —
-    // the analysis face of sample_mixture's selection.
-    "sample_temp_shares" -> ((s, dir) =>
-      Sampling.temperatureShares(T(s, dir, "documents"), 0.5)
-        .orderBy("source")),
-
-    // Importance-reweighting card toward uniform language balance:
-    // per-lang weight + Kish effective sample size — "is reweighting
-    // this skew affordable, or must the tail be upsampled".
-    "sample_importance" -> ((s, dir) =>
-      Sampling.importanceWeights(T(s, dir, "documents"), "lang")
-        .orderBy("lang")),
-
-    // word2vec negative sampler: k unigram^0.75 draws per doc by
-    // deterministic CDF inversion.
-    "sample_negatives" -> ((s, dir) =>
-      Sampling.negativeSampling(T(s, dir, "documents"))
-        .orderBy("doc_id", "j")),
-
-    // Neyman optimal allocation of a 1000-row sample over languages,
-    // n_h ∝ N_h·σ(n_chars).
-    "sample_neyman" -> ((s, dir) =>
-      Sampling.neymanAllocation(T(s, dir, "documents"), "lang", "n_chars")
-        .orderBy("stratum")),
-
-    // Systematic PPS draw: 50 grid points over the exact n_chars
-    // cumulative line, inclusion probability exactly n·w/W.
-    "sample_pps" -> ((s, dir) =>
-      Sampling.ppsSystematic(T(s, dir, "documents"), "doc_id", "n_chars")
-        .orderBy("j")),
-
-    // Hansen–Hurwitz total-of-tokens estimate from the n_chars-PPS draw,
-    // beside the exact total — the corpus-stats-without-a-full-scan
-    // calibration card (chars ∝ tokens ⇒ small rel_error).
-    "sample_ht_total" -> ((s, dir) =>
-      Sampling.hansenHurwitzTotal(
-        T(s, dir, "documents")
-          .withColumn("y", size(Fns.tokens(col("text"))).cast("long")),
-        "doc_id", "n_chars", "y")),
-
-    // ---- LLM-data-pipeline: mergeable sketches ----
-
-    // Count-Min Sketch built INCREMENTALLY: register tables for the pre-
-    // and post-cutoff halves of the stream, union-merged by summing
-    // counts, then probed for every distinct key. The oracle recomputes
-    // the ONE-SHOT sketch from the same ANSI hash chain, so the
-    // hash-match proves (a) the register contents bit-for-bit and
-    // (b) merge(build(A), build(B)) == build(A ∪ B) — the sketch's
-    // associativity contract. Estimates are exact here (width 32 ≥ key
-    // cardinality ⇒ no collisions); CMS error bounds are covered in
-    // SketchSpec with a deliberately undersized width.
-    "sketch_cms" -> ((s, dir) => {
-      val e = T(s, dir, "events")
-      val cutoff = lit("2024-01-20").cast("timestamp")
-      val part1 = Sketch.cmsBuild(e.filter(col("ts") < cutoff), "event_type", 4, 32)
-      val part2 = Sketch.cmsBuild(e.filter(col("ts") >= cutoff), "event_type", 4, 32)
-      val merged = part1.unionByName(part2)
-        .groupBy("row", "bucket").agg(sum("cnt").as("cnt"))
-      Sketch.cmsEstimate(merged, e.select("event_type").distinct(), "event_type", 4, 32)
-        .orderBy("event_type")
-    }),
-
-    // Count Sketch (signed CMS): same incremental split-merge contract as
-    // sketch_cms, width 16 over ~12 keys so collisions are live — but
-    // signed, so they cancel instead of inflating; estimate = median of
-    // the 5 signed register reads. The hash-match proves register
-    // contents AND merge(build(A), build(B)) == build(A ∪ B) for the
-    // SIGNED sum.
-    "sketch_countsketch" -> ((s, dir) => {
-      val e = T(s, dir, "events")
-      val cutoff = lit("2024-01-20").cast("timestamp")
-      val part1 = Sketch.countSketchBuild(e.filter(col("ts") < cutoff), "event_type", 5, 16)
-      val part2 = Sketch.countSketchBuild(e.filter(col("ts") >= cutoff), "event_type", 5, 16)
-      val merged = part1.unionByName(part2)
-        .groupBy("row", "bucket").agg(sum("cnt").as("cnt"))
-      Sketch.countSketchEstimate(merged, e.select("event_type").distinct(),
-          "event_type", 5, 16)
-        .orderBy("event_type")
-    }),
-
-    // CMS heavy hitters: top-20 users by estimated event count — 150
-    // keys into 64 buckets, so collisions (and the min-over-rows bound)
-    // are live, and the ranking is over ESTIMATES; integer-exact in both
-    // engines, ties broken by key.
-    "sketch_cms_topk" -> ((s, dir) => {
-      val e = T(s, dir, "events").select(col("user_id").cast("string").as("key"))
-      val sk = Sketch.cmsBuild(e, "key", 4, 64)
-      Sketch.cmsTopK(sk, e, "key", 4, 64, 20)
-    }),
-
-    // CMS width-error sweep: the calibration curve (lsh_curve's sibling)
-    // that sizes the sketch — mean/max over-estimate and the exact-hit
-    // share at 16/64/256 buckets against true counts.
-    "sketch_cms_sweep" -> ((s, dir) => {
-      val e = T(s, dir, "events").select(col("user_id").cast("string").as("key"))
-      val exact = e.groupBy("key").agg(count(lit(1)).as("exact"))
-      def d6(c: org.apache.spark.sql.Column) =
-        round(c.cast("decimal(24,12)"), 6).cast("double")
-      Seq(16, 64, 256).map { w =>
-        val sk = Sketch.cmsBuild(e, "key", 4, w)
-        Sketch.cmsEstimate(sk, e.select("key").distinct(), "key", 4, w)
-          .join(exact, "key")
-          .agg(count(lit(1)).as("n_keys"),
-            sum(col("est") - col("exact")).as("sover"),
-            max(col("est") - col("exact")).as("max_over"),
-            sum(when(col("est") === col("exact"), 1L).otherwise(0L))
-              .as("nex"))
-          .select(lit(w.toLong).as("width"), col("n_keys"),
-            d6(col("sover").cast("double") / col("n_keys").cast("double"))
-              .as("mean_over"),
-            col("max_over"),
-            d6(col("nex").cast("double") / col("n_keys").cast("double"))
-              .as("frac_exact"))
-      }.reduce(_ unionByName _).orderBy("width")
-    }),
-
-    // Histogram quantile sketch: 64 equi-width bins over l_extendedprice,
-    // estimates at p50/p90/p99 (error <= one bin width by construction).
-    "sketch_histq" -> ((s, dir) =>
-      Sketch.histQuantiles(T(s, dir, "lineitem"), "l_extendedprice", 64,
-          Seq(0.5, 0.9, 0.99))
-        .select(col("q"), col("est"), col("bin"), col("n"))
-        .orderBy("q")),
-
-    // HyperLogLog distinct(event_id), m = 64. Registers are pure integer
-    // arithmetic; the harmonic sum is exact in IEEE (every term a
-    // multiple of 2⁻²⁷), exported both as the integer register checksum
-    // `sum_inv_scaled` and the rounded `est`. 10k keys into 64 buckets
-    // leaves no zero registers, so the raw estimator path (no libm ln)
-    // is what's exercised end-to-end.
-    "sketch_hll" -> ((s, dir) =>
-      Sketch.hllEstimate(
-        Sketch.hllRegisters(T(s, dir, "events"), "event_id", 6), 6)),
-
-    // Per-group HLL: distinct users per event type from ONE register
-    // aggregation (groups × 64 registers shuffle, not rows). ~150 users
-    // into 64 buckets leaves zero registers in every group, so this —
-    // unlike the global sketch — exercises the linear-counting branch
-    // end-to-end (the one `ln`; rounded 4 dp on both engines).
-    "sketch_hll_grouped" -> ((s, dir) =>
-      Sketch.hllEstimateGrouped(
-        Sketch.hllRegistersGrouped(T(s, dir, "events"), "user_id",
-          Seq("event_type"), 6),
-        Seq("event_type"), 6)
-        .orderBy("event_type")),
 
     // ---- LLM-data-pipeline: similarity search ----
 
@@ -1939,21 +1749,6 @@ object SparkEntry {
     "text_heaps_law" -> ((s, dir) =>
       TextAnalysis.heapsLaw(T(s, dir, "documents"), 10)),
 
-    // Curriculum interleave ranks: per-source quality rank (distinct-token
-    // ratio desc); consuming ordered by (rank_in_source, source) is the
-    // source-balanced curriculum. Window is partitioned by source.
-    "sample_curriculum" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      val scored = docs.select(col("doc_id"), col("source"),
-        coalesce(try_divide(
-          size(array_distinct(Fns.tokens(col("text")))).cast("double"),
-          size(Fns.tokens(col("text")))), lit(0.0)).as("score"))
-      Sampling.curriculumOrder(scored, "source", "score", "doc_id")
-        .select(col("doc_id"), col("source"), round(col("score"), 6).as("score"),
-          col("rank_in_source"))
-        .orderBy("rank_in_source", "source", "doc_id")
-    }),
-
     // Skip-gram pairs (±2 window, top 100) — word2vec-style training-pair
     // extraction via an exact (doc, position+offset) equi-join.
     "text_skipgrams" -> ((s, dir) =>
@@ -2001,19 +1796,6 @@ object SparkEntry {
         .unpivot(Array(col("l_orderkey"), col("l_linenumber")),
           Array(col("l_quantity"), col("l_discount")), "metric", "value")
         .orderBy("l_orderkey", "l_linenumber", "metric", "value")),
-
-    // CMS join-size estimate vs the exact join count — the sketch-only
-    // cardinality estimator (upper bound; min over depth rows). Both
-    // numbers in one row so the driver compare pins est AND exact.
-    "sketch_join_size" -> ((s, dir) => {
-      val o = T(s, dir, "orders").select(col("o_custkey").cast("string").as("k"))
-      val c = T(s, dir, "customer").select(col("c_custkey").cast("string").as("k"))
-      val est = Sketch.cmsJoinSizeEstimate(o, "k", c, "k", 3, 1024)
-      val exact = T(s, dir, "orders")
-        .join(T(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
-        .agg(count(lit(1)).as("join_size_exact"))
-      est.crossJoin(exact)
-    }),
 
     // SCD2 point-in-time lookup: each sampled fact event joined to the
     // dimension VERSION valid at its timestamp (valid_from inclusive,
@@ -2294,60 +2076,6 @@ object SparkEntry {
             lit(2654435761L), lit(2147483648L))),
         delaySeconds = 604800L)
         .orderBy("event_type")),
-
-    // HLL set algebra between two event-id cohorts with KNOWN overlap
-    // (last digit < 6 vs >= 4: |A|=|B|=0.6N, |A∩B|=0.2N, Jaccard 0.2):
-    // union by register-max merge, intersection by inclusion–exclusion
-    // — set overlap answered without materializing either key set, and
-    // the known ground truth prices the sketch error on sight
-    // (inclusion–exclusion amplifies the per-sketch ±3% — that
-    // amplification is exactly what the card should show).
-    "sketch_hll_setops" -> ((s, dir) => {
-      val e = T(s, dir, "events")
-      Sketch.hllSetOps(
-        e.filter(Fns.pmod(col("event_id"), lit(10L)) < 6),
-        e.filter(Fns.pmod(col("event_id"), lit(10L)) >= 4), "event_id", 10)
-    }),
-
-    // Bloom sizing card: 16384-bit / 3-hash filter over part keys, probed
-    // with order keys that are provably absent — measured FPR beside the
-    // (1-(1-1/m)^kn)^k theory line; the filter bits are oracle-verified.
-    "sketch_bloom_fpr" -> ((s, dir) =>
-      Sketch.bloomFprCard(T(s, dir, "part"), T(s, dir, "lineitem"),
-        "p_partkey", "l_orderkey")),
-
-    // KMV k-minimum-values distinct estimator over event ids (k=1024):
-    // (k-1)·2^32/h_(k) beside the exact count — the
-    // intersectable-sketch family's calibration card.
-    "sketch_kmv" -> ((s, dir) =>
-      Sketch.kmvCard(T(s, dir, "events"), "event_id", 1024)),
-
-    // Sketch-driven winsorized mean per event_type: p05/p95 cutoffs from
-    // a 64-bin equi-width histogram (two scans + bounded bin aggregate,
-    // no per-group sort), values clamped, robust mean beside raw — the
-    // heavy-tail-taming aggregate of a 100 TB metric pipeline.
-    "sketch_winsorized" -> ((s, dir) =>
-      Sketch.winsorizedMeanCard(T(s, dir, "events"), "event_type", "value",
-          64, 0.05, 0.95)
-        .orderBy("event_type")),
-
-    // Grouped robust-stats card from the same histogram machinery:
-    // trimmed mean (drop outside [p05,p95] instead of clamping),
-    // histogram median, and MAD via a second bounded histogram over
-    // |v - median| whose bounds are closed-form — location AND scale
-    // robustly, with no per-group sort anywhere.
-    "sketch_robust_stats" -> ((s, dir) =>
-      Sketch.robustStatsCard(T(s, dir, "events"), "event_type", "value",
-          64, 0.05, 0.95)
-        .orderBy("event_type")),
-
-    // MinHash register-min union: per-source 16-perm signatures folded
-    // into the corpus-union signature by elementwise MIN (exact in
-    // sketch space — the third mergeable fold beside CMS add and HLL
-    // max), each source's agreement-ĵ calibrated against its exact
-    // containment Jaccard |S_src|/|S_union|.
-    "sketch_minhash_union" -> ((s, dir) =>
-      Sketch.minhashUnionCard(T(s, dir, "documents")).orderBy("source")),
 
     // Per-event-type mean global quantile of `value` (midrank ECDF, the
     // quantile-normalization substrate) — stochastic-dominance-at-a-
@@ -3489,47 +3217,6 @@ object SparkEntry {
         .orderBy("doc_id")
     }),
 
-    // Weighted sampling without replacement (Efraimidis-Spirakis clocks
-    // on the deterministic hash, weight = document length): distributed
-    // top-k, not a global sort.
-    "sample_weighted" -> ((s, dir) =>
-      Sampling.weightedSample(T(s, dir, "documents"), "doc_id", "n_chars", 60)
-        .select("doc_id", "source", "n_chars")
-        .orderBy("doc_id")),
-
-    // Priority sampling (Duffield–Lund–Thorup): top-60 by w/u priority
-    // with the τ-threshold estimator ŵ = max(w, τ) attached — the
-    // fixed-k sample that PRESERVES subset weight sums, planned as
-    // TakeOrderedAndProject (per-partition heap, no global sort).
-    "sample_priority" -> ((s, dir) =>
-      Sampling.prioritySample(
-          T(s, dir, "documents").select("doc_id", "source", "n_chars"),
-          "doc_id", "n_chars", 60)
-        .orderBy("doc_id")),
-
-    // The estimator's one-row witness: Σŵ over the 60-sample vs the
-    // true Σw over all documents, relative error reported — the
-    // "estimate a 100 TB total from k kept rows" calibration.
-    "sample_priority_total" -> ((s, dir) =>
-      Sampling.prioritySampleTotalCard(
-        T(s, dir, "documents").select("doc_id", "n_chars"),
-        "doc_id", "n_chars", 60)),
-
-    // Distributed Poisson bootstrap: 95% CI on the per-type mean value
-    // from 50 deterministic Poisson(1) resamples — error bars on a 100 TB
-    // aggregate with one scan and no global coordination (Chamandy et al.).
-    "sample_bootstrap_ci" -> ((s, dir) =>
-      Sampling.bootstrapCI(T(s, dir, "events"), "event_type", "event_id",
-        "value", reps = 50, level = 0.95)
-        .orderBy("event_type")),
-
-    // Deterministic 5-fold assignment + per-fold class balance — the
-    // cross-validation pre-flight (same row → same fold on every engine
-    // and partitioning, unlike randomSplit).
-    "sample_kfold" -> ((s, dir) =>
-      Sampling.kfoldBalance(T(s, dir, "documents"), "doc_id", "lang", 5)
-        .orderBy("fold", "label")),
-
     // Dynamic partition pruning: the fact is partitioned on the join key,
     // the filter lives on the DIM side only — static pruning can't fire,
     // so the scan's partition list must come from the broadcast result at
@@ -3722,7 +3409,7 @@ object SparkEntry {
   private val ivfOracle: String =
     s"""WITH e AS ($embCte),
        |cent AS (SELECT vec_id AS centroid_id, v AS centroid FROM e
-       |         ORDER BY ((vec_id % 2147483648) * 2654435761) % 4294967296, vec_id
+       |         ORDER BY ${samplingHashSql("vec_id")}, vec_id
        |         LIMIT 16),
        |ca AS (SELECT vec_id, v, centroid_id,
        |              row_number() OVER (PARTITION BY vec_id
@@ -4062,177 +3749,6 @@ object SparkEntry {
         |FROM g GROUP BY user_id, island
         |ORDER BY user_id, covered_from""".stripMargin,
 
-    // weight normalization mirrors the Scala double sum term-for-term
-    // (VALUES literals are DECIMAL in DuckDB — cast before arithmetic)
-    "sample_rates" ->
-      """WITH w AS (SELECT * FROM (VALUES ('src0', 0.5), ('src1', 0.3),
-        |    ('src2', 0.2)) t(source, wr)),
-        |nw AS (SELECT source, CAST(wr AS DOUBLE) /
-        |    (CAST(0.5 AS DOUBLE) + CAST(0.3 AS DOUBLE) + CAST(0.2 AS DOUBLE))
-        |    AS w FROM w),
-        |a AS (SELECT source, count(*) AS n_avail FROM documents GROUP BY 1),
-        |j AS (SELECT a.source, a.n_avail, nw.w FROM a JOIN nw USING (source)),
-        |t AS (SELECT min(CAST(n_avail AS DOUBLE) / w) AS t_max FROM j)
-        |SELECT source, n_avail, round(w, 6) AS target_w,
-        |  CAST(floor(w * t_max) AS BIGINT) AS take_n,
-        |  round((CAST(floor(w * t_max) AS DOUBLE) / n_avail) * 1000000) / 1000000 AS rate
-        |FROM j CROSS JOIN t ORDER BY source""".stripMargin,
-
-    // n^0.5 routes through DECIMAL(24,12) -> 6dp on both engines; shares
-    // divide DECIMAL-summed totals; boost divides the ROUNDED shares.
-    "sample_temp_shares" ->
-      """WITH c AS (SELECT source, count(*) AS n_docs FROM documents
-        |           GROUP BY 1),
-        |w AS (SELECT source, n_docs,
-        |        round((power(n_docs, 0.5)) * 1000000) / 1000000 AS w
-        |      FROM c),
-        |t AS (SELECT sum(n_docs) AS n_total,
-        |        sum(CAST(w AS DECIMAL(24,6))) AS w_total FROM w)
-        |SELECT source, n_docs,
-        |  round((CAST(n_docs AS DOUBLE) / n_total) * 1000000) / 1000000
-        |    AS raw_share,
-        |  round((CAST(w AS DOUBLE) / CAST(w_total AS DOUBLE)) * 1000000)
-        |    / 1000000 AS temp_share,
-        |  round(((round((CAST(w AS DOUBLE) / CAST(w_total AS DOUBLE))
-        |        * 1000000) / 1000000)
-        |    / (round((CAST(n_docs AS DOUBLE) / n_total) * 1000000)
-        |        / 1000000)) * 1000000) / 1000000 AS boost
-        |FROM w CROSS JOIN t ORDER BY source""".stripMargin,
-
-    // Kish ESS from the G-row count aggregate: exact decimal x integer
-    // products, every rounding edge on the DECIMAL(24,12) cast.
-    // PPS: one ordered cum line (window is fine for the oracle), the
-    // same integer grid, interval membership by integer compares.
-    "sample_pps" ->
-      """WITH r AS (SELECT doc_id, CAST(n_chars AS BIGINT) AS w
-        |      FROM documents WHERE n_chars > 0),
-        |line AS (SELECT doc_id, w,
-        |        sum(w) OVER (ORDER BY doc_id) AS hi FROM r),
-        |l2 AS (SELECT doc_id, w, hi, hi - w AS lo FROM line),
-        |tot AS (SELECT max(hi) AS W FROM l2),
-        |grid AS (SELECT CAST(j AS BIGINT) AS j,
-        |        (2 * CAST(j AS BIGINT) + 1) * W // 100 AS t
-        |      FROM range(50) r(j) CROSS JOIN tot)
-        |SELECT j, doc_id, w AS weight
-        |FROM l2 JOIN grid ON t >= lo AND t < hi
-        |ORDER BY j""".stripMargin,
-
-    // Hansen–Hurwitz: the same PPS line + grid, y = token count joined
-    // onto each draw; per-draw terms y·W/w 9-dp DECIMAL-summed, the /n
-    // and error divisions DECIMAL(24,12)-routed.
-    "sample_ht_total" ->
-      """WITH r AS (SELECT doc_id, CAST(n_chars AS BIGINT) AS w,
-        |        CAST(len(list_filter(string_split(text, ' '),
-        |          x -> x <> '')) AS BIGINT) AS y
-        |      FROM documents WHERE n_chars > 0),
-        |line AS (SELECT doc_id, w, y,
-        |        sum(w) OVER (ORDER BY doc_id) AS hi FROM r),
-        |l2 AS (SELECT doc_id, w, y, hi, hi - w AS lo FROM line),
-        |tot AS (SELECT max(hi) AS W FROM l2),
-        |yt AS (SELECT CAST(sum(y) AS BIGINT) AS y_true,
-        |        CAST(sum(w) AS BIGINT) AS sw FROM r),
-        |grid AS (SELECT CAST(j AS BIGINT) AS j,
-        |        (2 * CAST(j AS BIGINT) + 1) * W // 100 AS t
-        |      FROM range(50) g(j) CROSS JOIN tot),
-        |dr AS (SELECT CAST(l2.y AS DOUBLE) * CAST(yt.sw AS DOUBLE)
-        |          / CAST(l2.w AS DOUBLE) AS term, yt.y_true
-        |      FROM l2 JOIN grid ON t >= lo AND t < hi CROSS JOIN yt),
-        |g AS (SELECT y_true, CAST(count(*) AS BIGINT) AS n_draws,
-        |        sum(CAST(round(term, 9) AS DECIMAL(28,9))) AS st
-        |      FROM dr GROUP BY 1)
-        |SELECT n_draws,
-        |  CAST(round((CAST(st AS DOUBLE) / CAST(n_draws AS DOUBLE)
-        |   ) * 1000000) / 1000000 AS DOUBLE) AS hh_total,
-        |  y_true AS true_total,
-        |  CAST(round((CAST(st AS DOUBLE)
-        |      / (CAST(n_draws AS DOUBLE) * CAST(y_true AS DOUBLE)) - 1.0
-        |   ) * 1000000) / 1000000 AS DOUBLE) AS rel_error
-        |FROM g""".stripMargin,
-
-    // Neyman: exact HUGEINT moments -> 6-dp sample sd; shares compose
-    // the published sds; allocations floor against the budget.
-    "sample_neyman" ->
-      """WITH m AS (SELECT lang AS stratum, CAST(count(*) AS BIGINT) AS n,
-        |        sum(CAST(n_chars AS HUGEINT)) AS sx,
-        |        sum(CAST(n_chars * n_chars AS HUGEINT)) AS sxx
-        |      FROM documents WHERE n_chars IS NOT NULL GROUP BY 1),
-        |sds AS (SELECT stratum, n,
-        |        CAST(round((sqrt(
-        |          CAST(CAST(n AS HUGEINT) * sxx - sx * sx AS DOUBLE)
-        |          / nullif(CAST(n * (n - 1) AS DOUBLE), 0.0))
-        |         ) * 1000000) / 1000000 AS DOUBLE) AS sd
-        |      FROM m),
-        |ws AS (SELECT stratum, n, sd,
-        |        CAST(round(CAST(CAST(n AS DOUBLE) * sd
-        |          AS DECIMAL(38,12)), 6) AS DECIMAL(38,6)) AS w6
-        |      FROM sds),
-        |tot AS (SELECT sum(w6) AS w_total FROM ws)
-        |SELECT stratum, n, sd,
-        |  CAST(round((CAST(w6 AS DOUBLE) / CAST(w_total AS DOUBLE)
-        |   ) * 1000000) / 1000000 AS DOUBLE) AS alloc_share,
-        |  CAST(floor(1000.0 * CAST(round((CAST(w6 AS DOUBLE)
-        |    / CAST(w_total AS DOUBLE)) * 1000000) / 1000000 AS DOUBLE))
-        |    AS BIGINT) AS alloc_n
-        |FROM ws CROSS JOIN tot ORDER BY stratum""".stripMargin,
-
-    // Negative sampler: same double-Knuth 62-bit draw mod the exact
-    // x1e6 unigram^0.75 total, CDF membership by integer compares.
-    "sample_negatives" ->
-      s"""WITH base AS ($docToks),
-         |t AS (SELECT unnest(toks) AS term FROM base),
-         |c AS (SELECT term, count(*) AS freq FROM t GROUP BY 1),
-         |top AS (SELECT term, freq FROM c ORDER BY freq DESC, term
-         |      LIMIT 200),
-         |v AS (SELECT CAST(row_number() OVER (ORDER BY freq DESC, term)
-         |        - 1 AS BIGINT) AS term_id, term,
-         |        CAST(CAST(round(pow(CAST(freq AS DOUBLE), 0.75), 6)
-         |          AS DECIMAL(18,6)) * 1000000 AS BIGINT) AS w6
-         |      FROM top),
-         |cdf AS (SELECT term_id, term, w6,
-         |        sum(w6) OVER (ORDER BY term_id) AS hi FROM v),
-         |cdf2 AS (SELECT term_id, term, hi - w6 AS lo, hi FROM cdf),
-         |tot AS (SELECT max(hi) AS w_total FROM cdf2),
-         |d AS (SELECT doc_id, CAST(j AS BIGINT) AS j
-         |      FROM documents CROSS JOIN range(4) r(j)),
-         |h AS (SELECT doc_id, j,
-         |    (((((doc_id % 2147483648) * 4 + j) % 2147483648)
-         |      * 2654435761) % 4294967296) // 2 AS ha,
-         |    (((((doc_id % 2147483648) * 4 + j) % 2147483648)
-         |      * 2246822519) % 4294967296) // 2 AS hb
-         |  FROM d),
-         |dr AS (SELECT doc_id, j,
-         |        (ha * 2147483648 + hb) % w_total AS t
-         |      FROM h CROSS JOIN tot)
-         |SELECT dr.doc_id, dr.j, term_id AS neg_term_id,
-         |  term AS neg_term
-         |FROM dr JOIN cdf2 ON t >= lo AND t < hi
-         |ORDER BY doc_id, j""".stripMargin,
-
-    "sample_importance" ->
-      """WITH c AS (SELECT lang AS grp, count(*) AS n_src FROM documents
-        |      WHERE lang IS NOT NULL GROUP BY 1),
-        |t AS (SELECT CAST(sum(n_src) AS BIGINT) AS n_total,
-        |        count(*) AS n_groups FROM c),
-        |w AS (SELECT grp, n_src, n_total, n_groups,
-        |        CAST(round((CAST(n_total AS DOUBLE)
-        |          / CAST(n_groups * n_src AS DOUBLE)
-        |         ) * 1000000000) / 1000000000 AS DOUBLE) AS weight
-        |      FROM c CROSS JOIN t),
-        |s AS (SELECT CAST(sum(CAST(
-        |        round((weight * weight) * 1000000000) / 1000000000 * n_src
-        |        AS DECIMAL(38,12))) AS DECIMAL(38,12)) AS sw2 FROM w)
-        |SELECT grp AS lang, n_src,
-        |  CAST(round((CAST(n_src AS DOUBLE) / CAST(n_total AS DOUBLE)
-        |   ) * 1000000) / 1000000 AS DOUBLE) AS source_share,
-        |  CAST(round((1e0 / CAST(n_groups AS DOUBLE)
-        |   ) * 1000000) / 1000000 AS DOUBLE) AS target_share,
-        |  weight,
-        |  CAST(round((CAST(n_total AS DOUBLE) * CAST(n_total AS DOUBLE)
-        |    / CAST(sw2 AS DOUBLE)) * 1000000) / 1000000 AS DOUBLE) AS ess,
-        |  CAST(round((CAST(n_total AS DOUBLE) / CAST(sw2 AS DOUBLE)
-        |   ) * 1000000) / 1000000 AS DOUBLE) AS ess_ratio
-        |FROM w CROSS JOIN s ORDER BY lang""".stripMargin,
-
     "stream_dedup" ->
       """SELECT DISTINCT user_id, event_type FROM events
         |ORDER BY user_id, event_type""".stripMargin,
@@ -4254,32 +3770,6 @@ object SparkEntry {
         |EXCEPT ALL
         |SELECT event_type FROM events WHERE value > 2
         |ORDER BY event_type""".stripMargin,
-
-    // Fixed-order IEEE mirror of Sketch.histQuantiles: same clamped
-    // floor-binning, same lo + (bin+1)·w estimate.
-    "sketch_histq" ->
-      """WITH b AS (SELECT min(l_extendedprice) AS lo, max(l_extendedprice) AS hi,
-        |             count(l_extendedprice) AS n FROM lineitem),
-        |binned AS (SELECT CASE WHEN hi = lo THEN 0
-        |             ELSE least(CAST(floor((l_extendedprice - lo) / ((hi - lo) / 64)) AS BIGINT), 63)
-        |             END AS bin, lo, hi, n
-        |           FROM lineitem CROSS JOIN b
-        |           WHERE l_extendedprice IS NOT NULL),
-        |reg AS (SELECT bin, lo, hi, n, count(*) AS c FROM binned GROUP BY 1, 2, 3, 4),
-        |cum AS (SELECT *, sum(c) OVER (ORDER BY bin ROWS UNBOUNDED PRECEDING) AS cum
-        |        FROM reg),
-        |-- ::DOUBLE: DuckDB's bare 0.9 is DECIMAL, whose exact ceil(q*n) can
-        |-- cross an integer boundary the Spark side's IEEE double product
-        |-- doesn't — both engines must do the cutoff in identical arithmetic.
-        |qs AS (SELECT unnest([0.5::DOUBLE, 0.9::DOUBLE, 0.99::DOUBLE]) AS q)
-        |SELECT q,
-        |  round((lo + (bin + 1) * ((hi - lo) / 64)) * 1000000) / 1000000 AS est,
-        |  bin, n
-        |FROM (SELECT q, lo, hi, n, min(bin) AS bin
-        |      FROM qs CROSS JOIN cum
-        |      WHERE cum >= ceil(q * n)
-        |      GROUP BY 1, 2, 3, 4)
-        |ORDER BY q""".stripMargin,
 
     "q_range_join" ->
       """SELECT c.event_id, s.event_id AS signup_id
@@ -4745,293 +4235,6 @@ object SparkEntry {
         |       count(*) AS n
         |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
 
-    // ((key mod 2^31) * 2654435761) mod 2^32 — Knuth multiplicative hash
-    // with the key folded first so the product can't overflow BIGINT;
-    // plain ANSI arithmetic so the oracle reproduces selections exactly.
-    "sample_deterministic" ->
-      """SELECT event_id, user_id, event_type FROM events
-        |WHERE ((event_id % 2147483648) * 2654435761) % 4294967296
-        |      < CAST(0.1 * 4294967296 AS BIGINT)
-        |ORDER BY event_id""".stripMargin,
-
-    "sample_stratified" ->
-      """SELECT doc_id, lang, source FROM documents
-        |QUALIFY row_number() OVER (PARTITION BY lang
-        |  ORDER BY ((doc_id % 2147483648) * 2654435761) % 4294967296, doc_id) <= 40
-        |ORDER BY doc_id""".stripMargin,
-
-    // Mixture card: weights reconstructed from the source name
-    // (w = substr(source,4)%4 + 1, Σw = 50 over src0..src19), the same
-    // Bernoulli hash rule as sample_deterministic, identical IEEE op
-    // order for target/rate/threshold.
-    "sample_mixture_card" ->
-      """WITH base AS (SELECT source,
-        |        ((doc_id % 2147483648) * 2654435761) % 4294967296 AS h,
-        |        CAST(len(list_filter(string_split(text, ' '), x -> x <> ''))
-        |          AS BIGINT) AS n_tok
-        |      FROM documents),
-        |w AS (SELECT source,
-        |        CAST((CAST(substr(source, 4) AS INT) % 4) + 1 AS DOUBLE) AS w
-        |      FROM (SELECT DISTINCT source FROM documents)),
-        |tot AS (SELECT source, count(*) AS n_docs,
-        |        CAST(sum(n_tok) AS BIGINT) AS total_tokens
-        |      FROM base GROUP BY 1),
-        |p AS (SELECT t.source, n_docs, total_tokens, w.w,
-        |        10000.0 * w.w / 50.0 AS target_raw,
-        |        least(1.0, (10000.0 * w.w / 50.0)
-        |          / CAST(total_tokens AS DOUBLE)) AS rate
-        |      FROM tot t JOIN w ON w.source = t.source),
-        |kept AS (SELECT b.source, count(*) AS kept_docs,
-        |        CAST(sum(b.n_tok) AS BIGINT) AS kept_tokens
-        |      FROM base b JOIN p ON p.source = b.source
-        |      WHERE b.h < CAST(floor(p.rate * 4294967296) AS BIGINT)
-        |      GROUP BY 1),
-        |tk AS (SELECT sum(kept_tokens) AS tk FROM kept)
-        |SELECT p.source, n_docs, total_tokens,
-        |  round(target_raw, 2) AS target_tokens,
-        |  round(rate, 6) AS rate,
-        |  coalesce(kept_docs, 0) AS kept_docs,
-        |  CAST(coalesce(kept_tokens, 0) AS BIGINT) AS kept_tokens,
-        |  round((p.w / 50.0) * 1000000) / 1000000 AS target_share,
-        |  round((CAST(coalesce(kept_tokens, 0) AS DOUBLE)
-        |    / nullif(CAST(tk AS DOUBLE), 0.0)) * 1000000) / 1000000 AS achieved_share
-        |FROM p LEFT JOIN kept USING (source) CROSS JOIN tk
-        |ORDER BY p.source""".stripMargin,
-
-    "sample_shuffle" ->
-      """SELECT doc_id, lang FROM documents
-        |ORDER BY ((doc_id % 2147483648) * 2654435761) % 4294967296, doc_id""".stripMargin,
-
-    // Temperature mixing (τ = 2): quotas from exact-DECIMAL-summed √n
-    // weights, rows picked per source in samplingHash order. The √n →
-    // DECIMAL(28,10) routing makes every step engine-identical (a double
-    // can never hit the decimal cast's rounding tie — k.5×10⁻¹⁰ has a
-    // factor-5 denominator).
-    "sample_mixture" ->
-      """WITH counts AS (SELECT lang, count(*) AS n_src FROM documents GROUP BY 1),
-        |w AS (SELECT lang,
-        |        CAST(sqrt(CAST(n_src AS DOUBLE)) AS DECIMAL(28,10)) AS w
-        |      FROM counts),
-        |t AS (SELECT sum(w) AS w_tot FROM w),
-        |q AS (SELECT lang,
-        |        CAST(floor(1000.0 * (CAST(w AS DOUBLE) / CAST(w_tot AS DOUBLE))) AS BIGINT) AS quota
-        |      FROM w CROSS JOIN t),
-        |r AS (SELECT d.doc_id, d.lang,
-        |        row_number() OVER (PARTITION BY d.lang
-        |          ORDER BY ((d.doc_id % 2147483648) * 2654435761) % 4294967296, d.doc_id) AS rn
-        |      FROM documents d)
-        |SELECT r.doc_id, r.lang FROM r JOIN q USING (lang)
-        |WHERE rn <= quota ORDER BY doc_id""".stripMargin,
-
-    // One-shot CMS recomputed from the same ANSI hash chain (code-point
-    // polynomial mod 2³¹−1, per-row affine remix, Knuth fold): counting
-    // events through each key's (row, bucket) cells reproduces the
-    // registers exactly, including cross-key collisions.
-    "sketch_cms" -> {
-      val consts = (0 until 4).map(r =>
-        s"($r, ${1103515245L * (r + 1) % 2147483647L}, " +
-          s"${12345L * (r + 1) % 2147483647L})").mkString(", ")
-      s"""WITH consts(r, a, b) AS (VALUES $consts),
-         |kh AS (
-         |  SELECT event_type,
-         |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-         |      list_transform(range(length(event_type)),
-         |        i -> ascii(substr(event_type, CAST(i + 1 AS INT), 1)))),
-         |      (acc, c) -> (acc * 131 + c) % 2147483647) AS h
-         |  FROM (SELECT DISTINCT event_type FROM events) k),
-         |kb AS (
-         |  SELECT event_type, r,
-         |    ((((h * a + b) % 2147483647) * 2654435761) % 4294967296) % 32 AS bucket
-         |  FROM kh CROSS JOIN consts),
-         |counts AS (
-         |  SELECT kb.r, kb.bucket, count(*) AS cnt
-         |  FROM events e JOIN kb ON e.event_type = kb.event_type
-         |  GROUP BY kb.r, kb.bucket)
-         |SELECT kb.event_type, min(c.cnt) AS est
-         |FROM kb JOIN counts c ON kb.r = c.r AND kb.bucket = c.bucket
-         |GROUP BY kb.event_type
-         |ORDER BY kb.event_type""".stripMargin
-    },
-
-    // Count Sketch: one-shot rebuild of the same signed registers (merge
-    // associativity is what the match proves); bucket chain as sketch_cms,
-    // sign chain with its own (a, b) pair and the second multiplier;
-    // median = quantile_disc 0.5 over the 5 signed reads (3rd of 5 —
-    // exactly Spark's sorted element_at).
-    "sketch_countsketch" -> {
-      val consts = (0 until 5).map(r =>
-        s"($r, ${1103515245L * (r + 1) % 2147483647L}, " +
-          s"${12345L * (r + 1) % 2147483647L}, " +
-          s"${1103515245L * (r + 101) % 2147483647L}, " +
-          s"${12345L * (r + 101) % 2147483647L})").mkString(", ")
-      s"""WITH consts(r, a, b, sa, sb) AS (VALUES $consts),
-         |kh AS (
-         |  SELECT event_type,
-         |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-         |      list_transform(range(length(event_type)),
-         |        i -> ascii(substr(event_type, CAST(i + 1 AS INT), 1)))),
-         |      (acc, c) -> (acc * 131 + c) % 2147483647) AS h
-         |  FROM (SELECT DISTINCT event_type FROM events) k),
-         |kb AS (
-         |  SELECT event_type, r,
-         |    ((((h * a + b) % 2147483647) * 2654435761) % 4294967296)
-         |      % 16 AS bucket,
-         |    1 - 2 * (((((h * sa + sb) % 2147483647) * 2246822519)
-         |      % 4294967296) % 2) AS sign
-         |  FROM kh CROSS JOIN consts),
-         |regs AS (
-         |  SELECT kb.r, kb.bucket, sum(kb.sign) AS cnt
-         |  FROM events e JOIN kb ON e.event_type = kb.event_type
-         |  GROUP BY 1, 2),
-         |est AS (
-         |  SELECT kb.event_type, kb.sign * coalesce(regs.cnt, 0) AS est_r
-         |  FROM kb LEFT JOIN regs ON regs.r = kb.r AND regs.bucket = kb.bucket)
-         |SELECT event_type, CAST(quantile_disc(est_r, 0.5) AS BIGINT) AS est
-         |FROM est GROUP BY 1 ORDER BY event_type""".stripMargin
-    },
-
-    // Same ANSI hash chain as sketch_cms at width 64 over stringified
-    // user ids, then the (est DESC, key) top-20 cut.
-    "sketch_cms_topk" -> {
-      val consts = (0 until 4).map(r =>
-        s"($r, ${1103515245L * (r + 1) % 2147483647L}, " +
-          s"${12345L * (r + 1) % 2147483647L})").mkString(", ")
-      s"""WITH consts(r, a, b) AS (VALUES $consts),
-         |keys AS (SELECT DISTINCT CAST(user_id AS VARCHAR) AS key FROM events),
-         |kh AS (
-         |  SELECT key,
-         |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-         |      list_transform(range(length(key)),
-         |        i -> ascii(substr(key, CAST(i + 1 AS INT), 1)))),
-         |      (acc, c) -> (acc * 131 + c) % 2147483647) AS h
-         |  FROM keys),
-         |kb AS (
-         |  SELECT key, r,
-         |    ((((h * a + b) % 2147483647) * 2654435761) % 4294967296) % 64 AS bucket
-         |  FROM kh CROSS JOIN consts),
-         |ev AS (SELECT CAST(user_id AS VARCHAR) AS key FROM events),
-         |counts AS (
-         |  SELECT kb.r, kb.bucket, count(*) AS cnt
-         |  FROM ev e JOIN kb ON e.key = kb.key
-         |  GROUP BY kb.r, kb.bucket)
-         |SELECT kb.key, min(c.cnt) AS est
-         |FROM kb JOIN counts c ON kb.r = c.r AND kb.bucket = c.bucket
-         |GROUP BY kb.key
-         |ORDER BY est DESC, key LIMIT 20""".stripMargin
-    },
-
-    // Width sweep: the same hash chain at 16/64/256 buckets, error
-    // stats vs exact per-key counts.
-    "sketch_cms_sweep" -> {
-      val consts = (0 until 4).map(r =>
-        s"($r, ${1103515245L * (r + 1) % 2147483647L}, " +
-          s"${12345L * (r + 1) % 2147483647L})").mkString(", ")
-      def one(w: Int) =
-        s"""SELECT CAST($w AS BIGINT) AS width,
-           |  CAST(count(*) AS BIGINT) AS n_keys,
-           |  CAST(round((CAST(sum(est - exact) AS DOUBLE) / count(*)
-           |   ) * 1000000) / 1000000 AS DOUBLE) AS mean_over,
-           |  CAST(max(est - exact) AS BIGINT) AS max_over,
-           |  CAST(round((CAST(sum(CASE WHEN est = exact THEN 1
-           |      ELSE 0 END) AS DOUBLE) / count(*)
-           |   ) * 1000000) / 1000000 AS DOUBLE) AS frac_exact
-           |FROM (
-           |  SELECT kb.key, min(c.cnt) AS est, min(ex.exact) AS exact
-           |  FROM (SELECT key, r,
-           |        ((((h * a + b) % 2147483647) * 2654435761)
-           |          % 4294967296) % $w AS bucket
-           |      FROM kh CROSS JOIN consts) kb
-           |  JOIN (SELECT kb2.r, kb2.bucket, count(*) AS cnt
-           |      FROM ev e JOIN (SELECT key, r,
-           |            ((((h * a + b) % 2147483647) * 2654435761)
-           |              % 4294967296) % $w AS bucket
-           |          FROM kh CROSS JOIN consts) kb2 ON e.key = kb2.key
-           |      GROUP BY kb2.r, kb2.bucket) c
-           |    ON kb.r = c.r AND kb.bucket = c.bucket
-           |  JOIN (SELECT key, count(*) AS exact FROM ev GROUP BY 1) ex
-           |    ON ex.key = kb.key
-           |  GROUP BY kb.key)""".stripMargin
-      s"""WITH consts(r, a, b) AS (VALUES $consts),
-         |keys AS (SELECT DISTINCT CAST(user_id AS VARCHAR) AS key
-         |      FROM events),
-         |kh AS (
-         |  SELECT key,
-         |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-         |      list_transform(range(length(key)),
-         |        i -> ascii(substr(key, CAST(i + 1 AS INT), 1)))),
-         |      (acc, c) -> (acc * 131 + c) % 2147483647) AS h
-         |  FROM keys),
-         |ev AS (SELECT CAST(user_id AS VARCHAR) AS key FROM events)
-         |SELECT * FROM (${Seq(16, 64, 256).map(one).mkString(
-            "\nUNION ALL\n")})
-         |ORDER BY width""".stripMargin
-    },
-
-    // HLL registers from the Knuth 32-bit fold of event_id: bucket = low
-    // 6 bits, ρ = lowest-set-bit position of the 26-bit suffix (unrolled
-    // CASE — no loops, no log2). The harmonic sum uses shift-then-divide
-    // (exact powers of two), so everything before the final round(.,4)
-    // is bit-pinned across engines.
-    "sketch_hll" -> {
-      val alphaM2 = 0.709 * 64 * 64
-      val rhoCase = (1 to 26).map(j =>
-        s"WHEN w % ${1L << j} = ${1L << (j - 1)} THEN $j").mkString(" ")
-      s"""WITH h1 AS (
-         |  SELECT ((event_id % 2147483648) * 2654435761) % 4294967296 AS h1
-         |  FROM events),
-         |h2 AS (SELECT (xor(h1, h1 >> 16) * 1597334677) % 4294967296 AS h2 FROM h1),
-         |h AS (SELECT xor(h2, h2 >> 16) AS h FROM h2),
-         |wb AS (SELECT h % 64 AS bucket, h // 64 AS w FROM h),
-         |rho AS (SELECT bucket,
-         |  CASE WHEN w = 0 THEN 27 $rhoCase END AS rho FROM wb),
-         |reg AS (SELECT bucket, max(rho) AS max_rho FROM rho GROUP BY bucket),
-         |agg AS (SELECT count(*) AS nonzero,
-         |  sum(CAST(1 AS DOUBLE) / (CAST(1 AS BIGINT) << max_rho)) AS s
-         |  FROM reg)
-         |SELECT CAST(64 AS BIGINT) AS m,
-         |  CAST(64 - nonzero AS BIGINT) AS zeros,
-         |  CAST((s + (64 - nonzero)) * 134217728 AS BIGINT) AS sum_inv_scaled,
-         |  round(CASE WHEN CAST('$alphaM2' AS DOUBLE) / (s + (64 - nonzero)) <= 160
-         |               AND nonzero < 64
-         |        THEN 64 * ln(CAST(64 AS DOUBLE) / (64 - nonzero))
-         |        ELSE CAST('$alphaM2' AS DOUBLE) / (s + (64 - nonzero)) END
-         |    * 10000) / 10000 AS est
-         |FROM agg""".stripMargin
-    },
-
-    // Same pipeline as sketch_hll, keyed by user_id and carried per
-    // event_type through every stage; the small per-group cardinality
-    // activates the linear-counting CASE branch.
-    "sketch_hll_grouped" -> {
-      val alphaM2 = 0.709 * 64 * 64
-      val rhoCase = (1 to 26).map(j =>
-        s"WHEN w % ${1L << j} = ${1L << (j - 1)} THEN $j").mkString(" ")
-      s"""WITH h1 AS (
-         |  SELECT event_type,
-         |    ((user_id % 2147483648) * 2654435761) % 4294967296 AS h1
-         |  FROM events),
-         |h2 AS (SELECT event_type,
-         |  (xor(h1, h1 >> 16) * 1597334677) % 4294967296 AS h2 FROM h1),
-         |h AS (SELECT event_type, xor(h2, h2 >> 16) AS h FROM h2),
-         |wb AS (SELECT event_type, h % 64 AS bucket, h // 64 AS w FROM h),
-         |rho AS (SELECT event_type, bucket,
-         |  CASE WHEN w = 0 THEN 27 $rhoCase END AS rho FROM wb),
-         |reg AS (SELECT event_type, bucket, max(rho) AS max_rho
-         |        FROM rho GROUP BY 1, 2),
-         |agg AS (SELECT event_type, count(*) AS nonzero,
-         |  sum(CAST(1 AS DOUBLE) / (CAST(1 AS BIGINT) << max_rho)) AS s
-         |  FROM reg GROUP BY 1)
-         |SELECT event_type, CAST(64 AS BIGINT) AS m,
-         |  CAST(64 - nonzero AS BIGINT) AS zeros,
-         |  CAST((s + (64 - nonzero)) * 134217728 AS BIGINT) AS sum_inv_scaled,
-         |  round(CASE WHEN CAST('$alphaM2' AS DOUBLE) / (s + (64 - nonzero)) <= 160
-         |               AND nonzero < 64
-         |        THEN 64 * ln(CAST(64 AS DOUBLE) / (64 - nonzero))
-         |        ELSE CAST('$alphaM2' AS DOUBLE) / (s + (64 - nonzero)) END
-         |    * 10000) / 10000 AS est
-         |FROM agg ORDER BY event_type""".stripMargin
-    },
-
     "text_scrub" ->
       s"""SELECT doc_id,
          |  regexp_replace(regexp_replace(text, '${TextAnalysis.urlPattern}', '<URL>', 'g'),
@@ -5049,16 +4252,6 @@ object SparkEntry {
          |FROM nz CROSS JOIN range(0, 64) t(k)
          |WHERE k <= greatest(CAST(ceil((n - 40) / 30.0) AS BIGINT), 0)
          |ORDER BY doc_id, chunk_idx""".stripMargin,
-
-    "sample_split" ->
-      s"""WITH RECURSIVE $clusterLabelsCte
-         |SELECT doc_id, cluster_id,
-         |  CASE WHEN ((cluster_id % 2147483648) * 2654435761) % 4294967296
-         |         < ${Sampling.splitCut(0.1)} THEN 'val'
-         |       WHEN ((cluster_id % 2147483648) * 2654435761) % 4294967296
-         |         < ${Sampling.splitCut(0.2)} THEN 'test'
-         |       ELSE 'train' END AS split
-         |FROM clusters ORDER BY doc_id""".stripMargin,
 
     "ann_ivf_topk" -> ivfOracle,
 
@@ -5204,7 +4397,7 @@ object SparkEntry {
          |        CAST(generate_subscripts(toks, 1) - 1 AS BIGINT) AS pos,
          |        unnest(toks) AS token FROM base),
          |hh AS (SELECT doc_id, pos, token,
-         |        (((((doc_id % 2147483648) * 2654435761) % 4294967296
+         |        (((${samplingHashSql("doc_id")}
          |          + pos) % 2147483648) * 2654435761) % 4294967296 AS h
          |      FROM tk),
          |t AS (SELECT unnest(toks) AS term FROM base),
@@ -5477,265 +4670,6 @@ object SparkEntry {
         |  max(CASE WHEN pm IS NOT NULL AND t < pm - 604800000000
         |    THEN pm - 604800000000 - t END) AS max_late_us
         |FROM w GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // HLL set ops: the sketch_hll register/estimator chain instantiated
-    // per side (click / purchase) on user_id, union = register-wise max,
-    // inclusion–exclusion on the three 4-dp estimates.
-    "sketch_hll_setops" -> {
-      val m = 1024
-      val wBits = 22
-      val alphaM2 = 0.7213 / (1.0 + 1.079 / m) * m * m
-      val rhoCase = (1 to wBits).map(j =>
-        s"WHEN w % ${1L << j} = ${1L << (j - 1)} THEN $j").mkString(" ")
-      def reg(nm: String, cond: String) =
-        s"""${nm}_h1 AS (SELECT ((event_id % 2147483648) * 2654435761)
-           |    % 4294967296 AS h1 FROM events WHERE $cond),
-           |${nm}_h2 AS (SELECT (xor(h1, h1 >> 16) * 1597334677)
-           |    % 4294967296 AS h2 FROM ${nm}_h1),
-           |${nm}_h AS (SELECT xor(h2, h2 >> 16) AS h FROM ${nm}_h2),
-           |${nm}_wb AS (SELECT h % $m AS bucket, h // $m AS w FROM ${nm}_h),
-           |${nm}_rho AS (SELECT bucket,
-           |    CASE WHEN w = 0 THEN ${wBits + 1} $rhoCase END AS rho
-           |    FROM ${nm}_wb),
-           |${nm}_reg AS (SELECT bucket, max(rho) AS max_rho
-           |    FROM ${nm}_rho GROUP BY bucket)""".stripMargin
-      def est(nm: String, src: String) =
-        s"""${nm}_agg AS (SELECT count(*) AS nonzero,
-           |    sum(CAST(1 AS DOUBLE) / (CAST(1 AS BIGINT) << max_rho)) AS s
-           |    FROM $src),
-           |${nm}_est AS (SELECT
-           |    round(CASE WHEN CAST('$alphaM2' AS DOUBLE)
-           |          / (s + ($m - nonzero)) <= ${2.5 * m} AND nonzero < $m
-           |      THEN $m * ln(CAST($m AS DOUBLE) / ($m - nonzero))
-           |      ELSE CAST('$alphaM2' AS DOUBLE) / (s + ($m - nonzero)) END
-           |      * 10000) / 10000 AS est FROM ${nm}_agg)""".stripMargin
-      s"""WITH ${reg("a", "event_id % 10 < 6")},
-         |${reg("b", "event_id % 10 >= 4")},
-         |u_reg AS (SELECT bucket, max(max_rho) AS max_rho FROM (
-         |    SELECT * FROM a_reg UNION ALL SELECT * FROM b_reg)
-         |    GROUP BY bucket),
-         |${est("a", "a_reg")},
-         |${est("b", "b_reg")},
-         |${est("u", "u_reg")}
-         |SELECT a_est.est AS est_a, b_est.est AS est_b,
-         |  u_est.est AS est_union,
-         |  round(greatest(a_est.est + b_est.est - u_est.est, 0.0) * 10000)
-         |    / 10000 AS est_intersection,
-         |  round((greatest(a_est.est + b_est.est - u_est.est, 0.0)
-         |    / u_est.est) * 10000) / 10000 AS jaccard_est
-         |FROM a_est CROSS JOIN b_est CROSS JOIN u_est""".stripMargin
-    },
-
-    // Bloom card: the filter bits themselves are rebuilt (3 Knuth-odd
-    // multipliers mod 16384), membership = all 3 positions set.
-    "sketch_bloom_fpr" ->
-      """WITH ins AS (SELECT DISTINCT CAST(p_partkey AS BIGINT) AS key
-        |      FROM part WHERE p_partkey IS NOT NULL),
-        |prb AS (SELECT DISTINCT CAST(l_orderkey AS BIGINT) AS key
-        |      FROM lineitem WHERE l_orderkey IS NOT NULL
-        |        AND l_orderkey NOT IN (SELECT key FROM ins)),
-        |ipos AS (SELECT DISTINCT pos FROM (
-        |      SELECT ((key % 2147483648) * 2654435761) % 16384 AS pos
-        |        FROM ins
-        |      UNION ALL
-        |      SELECT ((key % 2147483648) * 2654435763) % 16384 FROM ins
-        |      UNION ALL
-        |      SELECT ((key % 2147483648) * 2654435765) % 16384 FROM ins)),
-        |ppos AS (
-        |      SELECT key, ((key % 2147483648) * 2654435761) % 16384 AS pos
-        |        FROM prb
-        |      UNION ALL
-        |      SELECT key, ((key % 2147483648) * 2654435763) % 16384
-        |        FROM prb
-        |      UNION ALL
-        |      SELECT key, ((key % 2147483648) * 2654435765) % 16384
-        |        FROM prb),
-        |hits AS (SELECT key, count(*) AS h FROM ppos
-        |      WHERE pos IN (SELECT pos FROM ipos) GROUP BY 1),
-        |fp AS (SELECT (SELECT count(*) FROM prb) AS n_probes,
-        |        CAST((SELECT count(*) FROM hits WHERE h = 3) AS BIGINT)
-        |          AS n_false_pos),
-        |ni AS (SELECT count(*) AS n_inserted FROM ins),
-        |nb AS (SELECT count(*) AS bits_set FROM ipos)
-        |SELECT CAST(16384 AS BIGINT) AS m_bits, CAST(3 AS BIGINT)
-        |    AS k_hashes,
-        |  n_inserted, bits_set,
-        |  round((CAST(bits_set AS DOUBLE) / 16384.0) * 1000000) / 1000000 AS fill_ratio,
-        |  n_probes, n_false_pos,
-        |  round((CAST(n_false_pos AS DOUBLE)
-        |    / nullif(CAST(n_probes AS DOUBLE), 0.0)) * 1000000) / 1000000 AS measured_fpr,
-        |  round(exp(3.0 * ln(1.0 - exp(3.0 * CAST(n_inserted AS DOUBLE)
-        |    * ln(1.0 - 0.00006103515625)))), 6) AS theoretical_fpr
-        |FROM fp CROSS JOIN ni CROSS JOIN nb""".stripMargin,
-
-    // KMV: the avalanche32 chain (Knuth fold, xor-shift finisher) in
-    // ANSI integer ops, k smallest distinct hashes, (k-1)*2^32/h_(k);
-    // < k distinct hashes -> the count is exact by construction.
-    // Mirrors winsorizedMeanCard's two-stage arithmetic: per-group
-    // bounds, 64-bin assignment with the identical (v-lo)/((hi-lo)/64)
-    // IEEE op order, cumulative bin counts, min-bin cut at each target
-    // rank, clamp, DECIMAL(28,6) sums.
-    "sketch_winsorized" ->
-      """WITH clean AS (SELECT event_type AS g, CAST(value AS DOUBLE) AS v
-        |      FROM events WHERE value IS NOT NULL),
-        |b AS (SELECT g, min(v) AS lo, max(v) AS hi,
-        |        CAST(count(*) AS BIGINT) AS n FROM clean GROUP BY 1),
-        |bn AS (SELECT c.g,
-        |        CASE WHEN b.hi = b.lo THEN 0
-        |          ELSE least(CAST(floor((c.v - b.lo)
-        |            / ((b.hi - b.lo) / 64)) AS BIGINT), 63) END AS bin,
-        |        b.lo, b.hi, b.n
-        |      FROM clean c JOIN b ON b.g = c.g),
-        |bc AS (SELECT g, bin, lo, hi, n, count(*) AS c
-        |      FROM bn GROUP BY 1, 2, 3, 4, 5),
-        |cm AS (SELECT g, bin, lo, hi, n,
-        |        sum(c) OVER (PARTITION BY g ORDER BY bin
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-        |      FROM bc),
-        |clo AS (SELECT g,
-        |        round((lo + (min(bin) + 1) * ((hi - lo) / 64)) * 1000000) / 1000000 AS cut_lo
-        |      FROM cm WHERE cum >= ceil(0.05 * n) GROUP BY g, lo, hi),
-        |chi AS (SELECT g,
-        |        round((lo + (min(bin) + 1) * ((hi - lo) / 64)) * 1000000) / 1000000 AS cut_hi
-        |      FROM cm WHERE cum >= ceil(0.95 * n) GROUP BY g, lo, hi),
-        |w AS (SELECT c.g, c.v, clo.cut_lo, chi.cut_hi,
-        |        greatest(least(c.v, chi.cut_hi), clo.cut_lo) AS cv
-        |      FROM clean c JOIN clo ON clo.g = c.g JOIN chi ON chi.g = c.g)
-        |SELECT g AS event_type, CAST(count(*) AS BIGINT) AS n,
-        |  min(cut_lo) AS cut_lo, min(cut_hi) AS cut_hi,
-        |  round((CAST(sum(CAST(round(v, 6) AS DECIMAL(28,6))) AS DOUBLE)
-        |    / CAST(count(*) AS DOUBLE)) * 1000000) / 1000000 AS mean_raw,
-        |  round((CAST(sum(CAST(round(cv, 6) AS DECIMAL(28,6))) AS DOUBLE)
-        |    / CAST(count(*) AS DOUBLE)) * 1000000) / 1000000 AS mean_winsorized
-        |FROM w GROUP BY g ORDER BY event_type""".stripMargin,
-
-    // Mirrors robustStatsCard: the sketch_winsorized histogram blocks
-    // plus the 0.5 cut (median), the trim-window filter, and the
-    // closed-form-bounded deviation histogram for MAD — identical IEEE
-    // op order throughout.
-    "sketch_robust_stats" ->
-      """WITH clean AS (SELECT event_type AS g, CAST(value AS DOUBLE) AS v
-        |      FROM events WHERE value IS NOT NULL),
-        |b AS (SELECT g, min(v) AS lo, max(v) AS hi,
-        |        CAST(count(*) AS BIGINT) AS n FROM clean GROUP BY 1),
-        |bn AS (SELECT c.g,
-        |        CASE WHEN b.hi = b.lo THEN 0
-        |          ELSE least(CAST(floor((c.v - b.lo)
-        |            / ((b.hi - b.lo) / 64)) AS BIGINT), 63) END AS bin,
-        |        b.lo, b.hi, b.n
-        |      FROM clean c JOIN b ON b.g = c.g),
-        |bc AS (SELECT g, bin, lo, hi, n, count(*) AS c
-        |      FROM bn GROUP BY 1, 2, 3, 4, 5),
-        |cm AS (SELECT g, bin, lo, hi, n,
-        |        sum(c) OVER (PARTITION BY g ORDER BY bin
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-        |      FROM bc),
-        |clo AS (SELECT g,
-        |        round((lo + (min(bin) + 1) * ((hi - lo) / 64)) * 1000000) / 1000000 AS cut_lo
-        |      FROM cm WHERE cum >= ceil(0.05 * n) GROUP BY g, lo, hi),
-        |chi AS (SELECT g,
-        |        round((lo + (min(bin) + 1) * ((hi - lo) / 64)) * 1000000) / 1000000 AS cut_hi
-        |      FROM cm WHERE cum >= ceil(0.95 * n) GROUP BY g, lo, hi),
-        |cmed AS (SELECT g,
-        |        round((lo + (min(bin) + 1) * ((hi - lo) / 64)) * 1000000) / 1000000 AS median_est
-        |      FROM cm WHERE cum >= ceil(0.5 * n) GROUP BY g, lo, hi),
-        |w AS (SELECT c.g, c.v, clo.cut_lo, chi.cut_hi, cmed.median_est,
-        |        b.lo, b.hi, b.n
-        |      FROM clean c JOIN clo ON clo.g = c.g JOIN chi ON chi.g = c.g
-        |      JOIN cmed ON cmed.g = c.g JOIN b ON b.g = c.g),
-        |dbn AS (SELECT g, n,
-        |        greatest(median_est - lo, hi - median_est) AS dhi,
-        |        CASE WHEN greatest(median_est - lo, hi - median_est) <= 0 THEN 0
-        |          ELSE least(CAST(floor(abs(v - median_est)
-        |            / (greatest(median_est - lo, hi - median_est) / 64))
-        |            AS BIGINT), 63) END AS bin
-        |      FROM w),
-        |dbc AS (SELECT g, bin, dhi, n, count(*) AS c
-        |      FROM dbn GROUP BY 1, 2, 3, 4),
-        |dcm AS (SELECT g, bin, dhi, n,
-        |        sum(c) OVER (PARTITION BY g ORDER BY bin
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-        |      FROM dbc),
-        |mad AS (SELECT g, round(((min(bin) + 1) * (dhi / 64)) * 1000000) / 1000000 AS mad_est
-        |      FROM dcm WHERE cum >= ceil(0.5 * n) GROUP BY g, dhi),
-        |agg AS (SELECT g, CAST(count(*) AS BIGINT) AS n,
-        |        min(cut_lo) AS cut_lo, min(cut_hi) AS cut_hi,
-        |        min(median_est) AS median_est,
-        |        round((CAST(sum(CAST(round(v, 6) AS DECIMAL(28,6))) AS DOUBLE)
-        |          / CAST(count(*) AS DOUBLE)) * 1000000) / 1000000 AS mean_raw,
-        |        CAST(sum(CASE WHEN v BETWEEN cut_lo AND cut_hi
-        |          THEN CAST(round(v, 6) AS DECIMAL(28,6)) END) AS DOUBLE) AS st,
-        |        CAST(sum(CASE WHEN v BETWEEN cut_lo AND cut_hi
-        |          THEN 1 ELSE 0 END) AS BIGINT) AS n_trimmed
-        |      FROM w GROUP BY g)
-        |SELECT agg.g AS event_type, n, cut_lo, cut_hi, median_est, mean_raw,
-        |  round((st / nullif(CAST(n_trimmed AS DOUBLE), 0.0)) * 1000000) / 1000000 AS mean_trimmed,
-        |  n_trimmed, mad_est
-        |FROM agg JOIN mad ON mad.g = agg.g ORDER BY event_type""".stripMargin,
-
-    // Rebuilds the per-source 16-perm signatures bit-for-bit (the
-    // dedup_lsh_curve shingle/hash SQL, grouped by source), folds the
-    // union signature with min(m) per p, and mirrors the agreement and
-    // containment-Jaccard arithmetic.
-    "sketch_minhash_union" ->
-      s"""WITH base AS ($docToks),
-         |toks AS (SELECT doc_id, unnest(toks) AS t,
-         |        generate_subscripts(toks, 1) AS i FROM base),
-         |sh0 AS (SELECT DISTINCT a.doc_id,
-         |        a.t || ' ' || b.t || ' ' || c.t AS shingle
-         |      FROM toks a
-         |      JOIN toks b ON b.doc_id = a.doc_id AND b.i = a.i + 1
-         |      JOIN toks c ON c.doc_id = a.doc_id AND c.i = a.i + 2),
-         |gsh AS (SELECT DISTINCT d.source AS g, s.shingle
-         |      FROM sh0 s JOIN documents d ON d.doc_id = s.doc_id),
-         |xh AS (SELECT g, shingle,
-         |        list_reduce(list_prepend(CAST(0 AS BIGINT),
-         |          list_transform(range(length(shingle)),
-         |            i -> ascii(substr(shingle, CAST(i + 1 AS INT), 1)))),
-         |          (acc, c) -> (acc * 131 + c) % 2147483647) AS x
-         |      FROM gsh),
-         |pm AS (SELECT CAST(p AS BIGINT) AS p FROM range(16) t(p)),
-         |hp AS (SELECT g, p,
-         |        (x * ((1103515245 * (p + 1)) % 2147483647)
-         |          + ((12345 * (p + 1)) % 2147483647)) % 2147483647 AS h
-         |      FROM xh CROSS JOIN pm),
-         |sig AS (SELECT g, p, min(h) AS m FROM hp GROUP BY 1, 2),
-         |un AS (SELECT p, min(m) AS mu FROM sig GROUP BY 1),
-         |ag AS (SELECT g, CAST(sum(CASE WHEN m = mu THEN 1 ELSE 0 END)
-         |          AS BIGINT) AS n_agree
-         |      FROM sig JOIN un USING (p) GROUP BY 1),
-         |sz AS (SELECT g, CAST(count(*) AS BIGINT) AS n_shingles
-         |      FROM gsh GROUP BY 1),
-         |us AS (SELECT CAST(count(DISTINCT shingle) AS BIGINT) AS n_union
-         |      FROM gsh)
-         |SELECT sz.g AS source, n_shingles, n_union, n_agree,
-         |  round((CAST(n_agree AS DOUBLE) / 16.0) * 1000000) / 1000000 AS est_jaccard,
-         |  round((CAST(n_shingles AS DOUBLE) / CAST(n_union AS DOUBLE)) * 1000000) / 1000000
-         |    AS exact_jaccard
-         |FROM sz JOIN ag ON ag.g = sz.g CROSS JOIN us
-         |ORDER BY source""".stripMargin,
-
-    "sketch_kmv" ->
-      """WITH keys AS (SELECT DISTINCT CAST(event_id AS BIGINT) AS key
-        |      FROM events WHERE event_id IS NOT NULL),
-        |h1 AS (SELECT ((key % 2147483648) * 2654435761) % 4294967296
-        |        AS h1 FROM keys),
-        |h2 AS (SELECT (xor(h1, h1 >> 16) * 1597334677) % 4294967296
-        |        AS h2 FROM h1),
-        |hs AS (SELECT DISTINCT xor(h2, h2 >> 16) AS h FROM h2),
-        |kmin AS (SELECT h FROM hs ORDER BY h LIMIT 1024),
-        |st AS (SELECT count(*) AS n_min, max(h) AS kth_min FROM kmin),
-        |ex AS (SELECT count(*) AS n_exact FROM keys),
-        |est AS (SELECT n_min, kth_min, n_exact,
-        |        CASE WHEN n_min < 1024 THEN CAST(n_min AS DOUBLE)
-        |          ELSE 1023e0 * 4294967296e0 / CAST(kth_min AS DOUBLE) END
-        |          AS e
-        |      FROM st CROSS JOIN ex)
-        |SELECT CAST(1024 AS BIGINT) AS k, n_min, kth_min, n_exact,
-        |  round(e, 6) AS est_distinct,
-        |  round((e / nullif(CAST(n_exact AS DOUBLE), 0.0) - 1e0) * 1000000) / 1000000
-        |    AS rel_error
-        |FROM est""".stripMargin,
 
     // Stage latency: first-to-first pairs, exact integer gap seconds,
     // quantile_cont for Spark's interpolated percentile.
@@ -7037,18 +5971,6 @@ object SparkEntry {
         |    AS mean_cond_entropy
         |FROM pd GROUP BY 1 ORDER BY source""".stripMargin,
 
-    "sample_curriculum" ->
-      """WITH s AS (SELECT doc_id, source,
-        |    coalesce(CAST(len(list_distinct(
-        |        list_filter(string_split(text, ' '), x -> x <> ''))) AS DOUBLE)
-        |      / nullif(len(list_filter(string_split(text, ' '), x -> x <> '')), 0),
-        |      0.0) AS score
-        |  FROM documents)
-        |SELECT doc_id, source, round(score, 6) AS score,
-        |  CAST(row_number() OVER (PARTITION BY source
-        |    ORDER BY score DESC, doc_id) AS BIGINT) AS rank_in_source
-        |FROM s ORDER BY rank_in_source, source, doc_id""".stripMargin,
-
     "text_skipgrams" ->
       s"""WITH base AS ($docToks),
          |tok AS (SELECT doc_id, unnest(toks) AS t,
@@ -7203,41 +6125,6 @@ object SparkEntry {
         |UNION ALL
         |SELECT l_orderkey, l_linenumber, 'l_discount', l_discount FROM lineitem
         |ORDER BY l_orderkey, l_linenumber, metric, value""".stripMargin,
-
-    // CMS registers rebuilt in SQL (same consts/hash as sketch_cms),
-    // dot-product per row, min over rows — plus the exact join count.
-    "sketch_join_size" -> {
-      val consts = (0 until 3).map(r =>
-        s"($r, ${1103515245L * (r + 1) % 2147483647L}, " +
-          s"${12345L * (r + 1) % 2147483647L})").mkString(", ")
-      def side(table: String, key: String, tag: String) =
-        s"""k$tag AS (SELECT DISTINCT CAST($key AS VARCHAR) AS k FROM $table),
-           |kh$tag AS (
-           |  SELECT k,
-           |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-           |      list_transform(range(length(k)),
-           |        i -> ascii(substr(k, CAST(i + 1 AS INT), 1)))),
-           |      (acc, c) -> (acc * 131 + c) % 2147483647) AS h
-           |  FROM k$tag),
-           |kb$tag AS (
-           |  SELECT k, r,
-           |    ((((h * a + b) % 2147483647) * 2654435761) % 4294967296) % 1024
-           |      AS bucket
-           |  FROM kh$tag CROSS JOIN consts),
-           |c$tag AS (
-           |  SELECT kb.r, kb.bucket, count(*) AS cnt
-           |  FROM $table e JOIN kb$tag kb ON CAST(e.$key AS VARCHAR) = kb.k
-           |  GROUP BY kb.r, kb.bucket)""".stripMargin
-      s"""WITH consts(r, a, b) AS (VALUES $consts),
-         |${side("orders", "o_custkey", "o")},
-         |${side("customer", "c_custkey", "c")},
-         |dots AS (SELECT o.r, sum(o.cnt * c.cnt) AS dot
-         |         FROM co o JOIN cc c ON o.r = c.r AND o.bucket = c.bucket
-         |         GROUP BY o.r)
-         |SELECT CAST((SELECT min(dot) FROM dots) AS BIGINT) AS join_size_est,
-         |  (SELECT count(*) FROM orders JOIN customer
-         |   ON o_custkey = c_custkey) AS join_size_exact""".stripMargin
-    },
 
     // Same sessionization-derived SCD2 CTE as merge_scd2, plus the
     // validity-interval lookup (valid_from inclusive, valid_to exclusive).
@@ -8582,9 +7469,8 @@ object SparkEntry {
     // Walk corpus: same sorted-neighbor indices and two-round Knuth hop
     // hash, 3 unrolled steps.
     "graph_walks" -> {
-      def hop(s: Int) =
-        s"(((((((f.start_node * 2 + f.walk) % 2147483648) * 2654435761) " +
-          s"% 4294967296 + $s) % 2147483648) * 2654435761) % 4294967296)"
+      val walkHash = samplingHashSql("(f.start_node * 2 + f.walk)")
+      def hop(s: Int) = s"(${samplingHashSql(s"($walkHash + $s)")})"
       val steps = (1 to 3).map { s =>
         val prev = s"f${s - 1}"
         s"""f$s AS (SELECT f.start_node, f.walk, CAST($s AS BIGINT) AS step,
@@ -9256,9 +8142,9 @@ object SparkEntry {
          |ded AS (SELECT min(doc_id) AS doc_id FROM kept GROUP BY text),
          |base AS (
          |  SELECT k.doc_id,
-         |    CASE WHEN ((k.doc_id % 2147483648) * 2654435761) % 4294967296
+         |    CASE WHEN ${samplingHashSql("k.doc_id")}
          |           < ${Sampling.splitCut(0.1)} THEN 'val'
-         |         WHEN ((k.doc_id % 2147483648) * 2654435761) % 4294967296
+         |         WHEN ${samplingHashSql("k.doc_id")}
          |           < ${Sampling.splitCut(0.2)} THEN 'test'
          |         ELSE 'train' END AS shard,
          |    CAST(len(regexp_extract_all(k.text,
@@ -9290,9 +8176,9 @@ object SparkEntry {
          |               / len(toks) <= 0.15),
          |ded AS (SELECT min(doc_id) AS doc_id FROM kept GROUP BY text),
          |sp AS (SELECT k.doc_id, k.toks, d2.lang,
-         |    CASE WHEN ((k.doc_id % 2147483648) * 2654435761) % 4294967296
+         |    CASE WHEN ${samplingHashSql("k.doc_id")}
          |           < ${Sampling.splitCut(0.1)} THEN 'val'
-         |         WHEN ((k.doc_id % 2147483648) * 2654435761) % 4294967296
+         |         WHEN ${samplingHashSql("k.doc_id")}
          |           < ${Sampling.splitCut(0.2)} THEN 'test'
          |         ELSE 'train' END AS split
          |  FROM kept k JOIN ded USING (doc_id)
@@ -9383,7 +8269,7 @@ object SparkEntry {
          |          ELSE 0.0 END AS rate
          |      FROM wt w LEFT JOIN tot ON tot.source = w.source),
          |samp AS (SELECT tr.* FROM train tr JOIN p ON p.source = tr.source
-         |         WHERE ((tr.doc_id % 2147483648) * 2654435761) % 4294967296
+         |         WHERE ${samplingHashSql("tr.doc_id")}
          |               < CAST(floor(p.rate * 4294967296) AS BIGINT)),
          |pk AS (SELECT doc_id, lang AS shard,
          |         CAST(len(regexp_extract_all(text,
@@ -10693,114 +9579,6 @@ object SparkEntry {
          |SELECT tr.doc_id, count(DISTINCT tr.shingle) AS n_shared_ngrams
          |FROM tr JOIN ev ON tr.shingle = ev.shingle
          |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // Exponential clocks -ln(u)/w on the shared ANSI hash; only the
-    // selected ROWS surface (integer columns), the IEEE clock values stay
-    // internal to the ranking on both engines.
-    "sample_weighted" ->
-      """WITH u AS (
-        |  SELECT doc_id, source, n_chars,
-        |    -ln((((doc_id % 2147483648) * 2654435761) % 4294967296 + 1)
-        |        / CAST(4294967296.0 AS DOUBLE)) / CAST(n_chars AS DOUBLE) AS clock
-        |  FROM documents WHERE n_chars > 0),
-        |k AS (SELECT doc_id, source, n_chars FROM u ORDER BY clock, doc_id LIMIT 60)
-        |SELECT doc_id, source, n_chars FROM k ORDER BY doc_id""".stripMargin,
-
-    // Priority = w / u with the same Knuth-hash uniform as
-    // sample_weighted; τ = min over the top-61 frame (0 when the
-    // population is smaller), ŵ = max(w, τ).
-    "sample_priority" ->
-      """WITH u AS (
-        |  SELECT doc_id, source, n_chars,
-        |    CAST(n_chars AS DOUBLE) /
-        |      ((((doc_id % 2147483648) * 2654435761) % 4294967296 + 1)
-        |        / CAST(4294967296.0 AS DOUBLE)) AS priority
-        |  FROM documents WHERE n_chars > 0),
-        |t AS (SELECT * FROM u ORDER BY priority DESC, doc_id LIMIT 61),
-        |tau AS (SELECT CASE WHEN count(*) > 60 THEN min(priority)
-        |          ELSE 0.0 END AS tau FROM t),
-        |s AS (SELECT * FROM t ORDER BY priority DESC, doc_id LIMIT 60)
-        |SELECT doc_id, source, n_chars, round(priority, 6) AS priority,
-        |  round(greatest(CAST(n_chars AS DOUBLE), tau), 6) AS w_hat
-        |FROM s CROSS JOIN tau ORDER BY doc_id""".stripMargin,
-
-    "sample_priority_total" ->
-      """WITH u AS (
-        |  SELECT doc_id, n_chars,
-        |    CAST(n_chars AS DOUBLE) /
-        |      ((((doc_id % 2147483648) * 2654435761) % 4294967296 + 1)
-        |        / CAST(4294967296.0 AS DOUBLE)) AS priority
-        |  FROM documents WHERE n_chars > 0),
-        |t AS (SELECT * FROM u ORDER BY priority DESC, doc_id LIMIT 61),
-        |tau AS (SELECT CASE WHEN count(*) > 60 THEN min(priority)
-        |          ELSE 0.0 END AS tau FROM t),
-        |s AS (SELECT doc_id, n_chars FROM t ORDER BY priority DESC, doc_id
-        |      LIMIT 60),
-        |est AS (SELECT sum(CAST(round(greatest(CAST(n_chars AS DOUBLE),
-        |          tau), 6) AS DECIMAL(28,6))) AS est_total
-        |      FROM s CROSS JOIN tau),
-        |tr AS (SELECT sum(CAST(n_chars AS DECIMAL(28,6))) AS true_total
-        |      FROM documents WHERE n_chars > 0)
-        |SELECT CAST(60 AS INT) AS k,
-        |  CAST(round(est_total, 6) AS DOUBLE) AS est_total,
-        |  CAST(round(true_total, 6) AS DOUBLE) AS true_total,
-        |  round((CAST(est_total - true_total AS DOUBLE)
-        |    / CAST(true_total AS DOUBLE)) * 1000000) / 1000000 AS rel_error
-        |FROM est CROSS JOIN tr""".stripMargin,
-
-    // Poisson bootstrap: per-(row, rep) Poisson(1) weight from the exact
-    // integer CDF thresholds at the Knuth hash of (id, rep); resample
-    // means DECIMAL-routed, interpolated quantiles via DECIMAL(24,12).
-    "sample_bootstrap_ci" ->
-      """WITH base AS (SELECT event_type AS g, event_id AS id,
-        |        CAST(round(value, 6) AS DECIMAL(18,6)) AS v FROM events),
-        |r AS (SELECT g, id, v, rep FROM base CROSS JOIN range(50) t(rep)),
-        |h AS (SELECT g, rep, v,
-        |        ((((id % 2147483648) * 31 + rep * 2654435761)
-        |          % 2147483648) * 2654435761) % 4294967296 AS hh FROM r),
-        |w AS (SELECT g, rep, v,
-        |        CASE WHEN hh < 1580030168 THEN 0
-        |             WHEN hh < 3160060337 THEN 1
-        |             WHEN hh < 3950075421 THEN 2
-        |             WHEN hh < 4213413783 THEN 3
-        |             WHEN hh < 4279248373 THEN 4 ELSE 5 END AS w FROM h),
-        |m AS (SELECT g, rep, CAST(sum(w) AS BIGINT) AS sw,
-        |        CAST(sum(v * w) AS DECIMAL(38,6)) AS swv
-        |      FROM w GROUP BY 1, 2),
-        |mm AS (SELECT g,
-        |        round((CAST(swv AS DOUBLE) / CAST(sw AS DOUBLE)) * 1000000000) / 1000000000 AS m
-        |      FROM m WHERE sw > 0),
-        |ci AS (SELECT g, count(*) AS n_resamples,
-        |        quantile_cont(m, 0.025) AS qlo,
-        |        quantile_cont(m, 0.5) AS qmed,
-        |        quantile_cont(m, 0.975) AS qhi
-        |      FROM mm GROUP BY 1),
-        |pt AS (SELECT g, count(*) AS n_rows,
-        |        CAST(sum(v) AS DECIMAL(38,6)) AS sv FROM base GROUP BY 1)
-        |SELECT pt.g AS event_type, n_rows, n_resamples,
-        |  round((CAST(sv AS DOUBLE) / CAST(n_rows AS DOUBLE)) * 1000000) / 1000000 AS mean,
-        |  CAST(round((qlo) * 1000000) / 1000000 AS DOUBLE) AS ci_lo,
-        |  CAST(round((qmed) * 1000000) / 1000000 AS DOUBLE)
-        |    AS ci_median,
-        |  CAST(round((qhi) * 1000000) / 1000000 AS DOUBLE) AS ci_hi
-        |FROM pt JOIN ci ON pt.g = ci.g
-        |ORDER BY event_type""".stripMargin,
-
-    // k-fold: Knuth-hash fold assignment, per-(fold, label) cells with
-    // within-fold shares.
-    "sample_kfold" ->
-      """WITH f AS (SELECT
-        |        ((doc_id % 2147483648) * 2654435761) % 4294967296 % 5
-        |          AS fold,
-        |        lang AS label FROM documents),
-        |c AS (SELECT fold, label, count(*) AS n FROM f GROUP BY 1, 2),
-        |t AS (SELECT fold, CAST(sum(n) AS BIGINT) AS fold_total
-        |      FROM c GROUP BY 1)
-        |SELECT c.fold AS fold, label, n, fold_total,
-        |  round((CAST(n AS DOUBLE) / CAST(fold_total AS DOUBLE)) * 1000000) / 1000000
-        |    AS frac_in_fold
-        |FROM c JOIN t ON c.fold = t.fold
-        |ORDER BY c.fold, label""".stripMargin,
 
     // The partitioned roundtrip is content-neutral, so the oracle is the
     // plain dim-filtered join over the source table.

@@ -1,5 +1,7 @@
 package graft
 import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -17,6 +19,37 @@ object Verify {
     case c => c.toString
   } + "\""
 
+  /** Dumps each frame of `queries` whose name passes `keep` to
+    * `outDir/<name>` as one parquet file and writes the manifest of
+    * attempted and failed names, `outDir/manifest.json`. A query that
+    * throws must not silently vanish from the sweep's denominator (its
+    * dump dir simply wouldn't exist and parity.py would count what's left
+    * — ADVICE r17 medium): parity.py fails when failed is non-empty or a
+    * swept name has no dump directory. A non-fatal error is recorded and
+    * the sweep goes on; a fatal one (an OutOfMemoryError, say) propagates
+    * and aborts the run, and the manifest written on the way out leaves
+    * every name not yet dumped as a missing dump. Returns the failed
+    * names.
+    */
+  def sweep(spark: SparkSession, sfDir: String, outDir: String,
+            queries: Map[String, (SparkSession, String) => DataFrame],
+            keep: String => Boolean = _ => true): Seq[String] = {
+    new java.io.File(outDir).mkdirs()
+    val swept = queries.keys.filter(keep).toSeq.sorted
+    val failed = scala.collection.mutable.ArrayBuffer.empty[String]
+    def arr(ss: Seq[String]) = ss.map(q).mkString("[", ",", "]")
+    try swept.foreach { name =>
+      try queries(name)(spark, sfDir).coalesce(1)
+        .write.mode("overwrite").parquet(s"$outDir/$name")
+      catch { case NonFatal(e) =>
+        failed += name
+        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      }
+    } finally Files.writeString(Paths.get(s"$outDir/manifest.json"),
+      s"""{"swept": ${arr(swept)}, "failed": ${arr(failed.toSeq)}}""")
+    failed.toSeq
+  }
+
   def main(args: Array[String]): Unit = {
     // args: <sfDir> <outDir> [keyRegex] — the optional regex restricts the
     // dump to matching query names (local iteration; the driver passes 2).
@@ -24,28 +57,10 @@ object Verify {
     val keep: String => Boolean =
       if (args.length > 2) s => s.matches(args(2)) else _ => true
     val spark = Sessions.local()
-    new java.io.File(outDir).mkdirs()
-    // Manifest of attempted/failed keys: a query that throws must not
-    // silently vanish from the sweep's denominator (the dump dir simply
-    // wouldn't exist and parity.py would count what's left — ADVICE r17
-    // medium). parity.py fails when failed is non-empty or a swept key
-    // has no dump directory.
-    val swept = SparkEntry.queries.keys.filter(keep).toSeq.sorted
-    val failed = scala.collection.mutable.ArrayBuffer.empty[String]
-    swept.foreach { name =>
-      try SparkEntry.queries(name)(spark, sfDir).coalesce(1)
-        .write.mode("overwrite").parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        failed += name
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-    }
+    sweep(spark, sfDir, outDir, SparkEntry.queries, keep)
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    def arr(ss: Seq[String]) = ss.map(q).mkString("[", ",", "]")
-    Files.writeString(Paths.get(s"$outDir/manifest.json"),
-      s"""{"swept": ${arr(swept)}, "failed": ${arr(failed.toSeq)}}""")
     spark.stop()
   }
 }

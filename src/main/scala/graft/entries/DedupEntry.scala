@@ -234,8 +234,7 @@ object DedupEntry {
     * MaxOraclePlanes domain instead of silently under-bucketing.
     */
   private def cappedAssignCtes: String = {
-    val seedPred =
-      "((vec_id % 2147483648) * 2654435761) % 4294967296 % 125 = 0"
+    val seedPred = s"${Sampling.samplingHashSql("vec_id")} % 125 = 0"
     s"""e AS ($embCte),
        |kk AS (SELECT CAST(count(*) AS BIGINT) AS k FROM embeddings
        |       WHERE $seedPred),
@@ -337,7 +336,7 @@ object DedupEntry {
        |  UNION ALL
        |  SELECT vec_id + 1000000, list_transform($idx, i ->
        |    v[i] * (CAST(1.0 AS DOUBLE) + CAST(0.003 AS DOUBLE) *
-       |      ((((vec_id * 64 + i - 1) % 2147483648) * 2654435761) % 4294967296
+       |      (${Sampling.samplingHashSql("(vec_id * 64 + i - 1)")}
        |        / CAST(2147483648.0 AS DOUBLE) - CAST(1.0 AS DOUBLE))))
        |  FROM e0)
        |SELECT a.id AS id_a, b.id AS id_b,

@@ -1008,7 +1008,6 @@ object Graph {
                          dstCol: String = "dst"): DataFrame = {
     require(walksPerNode >= 1 && length >= 1,
       s"need walksPerNode/length >= 1, got $walksPerNode/$length")
-    val M31 = 2147483648L; val M32 = 4294967296L; val Knuth = 2654435761L
     import org.apache.spark.sql.expressions.Window
     val und = edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
       .unionByName(edges.select(col(dstCol).as("u"), col(srcCol).as("v")))
@@ -1029,9 +1028,8 @@ object Graph {
       .localCheckpoint()
     var corpus = frontier
     for (s <- 1 to length) {
-      val h1 = pmod(pmod(col("start_node") * walksPerNode.toLong
-        + col("walk"), lit(M31)) * Knuth, lit(M32))
-      val h = pmod(pmod(h1 + lit(s.toLong), lit(M31)) * Knuth, lit(M32))
+      val h = Sampling.samplingHash(Sampling.samplingHash(
+        col("start_node") * walksPerNode.toLong + col("walk")) + lit(s.toLong))
       frontier = frontier
         .join(deg, frontier("cur") === deg("node"))
         .withColumn("pick", pmod(h, col("deg")))

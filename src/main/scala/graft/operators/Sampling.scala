@@ -30,6 +30,12 @@ object Sampling {
   def samplingHash(key: Column): Column =
     pmod(pmod(key.cast("long"), lit(M31)) * Knuth, lit(M32))
 
+  /** [[samplingHash]] of the SQL expression `x` as DuckDB SQL text, for
+    * oracles that must reproduce every draw bit for bit. Plain `%` equals
+    * `pmod` here: every key the oracles hash is non-negative.
+    */
+  def samplingHashSql(x: String): String = s"(($x % $M31) * $Knuth) % $M32"
+
   /** Keep ~fraction of rows, chosen by key hash — same rows every run,
     * every engine, any partitioning. Narrow (no shuffle).
     */
@@ -59,8 +65,9 @@ object Sampling {
       .drop("__r")
   }
 
-  /** Split-boundary hash cut for `assignSplit` — exposed so oracle SQL can
-    * embed the exact same literal.
+  /** The [[samplingHash]] cut below which a `frac` share of keys falls:
+    * `assignSplit`'s boundaries and `TextAnalysis.mlmMasking`'s mask
+    * rate. Exposed so oracle SQL can embed the exact same literal.
     */
   def splitCut(frac: Double): Long = (frac * M32).toLong
 

@@ -123,7 +123,7 @@ object Sketch {
     * multiply (second constant < 2³¹ so the product stays below 2⁶³).
     */
   def avalanche32(key: Column): Column = {
-    val h1 = Fns.pmod(Fns.pmod(key.cast("long"), lit(M31)) * Knuth, lit(M32))
+    val h1 = Sampling.samplingHash(key)
     val h2 = Fns.pmod(h1.bitwiseXOR(shiftright(h1, 16)) * 1597334677L, lit(M32))
     h2.bitwiseXOR(shiftright(h2, 16))
   }

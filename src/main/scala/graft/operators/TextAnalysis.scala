@@ -92,7 +92,6 @@ object TextAnalysis {
                  maxVocab: Int = 200, textCol: String = "text",
                  idCol: String = "doc_id"): DataFrame = {
     require(maskFrac > 0 && maskFrac <= 1, s"bad maskFrac $maskFrac")
-    val M31 = 2147483648L; val M32 = 4294967296L; val Knuth = 2654435761L
     val toks = docs.select(col(idCol).as("doc_id"),
         posexplode(Fns.tokens(col(textCol))).as(Seq("pos", "token")))
       .select(col("doc_id"), col("pos").cast("long").as("pos"), col("token"))
@@ -100,9 +99,8 @@ object TextAnalysis {
     // affine round (doc·c + pos)·K is linear in both inputs, so
     // neighboring docs would mask nearly the SAME positions (measured:
     // docs 1 and 2 select identical position sets under one round).
-    val h1 = pmod(pmod(col("doc_id"), lit(M31)) * Knuth, lit(M32))
-    val h = pmod(pmod(h1 + col("pos"), lit(M31)) * Knuth, lit(M32))
-    val cut = (maskFrac * M32.toDouble).toLong
+    val h = Sampling.samplingHash(Sampling.samplingHash(col("doc_id")) + col("pos"))
+    val cut = Sampling.splitCut(maskFrac)
     val vocabArr = vocabulary(docs, maxVocab, textCol, idCol)
       .agg(transform(array_sort(collect_list(
           struct(col("term_id"), col("term")))),

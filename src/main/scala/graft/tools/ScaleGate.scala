@@ -3,6 +3,7 @@ package graft.tools
 import graft.Bench
 import graft.Verify.{q => jq}
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Standing per-round SCALE GATE: run the most expensive registered
   * queries at sf0.1 and at a 10× ScaleUp fixture in ONE warm JVM,
@@ -189,7 +190,7 @@ object ScaleGate {
     // warmup on sf0.001 (JIT + classloading; not the timed data)
     Seq("q1_pricing", "ana_favorite_type").foreach { q =>
       try graft.SparkEntry.queries(q)(spark, "/root/testdata/sf0.001").count()
-      catch { case _: Throwable => () }
+      catch { case NonFatal(_) => () }
     }
 
     def time(name: String, dir: String): Double = {
@@ -270,7 +271,7 @@ object ScaleGate {
     println(line)
     try java.nio.file.Files.write(java.nio.file.Paths.get(outJson),
       (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    catch { case e: Throwable =>
+    catch { case NonFatal(e) =>
       System.err.println(s"[scalegate] could not write $outJson: ${e.getMessage}") }
     spark.stop()
     if (!pass) sys.exit(1)

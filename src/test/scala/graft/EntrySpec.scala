@@ -22,6 +22,16 @@ class EntrySpec extends SparkSpec {
       s"family names shadowing a remaining map entry: ${names.toSet.intersect(remaining)}")
   }
 
+  test("every family name carries its family's prefix, and no remaining name does") {
+    val remaining = SparkEntry.remainingQueries.keySet ++ SparkEntry.remainingOracleSql.keySet
+    SparkEntry.familiesByPrefix.foreach { case (prefix, qs) =>
+      val foreign = qs.map(_.name).filterNot(_.startsWith(prefix))
+      assert(foreign.isEmpty, s"the $prefix family declares foreign names: $foreign")
+      val left = remaining.filter(_.startsWith(prefix))
+      assert(left.isEmpty, s"$prefix names left in a remaining map: ${left.toSeq.sorted}")
+    }
+  }
+
   test("oracle SQL text is byte-identical to the pinned sha256 of every key") {
     // src/test/resources/oracle_sql.sha256 holds `name sha256` per key of
     // the oracle text. Moving a query family between files must not

@@ -5,10 +5,80 @@ Usage: python3 tools/parity.py /root/testdata/sf0.01 /tmp/v01
 Reads <out>/oracle_sql.json, runs each SQL in DuckDB over views named after
 the sf-dir parquet tables, reads the Spark parquet dump for the same key,
 sorts columns by name, and compares rows / dtypes / values exactly.
+
+Usage: python3 tools/parity.py --base /tmp/v01_base /tmp/v01
+Compares two Verify dumps, e.g. of a base commit and of a change:
+manifest.json and oracle_sql.json must be byte-equal, and each key's dump
+equal in columns, dtypes and rows under the same comparison.
 """
 import sys, os, json, glob
 import duckdb
 import pandas as pd
+
+
+def compare(sdf, odf, names=("spark", "oracle")):
+    """Problems found comparing two frames: columns sorted by name, then
+    row count, dtypes, and every value in row order (NaN equals NaN)."""
+    x, y = names
+    sdf = sdf.reindex(sorted(sdf.columns), axis=1)
+    odf = odf.reindex(sorted(odf.columns), axis=1)
+    problems = []
+    if list(sdf.columns) != list(odf.columns):
+        problems.append(f"cols {x}={list(sdf.columns)} {y}={list(odf.columns)}")
+    elif len(sdf) != len(odf):
+        problems.append(f"rows {x}={len(sdf)} {y}={len(odf)}")
+    else:
+        if list(map(str, sdf.dtypes)) != list(map(str, odf.dtypes)):
+            problems.append(f"dtypes {x}={list(map(str,sdf.dtypes))} {y}={list(map(str,odf.dtypes))}")
+        for c in sdf.columns:
+            a, b = sdf[c], odf[c]
+            if a.dtype == object or b.dtype == object:
+                # list/array cells: canonicalize to tuples so == is scalar
+                canon = lambda v: tuple(v.tolist()) if hasattr(v, "tolist") \
+                    else (tuple(v) if isinstance(v, list) else v)
+                a, b = a.map(canon), b.map(canon)
+            neq = ~((a == b) | (a.isna() & b.isna()))
+            if neq.any():
+                i = neq.idxmax()
+                problems.append(f"col {c}: {int(neq.sum())} diffs, first@{i}: {x}={a[i]!r} {y}={b[i]!r}")
+    return problems
+
+
+def read_dump(con, out_dir, k):
+    files = glob.glob(f"{out_dir}/{k}/*.parquet")
+    return con.sql(f"SELECT * FROM read_parquet({files!r})").df()
+
+
+def compare_dumps(base_dir, out_dir):
+    con = duckdb.connect()
+    read = lambda d, f: open(f"{d}/{f}", "rb").read() if os.path.exists(f"{d}/{f}") else None
+    fails = []
+    for f in ("manifest.json", "oracle_sql.json"):
+        if read(base_dir, f) is None or read(base_dir, f) != read(out_dir, f):
+            print(f"{f:24s} DIFFERS OR MISSING")
+            fails.append(f)
+    dirs = lambda d: {k for k in os.listdir(d) if os.path.isdir(f"{d}/{k}")}
+    bk, ck = dirs(base_dir), dirs(out_dir)
+    for k in sorted(bk | ck):
+        if k not in bk or k not in ck:
+            print(f"{k:24s} ONLY IN {'BASE' if k in bk else 'CHANGE'}")
+            fails.append(k)
+            continue
+        bdf, cdf = read_dump(con, base_dir, k), read_dump(con, out_dir, k)
+        problems = compare(bdf, cdf, ("base", "change"))
+        if problems:
+            fails.append(k)
+            print(f"{k:24s} FAIL  " + " | ".join(problems)[:400])
+        else:
+            print(f"{k:24s} EQUAL ({len(cdf)} rows)")
+    n = len(bk | ck) + 2
+    print(f"\n{n - len(fails)}/{n} equal (keys plus manifest and oracle_sql.json)"
+          + (f"; DIFFERING: {fails}" if fails else ""))
+    sys.exit(1 if fails else 0)
+
+
+if sys.argv[1] == "--base":
+    compare_dumps(sys.argv[2], sys.argv[3])
 
 sf_dir, out_dir = sys.argv[1], sys.argv[2]
 con = duckdb.connect()
@@ -39,8 +109,7 @@ else:
 for k in keys:
     if k in fails:
         continue  # failed/missing per manifest — already reported above
-    spark_files = glob.glob(f"{out_dir}/{k}/*.parquet")
-    sdf = con.sql(f"SELECT * FROM read_parquet({spark_files!r})").df()
+    sdf = read_dump(con, out_dir, k)
     if k not in oracle:
         print(f"{k:24s} rows-only: {len(sdf)} rows")
         continue
@@ -49,27 +118,7 @@ for k in keys:
     except Exception as e:
         print(f"{k:24s} ORACLE SQL ERROR: {str(e)[:160]}")
         fails.append(k); continue
-    sdf = sdf.reindex(sorted(sdf.columns), axis=1)
-    odf = odf.reindex(sorted(odf.columns), axis=1)
-    problems = []
-    if list(sdf.columns) != list(odf.columns):
-        problems.append(f"cols spark={list(sdf.columns)} oracle={list(odf.columns)}")
-    elif len(sdf) != len(odf):
-        problems.append(f"rows spark={len(sdf)} oracle={len(odf)}")
-    else:
-        if list(map(str, sdf.dtypes)) != list(map(str, odf.dtypes)):
-            problems.append(f"dtypes spark={list(map(str,sdf.dtypes))} oracle={list(map(str,odf.dtypes))}")
-        for c in sdf.columns:
-            a, b = sdf[c], odf[c]
-            if a.dtype == object or b.dtype == object:
-                # list/array cells: canonicalize to tuples so == is scalar
-                canon = lambda v: tuple(v.tolist()) if hasattr(v, "tolist") \
-                    else (tuple(v) if isinstance(v, list) else v)
-                a, b = a.map(canon), b.map(canon)
-            neq = ~((a == b) | (a.isna() & b.isna()))
-            if neq.any():
-                i = neq.idxmax()
-                problems.append(f"col {c}: {int(neq.sum())} diffs, first@{i}: spark={a[i]!r} oracle={b[i]!r}")
+    problems = compare(sdf, odf)
     if problems:
         fails.append(k)
         print(f"{k:24s} FAIL  " + " | ".join(problems)[:400])
