@@ -11,6 +11,18 @@ import org.apache.spark.sql.functions._
   */
 object Graph {
 
+  /** The symmetrized edge list (u, v): both orientations of every edge,
+    * duplicates collapsed — the undirected view most operators here walk.
+    */
+  private def undirected(edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
+    edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
+      .unionByName(edges.select(col(dstCol).as("u"), col(srcCol).as("v")))
+      .distinct()
+
+  /** Exact sum of 12-dp-quantized doubles as DECIMAL(18,12). */
+  private def dsum(c: org.apache.spark.sql.Column) =
+    sum(graft.functions.Fns.q12(c).cast("decimal(18,12)"))
+
   /** Per-node triangle counts of the undirected graph — the local
     * community-density signal behind clustering coefficients, spam-farm
     * detection, and near-dup cluster sanity checks (a dedup cluster
@@ -149,8 +161,6 @@ object Graph {
     val s0 = sources.select(col("node")).distinct()
       .join(nodes, Seq("node"), "left_semi")
     val nS = s0.agg(count(lit(1)).as("n_s"))
-    def dsum(c: org.apache.spark.sql.Column) =
-      sum(graft.functions.Fns.q12(c).cast("decimal(18,12)"))
     var ranks = nodes
       .join(s0.withColumn("__in_s", lit(1)), Seq("node"), "left")
       .crossJoin(broadcast(nS))
@@ -259,8 +269,6 @@ object Graph {
     val deg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
       .localCheckpoint()
     val nn = nodes.agg(count(lit(1)).as("n_nodes"))
-    def dsum(c: org.apache.spark.sql.Column) =
-      sum(graft.functions.Fns.q12(c).cast("decimal(18,12)"))
     var ranks = nodes.crossJoin(broadcast(nn))
       .select(col("node"), (lit(1.0) / col("n_nodes")).as("rank"), col("n_nodes"))
       .localCheckpoint()
@@ -317,9 +325,7 @@ object Graph {
               srcCol: String = "src", dstCol: String = "dst",
               seedCol: String = "node"): DataFrame = {
     require(hops >= 1, s"need hops >= 1, got $hops")
-    val und = edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
-      .unionByName(edges.select(col(dstCol).as("u"), col(srcCol).as("v")))
-      .distinct()
+    val und = undirected(edges, srcCol, dstCol)
     var dist = seeds.select(col(seedCol).as("node"), lit(0L).as("dist"))
     var frontier = dist
     for (i <- 1 to hops) {
@@ -356,9 +362,7 @@ object Graph {
                     seedCol: String = "node"): DataFrame = {
     require(hops >= 1, s"need hops >= 1, got $hops")
     def d6(c: org.apache.spark.sql.Column) = graft.functions.Fns.q6(c)
-    val und = edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
-      .unionByName(edges.select(col(dstCol).as("u"), col(srcCol).as("v")))
-      .distinct()
+    val und = undirected(edges, srcCol, dstCol)
     val s0 = seeds.select(col(seedCol).as("seed")).distinct()
     var dist = s0.select(col("seed"), col("seed").as("node"),
       lit(0L).as("dist"))
@@ -401,9 +405,7 @@ object Graph {
             srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
     require(k >= 1, s"need k >= 1, got $k")
     require(rounds >= 1, s"need rounds >= 1, got $rounds")
-    val und = edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
-      .unionByName(edges.select(col(dstCol).as("u"), col(srcCol).as("v")))
-      .distinct()
+    val und = undirected(edges, srcCol, dstCol)
     var nodes = und.select(col("u").as("node")).distinct()
     var deg: DataFrame = null
     for (_ <- 1 to rounds) {
@@ -432,9 +434,7 @@ object Graph {
                   srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
     require(minJaccard >= 0.0 && minJaccard <= 1.0,
       s"need minJaccard in [0,1], got $minJaccard")
-    val und = edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
-      .unionByName(edges.select(col(dstCol).as("u"), col(srcCol).as("v")))
-      .distinct()
+    val und = undirected(edges, srcCol, dstCol)
     val deg = und.groupBy(col("u").as("node")).agg(count(lit(1)).as("deg"))
     val common = und.as("a").join(und.as("b"),
         col("a.v") === col("b.v") && col("a.u") < col("b.u"))
@@ -461,9 +461,7 @@ object Graph {
     */
   def assortativity(edges: DataFrame, srcCol: String = "src",
                     dstCol: String = "dst"): DataFrame = {
-    val und = edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
-      .unionByName(edges.select(col(dstCol).as("u"), col(srcCol).as("v")))
-      .distinct()
+    val und = undirected(edges, srcCol, dstCol)
     val deg = und.groupBy(col("u").as("node")).agg(count(lit(1)).as("deg"))
     def dsum(c: org.apache.spark.sql.Column) =
       sum(c.cast("decimal(38,0)")).cast("double")
@@ -499,9 +497,7 @@ object Graph {
                      dstCol: String = "dst"): DataFrame = {
     require(rounds >= 1, s"need rounds >= 1, got $rounds")
     import org.apache.spark.sql.expressions.Window
-    val und = edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
-      .unionByName(edges.select(col(dstCol).as("u"), col(srcCol).as("v")))
-      .distinct()
+    val und = undirected(edges, srcCol, dstCol)
     var lab = initLabels.select(col("node"), col("label"))
     for (_ <- 1 to rounds) {
       val votes = lab.join(und, col("node") === col("u"))
@@ -539,9 +535,7 @@ object Graph {
   def adamicAdar(edges: DataFrame, minScore: Double = 0.0,
                  srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
     require(minScore >= 0.0, s"need minScore >= 0, got $minScore")
-    val und = edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
-      .unionByName(edges.select(col(dstCol).as("u"), col(srcCol).as("v")))
-      .distinct()
+    val und = undirected(edges, srcCol, dstCol)
     val deg = und.groupBy(col("u").as("node")).agg(count(lit(1)).as("deg"))
     // weight each potential common neighbor once, pre-expansion;
     // deg-1 nodes can never be a shared wedge apex (one edge can't pair)
@@ -579,9 +573,7 @@ object Graph {
   def powerlawTail(edges: DataFrame, xmin: Long = 5L,
                    srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
     require(xmin >= 1, s"need xmin >= 1, got $xmin")
-    val und = edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
-      .unionByName(edges.select(col(dstCol).as("u"), col(srcCol).as("v")))
-      .distinct()
+    val und = undirected(edges, srcCol, dstCol)
     val deg = und.groupBy(col("u").as("node")).agg(count(lit(1)).as("deg"))
     val tot = deg.agg(count(lit(1)).as("n_nodes"))
     deg.filter(col("deg") >= xmin)
@@ -609,9 +601,7 @@ object Graph {
   def richClub(edges: DataFrame, thresholds: Seq[Long] = Seq(2L, 4L, 8L),
                srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
     require(thresholds.nonEmpty, "need at least one threshold")
-    val und = edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
-      .unionByName(edges.select(col(dstCol).as("u"), col(srcCol).as("v")))
-      .distinct()
+    val und = undirected(edges, srcCol, dstCol)
     val deg = und.groupBy(col("u").as("node")).agg(count(lit(1)).as("deg"))
     thresholds.map { k =>
       val club = deg.filter(col("deg") > k).select("node")
@@ -644,9 +634,7 @@ object Graph {
     */
   def modularity(edges: DataFrame, labels: DataFrame,
                  srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
-    val und = edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
-      .unionByName(edges.select(col(dstCol).as("u"), col(srcCol).as("v")))
-      .distinct()
+    val und = undirected(edges, srcCol, dstCol)
     val lab = labels.select(col("node"), col("label"))
     val el = und
       .join(lab.select(col("node").as("u"), col("label").as("lu")), "u")
@@ -690,9 +678,7 @@ object Graph {
     */
   def conductance(edges: DataFrame, labels: DataFrame,
                   srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
-    val und = edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
-      .unionByName(edges.select(col(dstCol).as("u"), col(srcCol).as("v")))
-      .distinct()
+    val und = undirected(edges, srcCol, dstCol)
     val lab = labels.select(col("node"), col("label"))
     val el = und
       .join(lab.select(col("node").as("u"), col("label").as("lu")), "u")
@@ -783,8 +769,6 @@ object Graph {
       .union(e.select(col("dst").as("node"))).distinct()
       .localCheckpoint()
     val nn = nodes.agg(count(lit(1)).as("n_nodes"))
-    def dsum(c: org.apache.spark.sql.Column) =
-      sum(graft.functions.Fns.q12(c).cast("decimal(18,12)"))
     def normalized(raw: DataFrame, out: String): DataFrame = {
       // raw: (node, s DECIMAL) covering only nodes with a nonzero in/out
       // sum; total over the DECIMALs is exact, so the quotient is the
@@ -894,9 +878,7 @@ object Graph {
     def d6(c: org.apache.spark.sql.Column) = graft.functions.Fns.q6(c)
     def dsum(c: org.apache.spark.sql.Column) =
       sum(graft.functions.Fns.q12(c).cast("decimal(28,12)"))
-    val und = edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
-      .unionByName(edges.select(col(dstCol).as("u"), col(srcCol).as("v")))
-      .distinct().localCheckpoint()
+    val und = undirected(edges, srcCol, dstCol).localCheckpoint()
     val deg = und.groupBy(col("u").as("node")).agg(count(lit(1)).as("deg"))
       .localCheckpoint()
     // c = 2·max(deg) and n are loop-CONSTANT scalars consumed every
@@ -1009,9 +991,7 @@ object Graph {
     require(walksPerNode >= 1 && length >= 1,
       s"need walksPerNode/length >= 1, got $walksPerNode/$length")
     import org.apache.spark.sql.expressions.Window
-    val und = edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
-      .unionByName(edges.select(col(dstCol).as("u"), col(srcCol).as("v")))
-      .distinct()
+    val und = undirected(edges, srcCol, dstCol)
     val adjW = Window.partitionBy(col("u")).orderBy(col("v"))
     val adj = und
       .withColumn("idx", (row_number().over(adjW) - 1).cast("long"))
@@ -1060,9 +1040,7 @@ object Graph {
     */
   def avgNeighborDegree(edges: DataFrame, srcCol: String = "src",
                         dstCol: String = "dst"): DataFrame = {
-    val und = edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
-      .unionByName(edges.select(col(dstCol).as("u"), col(srcCol).as("v")))
-      .distinct()
+    val und = undirected(edges, srcCol, dstCol)
     val deg = und.groupBy(col("u").as("node")).agg(count(lit(1)).as("deg"))
     val perNode = und
       .join(deg.select(col("node").as("u"), col("deg").as("du")), "u")
@@ -1128,8 +1106,6 @@ object Graph {
       edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct())
     val nodes = e.select(col("src").as("node"))
       .unionByName(e.select(col("dst").as("node"))).distinct()
-    def dsum(c: org.apache.spark.sql.Column) =
-      sum(graft.functions.Fns.q12(c).cast("decimal(18,12)"))
     var x = ckpt(nodes.select(col("node"), lit(beta).as("x")))
     var itersRun = 0
     var converged = false
@@ -1175,9 +1151,7 @@ object Graph {
                            srcCol: String = "src",
                            dstCol: String = "dst"): DataFrame = {
     require(minCommon >= 1, s"need minCommon >= 1, got $minCommon")
-    val und = edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
-      .unionByName(edges.select(col(dstCol).as("u"), col(srcCol).as("v")))
-      .distinct()
+    val und = undirected(edges, srcCol, dstCol)
     val deg = und.groupBy(col("u").as("node")).agg(count(lit(1)).as("deg"))
     val withW = und.join(deg.select(col("node").as("v"), col("deg")), "v")
       .filter(col("deg") >= 2)

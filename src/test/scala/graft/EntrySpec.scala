@@ -208,6 +208,31 @@ class EntrySpec extends SparkSpec {
     }
   }
 
+  test("a failed derivation build leaves no memo entry, and the next lookup rebuilds") {
+    import org.apache.spark.sql.functions.{lit, raise_error}
+    val dir = "memo-key-only" // no declared tables, so nothing is listed
+    // one builder throws while building, the other builds a frame whose
+    // eager checkpoint job fails; each fails on its first call only
+    def failingOnce(name: String, fail: () => org.apache.spark.sql.DataFrame) = {
+      val builds = new java.util.concurrent.atomic.AtomicInteger()
+      val d = Derivation(name, Seq.empty, (s, _) =>
+        if (builds.incrementAndGet() == 1) fail() else s.range(3).toDF("id"))
+      (d, builds)
+    }
+    val cases = Seq(
+      failingOnce("_test_build_throws", () => throw new RuntimeException("injected")),
+      failingOnce("_test_checkpoint_throws",
+        () => spark.range(3).select(raise_error(lit("injected")).as("id"))))
+    cases.foreach { case (d, builds) =>
+      intercept[Exception](d(spark, dir))
+      val served = d(spark, dir)
+      assert(builds.get == 2, s"${d.name}: the lookup after a failure must build again")
+      assert(served.collect().map(_.getLong(0)).toSeq == Seq(0L, 1L, 2L))
+      assert((d(spark, dir) eq served) && builds.get == 2,
+        s"${d.name}: the rebuilt frame must be memoized")
+    }
+  }
+
   test("clearMemos unpersists every derivation's checkpoint blocks") {
     val dir = "/root/testdata/sf0.001"
     val rdds = SparkEntry.derivations.map { case (name, fn) =>

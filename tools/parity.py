@@ -92,20 +92,22 @@ fails = []
 # Verify's manifest makes a Spark-side query crash loud (ADVICE r17):
 # a thrown query has no dump dir, so without this the denominator would
 # silently shrink and the sweep would print e.g. "387/387 green".
+# A dump without a manifest (a Verify JVM killed before writing it) can
+# hide crashed queries, so it is an error, not a warning.
 mpath = f"{out_dir}/manifest.json"
-if os.path.exists(mpath):
-    man = json.load(open(mpath))
-    for k in man.get("failed", []):
-        print(f"{k:24s} SPARK QUERY FAILED (see Verify log)")
-        fails.append(k)
-    missing = sorted(set(man.get("swept", [])) - set(keys) - set(man.get("failed", [])))
-    for k in missing:
-        print(f"{k:24s} MISSING DUMP (swept but no parquet dir)")
-        fails.append(k)
-    keys = sorted(set(keys) | set(fails))
-else:
-    print("WARNING: no manifest.json — crashed queries would be invisible; "
-          "re-run graft.Verify from current HEAD")
+if not os.path.exists(mpath):
+    print(f"ERROR: no manifest.json in {out_dir} — crashed queries would be "
+          "invisible; re-run graft.Verify to completion", file=sys.stderr)
+    sys.exit(1)
+man = json.load(open(mpath))
+for k in man.get("failed", []):
+    print(f"{k:24s} SPARK QUERY FAILED (see Verify log)")
+    fails.append(k)
+missing = sorted(set(man.get("swept", [])) - set(keys) - set(man.get("failed", [])))
+for k in missing:
+    print(f"{k:24s} MISSING DUMP (swept but no parquet dir)")
+    fails.append(k)
+keys = sorted(set(keys) | set(fails))
 for k in keys:
     if k in fails:
         continue  # failed/missing per manifest — already reported above
