@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, functions}
+import org.apache.spark.sql.{Column, DataFrame, functions}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.Fns.{q6, q9}
 
 /** Time-series regularization: resample an irregular event stream onto a
   * fixed per-key grid and forward-fill the gaps — what every downstream
@@ -29,26 +30,46 @@ object TimeSeries {
     */
   def resampleForwardFill(events: DataFrame, keyCol: String, tsCol: String,
                           valueCol: String, stepSeconds: Long = 3600L): DataFrame = {
-    require(stepSeconds > 0, s"stepSeconds must be positive, got $stepSeconds")
-    // Pure integer floor (epoch − epoch mod step): no float division.
-    val bucket = timestamp_seconds(
+    val w = Window.partitionBy(col(keyCol)).orderBy(col("bucket"))
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    bucketGrid(events, keyCol, tsCol, valueCol, stepSeconds)
+      .select(col(keyCol), col("bucket"),
+        coalesce(col("n"), lit(0L)).as("n"),
+        last(col("v"), ignoreNulls = true).over(w).as("v_ff"))
+  }
+
+  /** The epoch-floored step bucket of `tsCol` (3600 = the UTC hour): a
+    * pure integer floor, epoch − epoch mod step, so no float division.
+    */
+  private def stepBucket(tsCol: String, stepSeconds: Long): Column =
+    timestamp_seconds(
       unix_timestamp(col(tsCol)) - pmod(unix_timestamp(col(tsCol)), lit(stepSeconds)))
-    val stepInterval = expr(s"INTERVAL $stepSeconds SECONDS")
-    val hourly = events
-      .groupBy(col(keyCol), bucket.as("bucket"))
+
+  /** Per-(key, step bucket) event count `n` and DECIMAL(18,6) value sum
+    * `v`, cast to `vType`.
+    */
+  private def bucketSums(events: DataFrame, keyCol: String, tsCol: String,
+                         valueCol: String, stepSeconds: Long, vType: String): DataFrame =
+    events.groupBy(col(keyCol), stepBucket(tsCol, stepSeconds).as("bucket"))
       .agg(count(lit(1)).as("n"),
-        sum(col(valueCol).cast("decimal(18,6)")).cast("double").as("v"))
+        sum(col(valueCol).cast("decimal(18,6)")).cast(vType).as("v"))
+
+  /** The resamplers' frame: each key's step grid from its first to its
+    * last bucket (a per-key bounds aggregate and a `sequence()` explode),
+    * left-joined to the bucket count `n` and DOUBLE value sum `v`.
+    */
+  private def bucketGrid(events: DataFrame, keyCol: String, tsCol: String,
+                         valueCol: String, stepSeconds: Long): DataFrame = {
+    require(stepSeconds > 0, s"stepSeconds must be positive, got $stepSeconds")
+    val bucket = stepBucket(tsCol, stepSeconds)
     val grid = events
       .groupBy(col(keyCol))
       .agg(min(bucket).as("b0"), max(bucket).as("b1"))
       .select(col(keyCol),
-        explode(sequence(col("b0"), col("b1"), stepInterval)).as("bucket"))
-    val w = Window.partitionBy(col(keyCol)).orderBy(col("bucket"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    grid.join(hourly, Seq(keyCol, "bucket"), "left")
-      .select(col(keyCol), col("bucket"),
-        coalesce(col("n"), lit(0L)).as("n"),
-        last(col("v"), ignoreNulls = true).over(w).as("v_ff"))
+        explode(sequence(col("b0"), col("b1"),
+          expr(s"INTERVAL $stepSeconds SECONDS"))).as("bucket"))
+    grid.join(bucketSums(events, keyCol, tsCol, valueCol, stepSeconds, "double"),
+      Seq(keyCol, "bucket"), "left")
   }
 
   /** Shared bucketing: per-(key, epoch-floored step bucket) event count
@@ -60,11 +81,43 @@ object TimeSeries {
   private def bucketize(events: DataFrame, keyCol: String, tsCol: String,
                         valueCol: String, stepSeconds: Long): DataFrame = {
     require(stepSeconds > 0, s"stepSeconds must be positive, got $stepSeconds")
-    val bucket = timestamp_seconds(
-      unix_timestamp(col(tsCol)) - pmod(unix_timestamp(col(tsCol)), lit(stepSeconds)))
-    events.groupBy(col(keyCol), bucket.as("bucket"))
-      .agg(count(lit(1)).as("n"),
-        sum(col(valueCol).cast("decimal(18,6)")).cast("decimal(18,6)").as("v"))
+    bucketSums(events, keyCol, tsCol, valueCol, stepSeconds, "decimal(18,6)")
+  }
+
+  /** [[bucketize]]'s observed (non-NULL) buckets, indexed t = 0, 1, … per
+    * key in bucket order and capped at the first `maxBuckets`: the series
+    * of the per-key quadratic and ordinal operators.
+    */
+  private def indexedBuckets(events: DataFrame, keyCol: String, tsCol: String,
+                             valueCol: String, stepSeconds: Long,
+                             maxBuckets: Int): DataFrame = {
+    val w = Window.partitionBy(col(keyCol)).orderBy(col("bucket"))
+    bucketize(events, keyCol, tsCol, valueCol, stepSeconds)
+      .filter(col("v").isNotNull)
+      .withColumn("t", (row_number().over(w) - 1).cast("long"))
+      .filter(col("t") < maxBuckets)
+  }
+
+  /** Each key's 6-dp hourly mean `vh` over the exact integer hour index
+    * h since the key's first event, as (k, h, vh): the remainder is
+    * subtracted first, so the double division is of an exact multiple
+    * (no truncation hazard).
+    */
+  private def hourMeans(events: DataFrame, keyCol: String, tsCol: String,
+                        valueCol: String): DataFrame = {
+    val e = events.select(col(keyCol).as("k"),
+      unix_micros(col(tsCol)).as("t"),
+      col(valueCol).cast("double").as("v"))
+    val bounds = e.groupBy("k").agg(min("t").as("tmin"))
+    e.join(bounds, "k")
+      .withColumn("h",
+        (((col("t") - col("tmin")) - (col("t") - col("tmin")) % 3600000000L)
+          / 3600000000L).cast("long"))
+      .groupBy("k", "h")
+      .agg(count(lit(1)).as("nh"),
+        sum(round(col("v"), 6).cast("decimal(28,6)")).as("sv"))
+      .select(col("k"), col("h"),
+        q6(col("sv").cast("double") / col("nh")).as("vh"))
   }
 
   /** Per-key fixed-step grid with LINEAR interpolation across the gaps —
@@ -95,26 +148,13 @@ object TimeSeries {
     */
   def resampleInterpolate(events: DataFrame, keyCol: String, tsCol: String,
                           valueCol: String, stepSeconds: Long = 3600L): DataFrame = {
-    require(stepSeconds > 0, s"stepSeconds must be positive, got $stepSeconds")
-    val bucket = timestamp_seconds(
-      unix_timestamp(col(tsCol)) - pmod(unix_timestamp(col(tsCol)), lit(stepSeconds)))
-    val agg = events
-      .groupBy(col(keyCol), bucket.as("bucket"))
-      .agg(count(lit(1)).as("n"),
-        sum(col(valueCol).cast("decimal(18,6)")).cast("double").as("v"))
-    val grid = events
-      .groupBy(col(keyCol))
-      .agg(min(bucket).as("b0"), max(bucket).as("b1"))
-      .select(col(keyCol),
-        explode(sequence(col("b0"), col("b1"),
-          expr(s"INTERVAL $stepSeconds SECONDS"))).as("bucket"))
     val wf = Window.partitionBy(col(keyCol)).orderBy(col("bucket"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val wb = Window.partitionBy(col(keyCol)).orderBy(col("bucket"))
       .rowsBetween(Window.currentRow, Window.unboundedFollowing)
     val ep = unix_timestamp(col("bucket"))
     val obsEp = when(col("v").isNotNull, ep)
-    grid.join(agg, Seq(keyCol, "bucket"), "left")
+    bucketGrid(events, keyCol, tsCol, valueCol, stepSeconds)
       .select(col(keyCol), col("bucket"), coalesce(col("n"), lit(0L)).as("n"),
         ep.as("__e"),
         last(col("v"), ignoreNulls = true).over(wf).as("__pv"),
@@ -122,7 +162,7 @@ object TimeSeries {
         first(col("v"), ignoreNulls = true).over(wb).as("__nv"),
         first(obsEp, ignoreNulls = true).over(wb).as("__ne"))
       .select(col(keyCol), col("bucket"), col("n"),
-        graft.functions.Fns.q6(
+        q6(
           when(col("__pv").isNull, col("__nv"))
             .when(col("__nv").isNull, col("__pv"))
             .when(col("__ne") === col("__pe"), col("__pv"))
@@ -175,7 +215,7 @@ object TimeSeries {
       .filter(col("v").isNotNull)
       .withColumn("__arr", collect_list(col("v")).over(w))
       .select(col(keyCol), col("bucket"), col("n"), col("v").cast("double").as("v"),
-        graft.functions.Fns.q6(
+        q6(
           (aggregate(
             // __arr is oldest..newest; element i (0-based) has age m-1-i,
             // so its weight is wArr(m-1-i) -> 1-based element_at(m-i).
@@ -229,7 +269,7 @@ object TimeSeries {
     val z = when(std > 0, (col("v").cast("double") - mean) / std)
     b.select(col(keyCol), col("bucket"), col("n"), col("v").cast("double").as("v"),
       col("nw"),
-      graft.functions.Fns.q6(z).as("z"),
+      q6(z).as("z"),
       coalesce(abs(z) > threshold, lit(false)).as("is_anomaly"))
   }
 
@@ -267,7 +307,7 @@ object TimeSeries {
     val r = when(den1 > 0 && den2 > 0,
       (nd * col("sxy") - col("sx") * col("sy")) / (sqrt(den1) * sqrt(den2)))
     agg.select(col(keyCol), col("n_pairs"),
-      graft.functions.Fns.q6(r).as("autocorr"))
+      q6(r).as("autocorr"))
   }
 
   /** ACF + PACF card to lag 3 per key — the ARIMA order-selection
@@ -295,16 +335,11 @@ object TimeSeries {
            valueCol: String, stepSeconds: Long = 3600L): DataFrame = {
     val wk = Window.partitionBy(col(keyCol))
     val wo = wk.orderBy(col("bucket"))
-    // every double that crosses a rounding edge rides the DECIMAL(24,12)
-    // cast first (the autocorr convention) — rounding happens in decimal
-    // space, so a value sitting exactly on a .5 boundary can't round
-    // differently across engines
-    def d6(c: org.apache.spark.sql.Column) = graft.functions.Fns.q6(c)
-    def dsum(c: org.apache.spark.sql.Column) = sum(c.cast("decimal(38,12)"))
+    def dsum(c: Column) = sum(c.cast("decimal(38,12)"))
     val centered = bucketize(events, keyCol, tsCol, valueCol, stepSeconds)
       .withColumn("nb", count(lit(1)).over(wk))
       .withColumn("sv", sum(col("v")).over(wk))
-      .withColumn("c", graft.functions.Fns.q9(col("v").cast("double") -
+      .withColumn("c", q9(col("v").cast("double") -
         col("sv").cast("double") / col("nb")))
     val agg = centered
       .withColumn("c1", functions.lag(col("c"), 1).over(wo))
@@ -317,7 +352,7 @@ object TimeSeries {
         dsum(col("c") * col("c2")).as("s2"),
         dsum(col("c") * col("c3")).as("s3"))
     def rho(s: String) =
-      graft.functions.Fns.q9(try_divide(col(s).cast("double"), col("s0").cast("double")))
+      q9(try_divide(col(s).cast("double"), col("s0").cast("double")))
     val r = agg.select(col(keyCol), col("n_buckets"),
       rho("s1").as("r1"), rho("s2").as("r2"), rho("s3").as("r3"))
     val phi22 = try_divide(col("r2") - col("r1") * col("r1"),
@@ -325,11 +360,11 @@ object TimeSeries {
     val d = r.withColumn("phi22", phi22)
       .withColumn("phi21", col("r1") * (lit(1.0) - col("phi22")))
     d.select(col(keyCol), col("n_buckets"),
-      d6(col("r1")).as("rho1"), d6(col("r2")).as("rho2"),
-      d6(col("r3")).as("rho3"),
-      d6(col("r1")).as("pacf1"),
-      d6(col("phi22")).as("pacf2"),
-      d6(try_divide(
+      q6(col("r1")).as("rho1"), q6(col("r2")).as("rho2"),
+      q6(col("r3")).as("rho3"),
+      q6(col("r1")).as("pacf1"),
+      q6(col("phi22")).as("pacf2"),
+      q6(try_divide(
         col("r3") - col("phi21") * col("r2") - col("phi22") * col("r1"),
         lit(1.0) - col("phi21") * col("r1") - col("phi22") * col("r2")))
         .as("pacf3"))
@@ -353,7 +388,6 @@ object TimeSeries {
     */
   def timeWeightedAvg(events: DataFrame, keyCol: String, tsCol: String,
                       valueCol: String): DataFrame = {
-    def d6(c: org.apache.spark.sql.Column) = graft.functions.Fns.q6(c)
     // (us, vq) ordering: microsecond ties break on the quantized value,
     // and rows identical in BOTH are interchangeable — so the v·dt
     // pairing is deterministic without needing an id column
@@ -369,9 +403,9 @@ object TimeSeries {
         sum(col("vq")).as("vsum"))
       .select(col(keyCol), col("n_samples"),
         coalesce(col("dur_us"), lit(0L)).as("duration_us"),
-        d6(try_divide(col("wsum").cast("double"), col("dur_us").cast("double")))
+        q6(try_divide(col("wsum").cast("double"), col("dur_us").cast("double")))
           .as("twa"),
-        d6(col("vsum").cast("double") / col("n_samples")).as("mean_simple"))
+        q6(col("vsum").cast("double") / col("n_samples")).as("mean_simple"))
   }
 
   /** Single-changepoint scan: for every split position t of a key's
@@ -411,9 +445,9 @@ object TimeSeries {
       .withColumn("__rk", row_number().over(wBest))
       .filter(col("__rk") === 1)
       .select(col(keyCol), col("bucket").as("split_bucket"), col("nk").as("n_buckets"),
-        graft.functions.Fns.q6(col("__score")).as("score"),
-        graft.functions.Fns.q6(col("__lm")).as("left_mean"),
-        graft.functions.Fns.q6(col("__rm")).as("right_mean"))
+        q6(col("__score")).as("score"),
+        q6(col("__lm")).as("left_mean"),
+        q6(col("__rm")).as("right_mean"))
   }
 
   /** Per-key OLS trend line of the bucketed value over the OBSERVED-bucket
@@ -454,9 +488,9 @@ object TimeSeries {
     val intercept = (col("sv") - slope * col("st").cast("double")) / nd
     val r2 = when(slope.isNotNull && denv > 0, cov * cov / (dent * denv))
     agg.select(col(keyCol), col("n_buckets"),
-      graft.functions.Fns.q6(slope).as("slope"),
-      graft.functions.Fns.q6(intercept).as("intercept"),
-      graft.functions.Fns.q6(r2).as("r2"))
+      q6(slope).as("slope"),
+      q6(intercept).as("intercept"),
+      q6(r2).as("r2"))
   }
 
   /** Lagged cross-correlation between each key's bucketed value-sum
@@ -494,7 +528,7 @@ object TimeSeries {
       (nd * col("sxy") - col("sx") * col("sy").cast("double")) /
         (sqrt(den1) * sqrt(den2)))
     agg.select(col(keyCol), col("n_pairs"),
-      graft.functions.Fns.q6(r).as("xcorr"))
+      q6(r).as("xcorr"))
   }
 
   /** Seasonal-strength decomposition: buckets are phased by
@@ -533,19 +567,19 @@ object TimeSeries {
       sum(col("sp2")).cast("double").as("s2"),
       // Σ_p s_p²/n_p: per-phase float division then a 6-dp DECIMAL sum so
       // the total is order-free.
-      sum(graft.functions.Fns.q6((col("sp") * col("sp")).cast("double") / col("np"))
+      sum(q6((col("sp") * col("sp")).cast("double") / col("np"))
         .cast("decimal(38,6)")).cast("double").as("ssb_raw"),
       // Peak-phase sort key is the 6-dp-rounded DOUBLE mean (not the raw
       // decimal ratio, whose quotient scale is engine-specific) so any
       // engine ranks phases identically; ties break to the earliest phase.
       max_by(col("phase"),
-        struct(graft.functions.Fns.q6(col("sp").cast("double") / col("np")), -col("phase")))
+        struct(q6(col("sp").cast("double") / col("np")), -col("phase")))
         .as("peak_phase"))
     val sst = col("s2") - col("s") * col("s") / col("n_rows")
     val ssb = col("ssb_raw") - col("s") * col("s") / col("n_rows")
     val strength = when(sst > 0, greatest(least(ssb / sst, lit(1.0)), lit(0.0)))
     agg.select(col(keyCol), col("n_rows"), col("n_phases"), col("peak_phase"),
-      graft.functions.Fns.q6(strength).as("strength"))
+      q6(strength).as("strength"))
   }
 
   /** SAX symbolization: each key's bucketed series, z-normalized with the
@@ -588,7 +622,7 @@ object TimeSeries {
       // integer division here.
       .withColumn("__seg", floor(col("__i") * segments / col("nk")).cast("long"))
       .withColumn("__z",
-        graft.functions.Fns.q6((col("v").cast("double") - col("mu")) / col("sigma"))
+        q6((col("v").cast("double") - col("mu")) / col("sigma"))
           .cast("decimal(18,6)"))
       .groupBy(col(keyCol), col("__seg"))
       .agg(count(lit(1)).as("ns"), sum(col("__z")).cast("double").as("sz"),
@@ -618,10 +652,8 @@ object TimeSeries {
                    valueCol: String, stepSeconds: Long = 3600L,
                    idCol: String = "event_id"): DataFrame = {
     require(stepSeconds > 0, s"stepSeconds must be positive, got $stepSeconds")
-    val bucket = timestamp_seconds(
-      unix_timestamp(col(tsCol)) - pmod(unix_timestamp(col(tsCol)), lit(stepSeconds)))
     val ord = struct(col(tsCol), col(idCol))
-    events.groupBy(col(keyCol), bucket.as("bucket"))
+    events.groupBy(col(keyCol), stepBucket(tsCol, stepSeconds).as("bucket"))
       .agg(count(lit(1)).as("n"),
         min(col(valueCol)).as("v_min"),
         max(col(valueCol)).as("v_max"),
@@ -645,19 +677,7 @@ object TimeSeries {
                             testHours: Int = 48): DataFrame = {
     require(periodHours >= 1, s"need periodHours >= 1, got $periodHours")
     require(testHours >= 1, s"need testHours >= 1, got $testHours")
-    val e = events.select(col(keyCol).as("k"),
-      unix_micros(col(tsCol)).as("t"),
-      col(valueCol).cast("double").as("v"))
-    val bounds = e.groupBy("k").agg(min("t").as("tmin"))
-    val hourly = e.join(bounds, "k")
-      .withColumn("h",
-        (((col("t") - col("tmin")) - (col("t") - col("tmin")) % 3600000000L)
-          / 3600000000L).cast("long"))
-      .groupBy("k", "h")
-      .agg(count(lit(1)).as("nh"),
-        sum(round(col("v"), 6).cast("decimal(28,6)")).as("sv"))
-      .select(col("k"), col("h"),
-        graft.functions.Fns.q6(col("sv").cast("double") / col("nh")).as("vh"))
+    val hourly = hourMeans(events, keyCol, tsCol, valueCol)
     val hmax = hourly.groupBy("k").agg(max("h").as("hmax"))
     val test = hourly.join(hmax, "k")
       .filter(col("h") > col("hmax") - testHours)
@@ -670,7 +690,7 @@ object TimeSeries {
         sum(round(abs(col("vh") - col("pred")), 6).cast("decimal(28,6)"))
           .as("sae"))
       .select(col("k"), col("n_test"),
-        graft.functions.Fns.q6(col("sae").cast("double") / col("n_test")).as("mae"))
+        q6(col("sae").cast("double") / col("n_test")).as("mae"))
   }
 
   /** Discrete-Fourier spectral fingerprint: per key, the DFT amplitude
@@ -691,25 +711,11 @@ object TimeSeries {
   def dftSpectrum(events: DataFrame, keyCol: String, tsCol: String,
                   valueCol: String, harmonics: Int = 4): DataFrame = {
     require(harmonics >= 1, s"need harmonics >= 1, got $harmonics")
-    val e = events.select(col(keyCol).as("k"),
-      unix_micros(col(tsCol)).as("t"),
-      col(valueCol).cast("double").as("v"))
-    val bounds = e.groupBy("k").agg(min("t").as("tmin"))
-    val hourly = e.join(bounds, "k")
-      // exact integer hour index: subtract the remainder first so the
-      // double division is of an exact multiple (no truncation hazard)
-      .withColumn("h",
-        (((col("t") - col("tmin")) - (col("t") - col("tmin")) % 3600000000L)
-          / 3600000000L).cast("long"))
-      .groupBy("k", "h")
-      .agg(count(lit(1)).as("nh"),
-        sum(round(col("v"), 6).cast("decimal(28,6)")).as("sv"))
-      .select(col("k"), col("h"),
-        graft.functions.Fns.q6(col("sv").cast("double") / col("nh")).as("vh"))
+    val hourly = hourMeans(events, keyCol, tsCol, valueCol)
     val n = hourly.groupBy("k").agg((max("h") + 1L).as("n"))
     val spine = hourly.sparkSession.range(1, harmonics + 1)
       .select(col("id").as("harmonic"))
-    def d6sum(c: org.apache.spark.sql.Column) =
+    def d6sum(c: Column) =
       sum(round(c, 6).cast("decimal(28,6)")).cast("double")
     val arg = lit(2.0) * lit(math.Pi) * col("harmonic").cast("double") *
       col("h").cast("double") / col("n").cast("double")
@@ -719,7 +725,7 @@ object TimeSeries {
         d6sum(col("vh") * cos(arg)).as("a"),
         d6sum(col("vh") * sin(arg)).as("b"))
       .select(col("k"), col("harmonic"), col("n_hours"),
-        graft.functions.Fns.q6(
+        q6(
           sqrt(col("a") * col("a") + col("b") * col("b")) /
             col("n_hours").cast("double")).as("amplitude"))
   }
@@ -760,8 +766,8 @@ object TimeSeries {
       .agg(count(lit(1)).as("n"), sum(col("dt")).as("st"),
         sum(round(col("v"), 6).cast("decimal(28,6)")).as("sv"))
       .select(col("k"), col("bucket"),
-        graft.functions.Fns.q6(col("st").cast("double") / col("n")).as("mt"),
-        graft.functions.Fns.q6(col("sv").cast("double") / col("n")).as("mv"))
+        q6(col("st").cast("double") / col("n")).as("mt"),
+        q6(col("sv").cast("double") / col("n")).as("mv"))
     val withA = b
       .join(anchors.select(col("k"), (col("bucket") + 1).as("bucket"),
         col("mt").as("lt0"), col("mv").as("lv0")), Seq("k", "bucket"), "left")
@@ -821,28 +827,24 @@ object TimeSeries {
                valueCol: String, stepSeconds: Long = 3600L,
                maxBuckets: Int = 512): DataFrame = {
     require(maxBuckets >= 2, s"need maxBuckets >= 2, got $maxBuckets")
-    val w = Window.partitionBy(col(keyCol)).orderBy(col("bucket"))
     // Eagerly checkpointed: the indexed-bucket frame feeds THREE plan
     // branches (both sides of the pair self-join and the residual join),
     // so an uncut plan re-runs bucketize's scan + keyed window per
     // branch. The frame is ≤ keys × maxBuckets rows — tiny.
-    val idx = bucketize(events, keyCol, tsCol, valueCol, stepSeconds)
-      .filter(col("v").isNotNull)
-      .withColumn("t", (row_number().over(w) - 1).cast("long"))
-      .filter(col("t") < maxBuckets)
+    val idx = indexedBuckets(events, keyCol, tsCol, valueCol, stepSeconds, maxBuckets)
       .select(col(keyCol).as("k"), col("t"), col("v"))
       .localCheckpoint()
     val pairs = idx.as("a").join(idx.as("b"),
         col("a.k") === col("b.k") && col("a.t") < col("b.t"))
       .select(col("a.k").as("k"),
-        graft.functions.Fns.q9((col("b.v").cast("double") - col("a.v").cast("double")) /
+        q9((col("b.v").cast("double") - col("a.v").cast("double")) /
           (col("b.t") - col("a.t")).cast("double")).as("ps"))
     val slope = pairs.groupBy("k").agg(
       count(lit(1)).as("n_pairs"),
       expr("percentile(ps, 0.5D)").as("slope_raw"))
     idx.join(slope, "k")
       .select(col("k"), col("n_pairs"), col("slope_raw"),
-        graft.functions.Fns.q9(col("v").cast("double") - col("slope_raw") *
+        q9(col("v").cast("double") - col("slope_raw") *
           col("t").cast("double")).as("r"))
       .groupBy(col("k"), col("n_pairs"), col("slope_raw"))
       .agg(count(lit(1)).as("n_buckets"),
@@ -851,9 +853,9 @@ object TimeSeries {
         // DECIMAL(24,12) routing before the 6-dp round: the interpolated
         // percentile is a double whose 6-dp half-boundary ties Spark and
         // DuckDB round differently (the resampleInterpolate discipline).
-        graft.functions.Fns.q6(col("slope_raw"))
+        q6(col("slope_raw"))
           .as("slope"),
-        graft.functions.Fns.q6(col("icept_raw"))
+        q6(col("icept_raw"))
           .as("intercept"))
   }
 
@@ -878,11 +880,7 @@ object TimeSeries {
                      m: Int = 4, maxBuckets: Int = 256): DataFrame = {
     require(m >= 2 && m <= 16, s"need m in [2,16], got $m")
     require(maxBuckets >= 2 * m, s"need maxBuckets >= 2m, got $maxBuckets")
-    val w = Window.partitionBy(col(keyCol)).orderBy(col("bucket"))
-    val idx = bucketize(events, keyCol, tsCol, valueCol, stepSeconds)
-      .filter(col("v").isNotNull)
-      .withColumn("t", (row_number().over(w) - 1).cast("long"))
-      .filter(col("t") < maxBuckets)
+    val idx = indexedBuckets(events, keyCol, tsCol, valueCol, stepSeconds, maxBuckets)
       .select(col(keyCol).as("k"), col("bucket"), col("t"), col("v"))
     val w2 = Window.partitionBy(col("k")).orderBy(col("t"))
     val leadCols = (0 until m).map(i =>
@@ -897,13 +895,13 @@ object TimeSeries {
     val pairs = sub.as("a").join(sub.as("b"),
         col("a.k") === col("b.k") && col("b.t") >= col("a.t") + m)
       .select(col("a.k").as("k"), col("a.t").as("pos_a"),
-        col("b.t").as("pos_b"), graft.functions.Fns.q9(d2).as("dist2"))
+        col("b.t").as("pos_b"), q9(d2).as("dist2"))
     val rw = Window.partitionBy(col("k"))
       .orderBy(col("dist2").asc, col("pos_a").asc, col("pos_b").asc)
     pairs.withColumn("rn", row_number().over(rw)).filter(col("rn") === 1)
       .join(nw, "k")
       .select(col("k").as(keyCol), col("n_windows"), col("pos_a"),
-        col("pos_b"), graft.functions.Fns.q6(col("dist2")).as("dist2"))
+        col("pos_b"), q6(col("dist2")).as("dist2"))
   }
 
   /** Spectral entropy per key: Shannon entropy of the normalized power
@@ -920,7 +918,7 @@ object TimeSeries {
                       valueCol: String, harmonics: Int = 4): DataFrame = {
     val spec = dftSpectrum(events, keyCol, tsCol, valueCol, harmonics)
       .select(col("k"),
-        graft.functions.Fns.q9(col("amplitude") * col("amplitude")).as("p2"))
+        q9(col("amplitude") * col("amplitude")).as("p2"))
     val tot = spec.groupBy("k").agg(
       count(lit(1)).as("n_harmonics"),
       sum(col("p2").cast("decimal(28,9)")).as("tot"))
@@ -932,7 +930,7 @@ object TimeSeries {
       .groupBy("k", "n_harmonics")
       .agg(sum(round(col("term"), 9).cast("decimal(28,9)")).as("h"))
       .select(col("k").as(keyCol), col("n_harmonics"),
-        graft.functions.Fns.q6(col("h").cast("double")).as("spectral_entropy"),
+        q6(col("h").cast("double")).as("spectral_entropy"),
         round(col("h").cast("double") /
           log(col("n_harmonics").cast("double")), 6).as("norm_entropy"))
   }
@@ -950,18 +948,14 @@ object TimeSeries {
   def permutationEntropy(events: DataFrame, keyCol: String, tsCol: String,
                          valueCol: String, stepSeconds: Long = 3600L,
                          maxBuckets: Int = 4096): DataFrame = {
-    val w = Window.partitionBy(col(keyCol)).orderBy(col("bucket"))
-    val idx = bucketize(events, keyCol, tsCol, valueCol, stepSeconds)
-      .filter(col("v").isNotNull)
-      .withColumn("t", (row_number().over(w) - 1).cast("long"))
-      .filter(col("t") < maxBuckets)
+    val idx = indexedBuckets(events, keyCol, tsCol, valueCol, stepSeconds, maxBuckets)
       .select(col(keyCol).as("k"), col("t"), col("v").as("v0"))
     val w2 = Window.partitionBy(col("k")).orderBy(col("t"))
     val tri = idx
       .withColumn("v1", lead(col("v0"), 1).over(w2))
       .withColumn("v2", lead(col("v0"), 2).over(w2))
       .filter(col("v1").isNotNull && col("v2").isNotNull)
-    def lt(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
+    def lt(a: Column, b: Column) =
       when(a, 1L).otherwise(0L).+(when(b, 1L).otherwise(0L))
     // rank of element i = #{j : (v_j, j) <lex (v_i, i)} — later equal
     // values rank higher, the standard Bandt–Pompe tie rule
@@ -1018,7 +1012,7 @@ object TimeSeries {
         // DECIMAL(24,12) routing before the 6-dp round: v − mean can
         // land exactly on a 6-dp half boundary, where the engines'
         // double-rounding disagrees (the resampleInterpolate discipline)
-        graft.functions.Fns.q6(col("v").cast("double") -
+        q6(col("v").cast("double") -
           col("sv").cast("double") / col("n_buckets").cast("double"))
           .cast("decimal(18,6)").as("dev"))
     val wOrd = Window.partitionBy(col("k")).orderBy(col("bucket"))
@@ -1036,7 +1030,7 @@ object TimeSeries {
       .select(col("k"), col("n_buckets"),
         round(col("up"), 6).as("cusum_up"),
         round(col("down"), 6).as("cusum_down"),
-        graft.functions.Fns.q6(sqrt(greatest(
+        q6(sqrt(greatest(
           col("svv") / col("n_buckets").cast("double") -
           (col("sv").cast("double") / col("n_buckets").cast("double")) *
           (col("sv").cast("double") / col("n_buckets").cast("double")),
@@ -1068,12 +1062,7 @@ object TimeSeries {
                   valueCol: String, stepSeconds: Long = 3600L,
                   maxBuckets: Int = 512): DataFrame = {
     require(maxBuckets >= 2, s"need maxBuckets >= 2, got $maxBuckets")
-    def d6(c: org.apache.spark.sql.Column) = graft.functions.Fns.q6(c)
-    val w = Window.partitionBy(col(keyCol)).orderBy(col("bucket"))
-    val idx = bucketize(events, keyCol, tsCol, valueCol, stepSeconds)
-      .filter(col("v").isNotNull)
-      .withColumn("t", (row_number().over(w) - 1).cast("long"))
-      .filter(col("t") < maxBuckets)
+    val idx = indexedBuckets(events, keyCol, tsCol, valueCol, stepSeconds, maxBuckets)
       .select(col(keyCol).as("k"), col("t"), col("v"))
       // 3 consumers (both self-join sides + ties) — the theilSen cut
       .localCheckpoint()
@@ -1096,8 +1085,8 @@ object TimeSeries {
         varS.as("var_raw"))
       .select(col("k").as(keyCol), col("nb").as("n_buckets"),
         col("n_pairs"), col("s_stat"),
-        d6(col("var_raw")).as("var_s"),
-        d6(when(col("var_raw") > 0,
+        q6(col("var_raw")).as("var_s"),
+        q6(when(col("var_raw") > 0,
             when(col("s_stat") > 0,
               (col("s_stat") - 1).cast("double") / sqrt(col("var_raw")))
               .when(col("s_stat") < 0,
@@ -1124,14 +1113,13 @@ object TimeSeries {
     */
   def runsTest(events: DataFrame, keyCol: String, tsCol: String,
                valueCol: String, stepSeconds: Long = 3600L): DataFrame = {
-    def d6(c: org.apache.spark.sql.Column) = graft.functions.Fns.q6(c)
     val b = bucketize(events, keyCol, tsCol, valueCol, stepSeconds)
       .filter(col("v").isNotNull)
       .select(col(keyCol).as("k"), col("bucket"),
         col("v").cast("double").as("v"))
     val med = b.groupBy("k").agg(
       count(lit(1)).as("n_buckets"),
-      d6(expr("percentile(v, 0.5D)")).as("med"))
+      q6(expr("percentile(v, 0.5D)")).as("med"))
     val w = Window.partitionBy(col("k")).orderBy(col("bucket"))
     val cls = b.join(med, "k")
       .filter(col("v") =!= col("med"))
@@ -1149,9 +1137,9 @@ object TimeSeries {
         (lit(2) * col("n_above") * col("n_below")).as("nn2"))
       .select(col("k").as(keyCol), col("n_buckets"), col("med"),
         col("n_above"), col("n_below"), col("n_runs"),
-        d6(lit(1.0) + col("nn2").cast("double") / col("n").cast("double"))
+        q6(lit(1.0) + col("nn2").cast("double") / col("n").cast("double"))
           .as("expected_runs"),
-        d6(when(col("n") > 1 && col("nn2") > col("n"),
+        q6(when(col("n") > 1 && col("nn2") > col("n"),
             (col("n_runs").cast("double") - (lit(1.0) +
               col("nn2").cast("double") / col("n").cast("double"))) /
             sqrt(col("nn2").cast("double") *
@@ -1179,7 +1167,6 @@ object TimeSeries {
     */
   def turningPoints(events: DataFrame, keyCol: String, tsCol: String,
                     valueCol: String, stepSeconds: Long = 3600L): DataFrame = {
-    def d6(c: org.apache.spark.sql.Column) = graft.functions.Fns.q6(c)
     val b = bucketize(events, keyCol, tsCol, valueCol, stepSeconds)
       .filter(col("v").isNotNull)
       .select(col(keyCol).as("k"), col("bucket"), col("v"))
@@ -1195,9 +1182,9 @@ object TimeSeries {
       .agg(count(lit(1)).as("n_buckets"), sum(col("tp")).as("n_turning"))
       .filter(col("n_buckets") >= 3)
       .select(col("k").as(keyCol), col("n_buckets"), col("n_turning"),
-        d6(lit(2.0) * (col("n_buckets") - 2).cast("double") / lit(3.0))
+        q6(lit(2.0) * (col("n_buckets") - 2).cast("double") / lit(3.0))
           .as("expected"),
-        d6((col("n_turning").cast("double") -
+        q6((col("n_turning").cast("double") -
             lit(2.0) * (col("n_buckets") - 2).cast("double") / lit(3.0)) /
           sqrt((lit(16.0) * col("n_buckets").cast("double") - lit(29.0)) /
             lit(90.0))).as("z"))
@@ -1230,17 +1217,12 @@ object TimeSeries {
     windows.foreach { w =>
       require(w >= 4 && (w & (w - 1)) == 0, s"window sizes must be dyadic >= 4, got $w")
     }
-    def d6(c: org.apache.spark.sql.Column) = graft.functions.Fns.q6(c)
     // exact log2 for the dyadic sizes (no libm in the x coordinate)
     val log2w = windows.map(w => (w, (31 - Integer.numberOfLeadingZeros(w)).toDouble))
       .foldLeft(lit(null).cast("double")) { case (acc, (w, x)) =>
         when(col("w") === w, lit(x)).otherwise(acc)
       }
-    val wk = Window.partitionBy(col(keyCol)).orderBy(col("bucket"))
-    val idx = bucketize(events, keyCol, tsCol, valueCol, stepSeconds)
-      .filter(col("v").isNotNull)
-      .withColumn("t", (row_number().over(wk) - 1).cast("long"))
-      .filter(col("t") < maxBuckets)
+    val idx = indexedBuckets(events, keyCol, tsCol, valueCol, stepSeconds, maxBuckets)
       .select(col(keyCol).as("k"), col("t"), col("v"))
     val nb = idx.groupBy("k").agg(count(lit(1)).as("n_buckets"))
     val rep = idx
@@ -1263,22 +1245,22 @@ object TimeSeries {
         sum((col("v") * col("v")).cast("decimal(38,12)")).as("svv"))
     val rs = chunks
       .withColumn("var9",
-        graft.functions.Fns.q9(col("svv").cast("double") / col("w").cast("double") -
+        q9(col("svv").cast("double") / col("w").cast("double") -
           (col("sv").cast("double") / col("w").cast("double")) *
           (col("sv").cast("double") / col("w").cast("double"))))
       .filter(col("var9") > 0)
       .withColumn("rs6",
-        graft.functions.Fns.q6(col("r_scaled").cast("double") / col("w").cast("double") /
+        q6(col("r_scaled").cast("double") / col("w").cast("double") /
           sqrt(col("var9")))
           .cast("decimal(18,6)"))
       .groupBy(col("k"), col("w"))
       .agg(count(lit(1)).as("n_chunks"),
         (sum(col("rs6")).cast("double") / count(lit(1)).cast("double"))
           .as("mrs_raw"))
-      .withColumn("mrs", d6(col("mrs_raw")).cast("decimal(18,6)"))
+      .withColumn("mrs", q6(col("mrs_raw")).cast("decimal(18,6)"))
       .filter(col("mrs") > 0)
     val pts = rs.select(col("k"), col("n_chunks"), log2w.as("x"),
-      graft.functions.Fns.q6((log(col("mrs").cast("double")) / log(lit(2.0)))).cast("decimal(18,6)").as("y"))
+      q6((log(col("mrs").cast("double")) / log(lit(2.0)))).cast("decimal(18,6)").as("y"))
     pts.groupBy("k")
       .agg(count(lit(1)).as("n_sizes"),
         sum(col("n_chunks")).as("n_windows"),
@@ -1291,7 +1273,7 @@ object TimeSeries {
       .join(nb, "k")
       .select(col("k").as(keyCol), col("n_buckets"), col("n_sizes"),
         col("n_windows"),
-        d6((col("n_sizes").cast("double") * col("sxy").cast("double") -
+        q6((col("n_sizes").cast("double") * col("sxy").cast("double") -
           col("sx").cast("double") * col("sy").cast("double")) /
           (col("n_sizes").cast("double") * col("sxx").cast("double") -
             col("sx").cast("double") * col("sx").cast("double")))
@@ -1338,7 +1320,7 @@ object TimeSeries {
       .withColumn("u", lag(col("y"), 1).over(w))
       .withColumn("v", lag(col("x"), 1).over(w))
       .filter(col("u").isNotNull)
-    def dsum(c: org.apache.spark.sql.Column) = sum(c.cast("decimal(38,0)"))
+    def dsum(c: Column) = sum(c.cast("decimal(38,0)"))
     val m = lagged.agg(count(lit(1)).as("n"),
       dsum(col("y")).as("sy"), dsum(col("u")).as("su"),
       dsum(col("v")).as("sv"), dsum(col("y") * col("y")).as("syy"),
@@ -1355,16 +1337,15 @@ object TimeSeries {
       cS("syy", "sy", "sy").as("cyy"), cS("suu", "su", "su").as("cuu"),
       cS("svv", "sv", "sv").as("cvv"), cS("suy", "su", "sy").as("cuy"),
       cS("svy", "sv", "sy").as("cvy"), cS("suv", "su", "sv").as("cuv"))
-    def d6(c: org.apache.spark.sql.Column) = graft.functions.Fns.q6(c)
     s.select(col("n").as("n_lags"),
-        d6(try_divide(col("cuy") * col("cuy"), col("cuu") * col("cyy")))
+        q6(try_divide(col("cuy") * col("cuy"), col("cuu") * col("cyy")))
           .as("r2_ar1"),
-        d6(try_divide(
+        q6(try_divide(
           (col("cuy") * col("cvv") - col("cvy") * col("cuv")) * col("cuy") +
             (col("cvy") * col("cuu") - col("cuy") * col("cuv")) * col("cvy"),
           (col("cuu") * col("cvv") - col("cuv") * col("cuv")) * col("cyy")))
           .as("r2_full"))
-      .withColumn("r2_gain", d6(col("r2_full") - col("r2_ar1")))
+      .withColumn("r2_gain", q6(col("r2_full") - col("r2_ar1")))
   }
 
   /** Bollinger bands over each key's bucketed value series: rolling mean
@@ -1394,7 +1375,6 @@ object TimeSeries {
     require(mult > 0.0, s"need mult > 0, got $mult")
     val w = Window.partitionBy(col(keyCol)).orderBy(col("bucket"))
       .rowsBetween(-(window - 1).toLong, Window.currentRow)
-    def d6(c: org.apache.spark.sql.Column) = graft.functions.Fns.q6(c)
     // ×10⁶-scaled exact integer moments (priceElasticity discipline): a
     // flat window yields a centered moment of EXACTLY zero — sd 0, %B
     // NULL — never the sqrt of double rounding noise.
@@ -1413,8 +1393,8 @@ object TimeSeries {
     val lower = ma - lit(mult) * sd
     rolled.select(col(keyCol), col("bucket"),
       col("v").cast("double").as("v"), col("nw").as("n_window"),
-      d6(ma).as("ma"), d6(upper).as("upper"), d6(lower).as("lower"),
-      d6(try_divide(col("v").cast("double") - lower, upper - lower))
+      q6(ma).as("ma"), q6(upper).as("upper"), q6(lower).as("lower"),
+      q6(try_divide(col("v").cast("double") - lower, upper - lower))
         .as("pct_b"))
   }
 
@@ -1446,7 +1426,6 @@ object TimeSeries {
   def dickeyFuller(events: DataFrame, keyCol: String, tsCol: String,
                    valueCol: String, stepSeconds: Long = 3600L): DataFrame = {
     val w = Window.partitionBy(col(keyCol)).orderBy(col("bucket"))
-    def d6(c: org.apache.spark.sql.Column) = graft.functions.Fns.q6(c)
     val pairs = bucketize(events, keyCol, tsCol, valueCol, stepSeconds)
       .withColumn("xv", functions.lag(col("v"), 1).over(w))
       .filter(col("xv").isNotNull && col("v").isNotNull)
@@ -1468,7 +1447,7 @@ object TimeSeries {
         sqrt(greatest((col("cyy") - gamma * col("cxy")) /
           ((col("n").cast("double") - lit(2.0)) * col("cxx")), lit(0.0)))))
     c.select(col(keyCol), col("n").as("n_obs"),
-        d6(gamma).as("gamma"), d6(tRaw).as("t_stat"))
+        q6(gamma).as("gamma"), q6(tRaw).as("t_stat"))
       .withColumn("reject_unit_root",
         when(col("t_stat").isNotNull, col("t_stat") < lit(-2.86)))
   }

@@ -48,6 +48,20 @@ class EntrySpec extends SparkSpec {
     assert(differ.isEmpty, s"oracle text changed or keys differ: ${differ.toSeq.sorted}")
   }
 
+  test("a staging dir is registered once per (tag, dir) and the exit cleanup removes it") {
+    import java.nio.file.{Files, Paths}
+    val before = SparkEntry.staged.size
+    val p = SparkEntry.stagingDir("spec", "/data/sf-0.001")
+    assert(SparkEntry.stagingDir("spec", "/data/sf-0.001") == p)
+    assert(SparkEntry.staged.size == before + 1 && SparkEntry.staged.contains(p))
+    assert(Paths.get(p).getFileName.toString ==
+      s"graft-spec-${ProcessHandle.current().pid()}-_data_sf_0.001")
+    Files.createDirectories(Paths.get(p, "in"))
+    Files.writeString(Paths.get(p, "in", "part-0.txt"), "x")
+    SparkEntry.cleanStaging()
+    assert(!Files.exists(Paths.get(p)), s"$p survived the cleanup")
+  }
+
   test("README.md query count matches the actual registry size") {
     val readme = scala.io.Source.fromFile("README.md", "UTF-8").mkString
     val m = "(\\d+) named queries".r.findFirstMatchIn(readme)
