@@ -110,9 +110,9 @@ object Derivation {
 
   /** Frees a memoized frame's checkpoint blocks: the checkpointed RDD is
     * the `LogicalRDD` at the root of its plan. A stopped context took its
-    * blocks with it.
+    * blocks with it. `etl.Pipeline` frees its staging checkpoints with it.
     */
-  private def unpersist(frame: DataFrame): Unit = frame.queryExecution.logical match {
+  private[graft] def unpersist(frame: DataFrame): Unit = frame.queryExecution.logical match {
     case r: LogicalRDD if !r.rdd.sparkContext.isStopped => r.rdd.unpersist()
     case _ => ()
   }

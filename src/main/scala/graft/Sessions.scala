@@ -1,5 +1,6 @@
 package graft
 
+import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.sql.SparkSession
 
 /** The local SparkSession the harness mains (Bench, Verify) and the dev
@@ -58,11 +59,38 @@ object Sessions {
       .config("spark.sql.codegen.cache.maxEntries",
         sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE_ENTRIES", "4096"))
       // catalog DDL queries must not depend on the driver's CWD
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-wh").toString)
+      .config("spark.sql.warehouse.dir", warehouseDir())
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel(logLevel)
     spark
   }
+
+  /** A fresh `<java.io.tmpdir>/graft-wh*` directory, deleted at exit. */
+  private[graft] def warehouseDir(): String =
+    deleteAtExit(Files.createTempDirectory("graft-wh").toString)
+
+  /** The paths [[deleteAtExit]] has registered in this process. */
+  private[graft] val atExit = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  private lazy val exitHook = sys.addShutdownHook(cleanAtExit())
+
+  /** Registers `path` for deletion with its contents when the JVM exits
+    * and returns it. The first registration adds one shutdown hook, which
+    * runs [[cleanAtExit]]; a path registered twice is deleted once.
+    */
+  private[graft] def deleteAtExit(path: String): String = {
+    if (atExit.add(path)) exitHook
+    path
+  }
+
+  /** Deletes every registered path with its contents. */
+  private[graft] def cleanAtExit(): Unit =
+    atExit.forEach(p => deleteTree(Paths.get(p)))
+
+  private[graft] def deleteTree(root: Path): Unit =
+    if (Files.exists(root)) {
+      val paths = Files.walk(root)
+      try paths.sorted(java.util.Comparator.reverseOrder[Path]()).forEach(p => Files.delete(p))
+      finally paths.close()
+    }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -50,35 +50,16 @@ object SparkEntry {
     Ingest.readTable(s, dir, name)
   }
 
-  /** The paths [[stagingDir]] has registered in this process. */
-  private[graft] val staged = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private lazy val stagingHook = sys.addShutdownHook(cleanStaging())
-
   /** The staging directory of an entry that writes files and reads them
     * back: `<java.io.tmpdir>/graft-<tag>-<pid>-<dir>`, the same path for
     * every build in one process (repeat builds overwrite it) and apart
     * from any other process's. The frames read it lazily, so it lives
-    * until the JVM exits: the first call for a path registers it with
-    * one shutdown hook, which runs [[cleanStaging]].
+    * until the JVM exits ([[Sessions.deleteAtExit]]).
     */
-  private[graft] def stagingDir(tag: String, dir: String): String = {
-    val path = new java.io.File(System.getProperty("java.io.tmpdir"),
+  private[graft] def stagingDir(tag: String, dir: String): String =
+    Sessions.deleteAtExit(new java.io.File(System.getProperty("java.io.tmpdir"),
       s"graft-$tag-${ProcessHandle.current().pid()}-" +
-        dir.replaceAll("[^A-Za-z0-9.]", "_")).toString
-    if (staged.add(path)) stagingHook
-    path
-  }
-
-  /** Deletes every registered staging directory with its contents. */
-  private[graft] def cleanStaging(): Unit =
-    staged.forEach(p => deleteTree(Paths.get(p)))
-
-  private def deleteTree(root: Path): Unit =
-    if (Files.exists(root)) {
-      val paths = Files.walk(root)
-      try paths.sorted(java.util.Comparator.reverseOrder[Path]()).forEach(p => Files.delete(p))
-      finally paths.close()
-    }
+        dir.replaceAll("[^A-Za-z0-9.]", "_")).toString)
 
   /** The shared co-purchase graph for every graph_* query: undirected
     * edges between parts co-occurring in ≥ 2 orders. Derivation is one
@@ -900,7 +881,8 @@ object SparkEntry {
     // op 17: the whole orchestration — staging frames mapped from events
     // (constant join keys so every transform's output count has a closed
     // form the oracle computes straight from events), Pipeline.run with
-    // cached staging + five observed writes, counts returned.
+    // staging checkpointed as rows + five observed fork-free writes,
+    // counts returned.
     "op17_pipeline_e2e" -> ((s, dir) => {
       val se = T(s, dir, "events").select(
         col("event_type").as("song"), lit("X").as("artist"),
@@ -920,7 +902,7 @@ object SparkEntry {
         lit(1.5).as("artist_latitude"), lit(2.5).as("artist_longitude"))
       // Result.counts is an eager Map, so the written tables can go now
       val out = Files.createTempDirectory("graft-op17")
-      val r = try etl.Pipeline.run(s, se, ss, out.toString) finally deleteTree(out)
+      val r = try etl.Pipeline.run(s, se, ss, out.toString) finally Sessions.deleteTree(out)
       require(r.failures.isEmpty, s"pipeline failures: ${r.failures.keySet}")
       import s.implicits._
       r.counts.toSeq.toDF("table_name", "n").orderBy("table_name")

@@ -119,10 +119,12 @@ object Ingest {
     * file arrives as (path, modificationTime, length, content BINARY),
     * exactly the opaque-bytes + metadata model `Multimodal` processes.
     * Here the bytes are UTF-8 text parts, decoded and re-split to lines
-    * so the content (not the path layout) is what gets verified.
+    * so the content (not the path layout) is what gets verified. Only
+    * the directory's `part-*` files are read: a filter, not a `part-*`
+    * glob path, which Spark would first probe as a literal directory.
     */
   def binaryFileLines(spark: SparkSession, path: String): DataFrame =
-    spark.read.format("binaryFile").load(s"$path/part-*")
+    spark.read.format("binaryFile").option("pathGlobFilter", "part-*").load(path)
       .select(explode(split(decode(col("content"), "UTF-8"), "\n")).as("text"))
       .filter(col("text") =!= "")
 

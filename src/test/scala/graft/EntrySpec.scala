@@ -50,16 +50,22 @@ class EntrySpec extends SparkSpec {
 
   test("a staging dir is registered once per (tag, dir) and the exit cleanup removes it") {
     import java.nio.file.{Files, Paths}
-    val before = SparkEntry.staged.size
+    val before = Sessions.atExit.size
     val p = SparkEntry.stagingDir("spec", "/data/sf-0.001")
     assert(SparkEntry.stagingDir("spec", "/data/sf-0.001") == p)
-    assert(SparkEntry.staged.size == before + 1 && SparkEntry.staged.contains(p))
+    assert(Sessions.atExit.size == before + 1 && Sessions.atExit.contains(p))
     assert(Paths.get(p).getFileName.toString ==
       s"graft-spec-${ProcessHandle.current().pid()}-_data_sf_0.001")
     Files.createDirectories(Paths.get(p, "in"))
     Files.writeString(Paths.get(p, "in", "part-0.txt"), "x")
-    SparkEntry.cleanStaging()
+    // the warehouse Sessions.local gives each session
+    val wh = Sessions.warehouseDir()
+    assert(Sessions.atExit.contains(wh) && Files.isDirectory(Paths.get(wh)))
+    assert(Paths.get(wh).getFileName.toString.startsWith("graft-wh"))
+    Files.writeString(Paths.get(wh, "table.txt"), "x")
+    Sessions.cleanAtExit()
     assert(!Files.exists(Paths.get(p)), s"$p survived the cleanup")
+    assert(!Files.exists(Paths.get(wh)), s"$wh survived the cleanup")
   }
 
   test("README.md query count matches the actual registry size") {

@@ -96,7 +96,13 @@ class IngestSpec extends SparkSpec {
     val back = Ingest.textRoundTrip(docs, dir)
       .select($"value").as[String].collect().sorted.toSeq
     assert(back == Seq("hello world", "third", "zweite zeile"))
-    // the same part files ingested as raw binary (the multimodal shape)
+    // the same part files ingested as raw binary (the multimodal shape);
+    // the write's _SUCCESS marker and a non-part file stay out, each
+    // given a line that would show if it were read
+    import java.nio.file.Paths
+    assert(Files.exists(Paths.get(dir, "_SUCCESS")))
+    Files.writeString(Paths.get(dir, "_SUCCESS"), "marker\n")
+    Files.writeString(Paths.get(dir, "notes.txt"), "not a part\n")
     val bin = Ingest.binaryFileLines(spark, dir)
       .select($"text").as[String].collect().sorted.toSeq
     assert(bin == back)

@@ -57,6 +57,52 @@ class PipelineSpec extends SparkSpec {
     assert(r.counts.keySet.contains("time") && r.counts.keySet.contains("users"))
   }
 
+  test("run frees its staging and writes the modes of a plain parquet write") {
+    import scala.jdk.CollectionConverters._
+    val cacheEmpty = spark.sharedState.cacheManager.isEmpty
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
+    val out = Files.createTempDirectory("graft-pipe-modes").toString
+    val (se, ss) = fixtures
+    val r = Pipeline.run(spark, se, ss, out)
+    assert(r.failures.isEmpty, r.failures.mkString(","))
+    assert(spark.sparkContext.getPersistentRDDs.keySet == persisted, "staging blocks leaked")
+    assert(spark.sharedState.cacheManager.isEmpty == cacheEmpty)
+    // (directory?, mode) of every path a write created, its root included
+    def modes(root: String): Set[(Boolean, String)] = {
+      val paths = Files.walk(java.nio.file.Paths.get(root))
+      try paths.iterator.asScala.map(p => Files.isDirectory(p) ->
+        java.nio.file.attribute.PosixFilePermissions.toString(Files.getPosixFilePermissions(p))).toSet
+      finally paths.close()
+    }
+    val ref = s"${Files.createTempDirectory("graft-pipe-ref")}/plain"
+    Seq((2023, 11, "a")).toDF("year", "month", "x").write.partitionBy("year", "month").parquet(ref)
+    assert(modes(ref).map(_._1) == Set(true, false))
+    Seq("time", "users", "songs", "artists", "songplays").foreach { t =>
+      assert(modes(s"$out/$t") == modes(ref), t)
+    }
+  }
+
+  test("the fork-free file system sets exactly the requested permission bits") {
+    import java.nio.file.attribute.PosixFilePermissions
+    import org.apache.hadoop.fs.Path
+    import org.apache.hadoop.fs.permission.FsPermission
+    val fs = new graft.etl.ForkFreeLocalFileSystem
+    fs.initialize(java.net.URI.create("file:///"), new org.apache.hadoop.conf.Configuration())
+    val root = Files.createTempDirectory("graft-fs-modes")
+    Seq("0644" -> "rw-r--r--", "0755" -> "rwxr-xr-x", "0600" -> "rw-------", "0700" -> "rwx------")
+      .foreach { case (mode, want) =>
+        Seq(Files.createTempFile(root, "f", ""), Files.createTempDirectory(root, "d")).foreach { p =>
+          fs.setPermission(new Path(p.toUri), new FsPermission(mode))
+          assert(PosixFilePermissions.toString(Files.getPosixFilePermissions(p)) == want, p)
+        }
+      }
+    // the sticky bit, which java.nio cannot set, still reaches the directory
+    val sticky = Files.createTempDirectory(root, "t")
+    fs.setPermission(new Path(sticky.toUri), new FsPermission("1777"))
+    assert((Files.getAttribute(sticky, "unix:mode").asInstanceOf[Int] & Integer.parseInt("7777", 8)) ==
+      Integer.parseInt("1777", 8))
+  }
+
   test("bucketed tables join with zero shuffle exchanges") {
     val facts = (1L to 1000L).map(i => (i % 100, i, i * 2.0))
       .toDF("key", "id", "amount")
