@@ -3,6 +3,7 @@ package graft.analytics
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.Fns.{oneRowDouble, q12, q6}
 
 /** The analytic capability the star schema exists to serve ("which songs
   * Sparkify's users listen to", reference README.md:9). The reference ships
@@ -175,9 +176,9 @@ object Analytics {
         .select(lit(k).as("threshold"),
           col("users_ge"),
           coalesce(col("events_ge"), lit(0L)).as("events_ge"),
-          graft.functions.Fns.q6(col("users_ge").cast("double") /
+          q6(col("users_ge").cast("double") /
             col("n_users").cast("double")).as("frac_users"),
-          graft.functions.Fns.q6(coalesce(col("events_ge"), lit(0L)).cast("double") /
+          q6(coalesce(col("events_ge"), lit(0L)).cast("double") /
             col("n_events").cast("double")).as("frac_events"))
     }
     rows.reduce(_ unionByName _)
@@ -195,9 +196,9 @@ object Analytics {
       .agg(count(lit(1)).as("n_active_days"), sum(col("dau")).as("sdau"))
       .join(mau, "month")
       .select(col("month"), col("n_active_days"), col("mau"),
-        graft.functions.Fns.q6(col("sdau").cast("double") /
+        q6(col("sdau").cast("double") /
           col("n_active_days").cast("double")).as("avg_dau"),
-        graft.functions.Fns.q6(col("sdau").cast("double") /
+        q6(col("sdau").cast("double") /
           col("n_active_days").cast("double") /
           col("mau").cast("double")).as("stickiness"))
   }
@@ -239,6 +240,16 @@ object Analytics {
       .agg(count(lit(1)).as("n"))
   }
 
+  /** The row-stochastic matrix of a [[transitions]] frame: each
+    * (from_type, to_type) pair's 12-dp share `p` of its row's count.
+    */
+  private def transitionProbs(t: DataFrame): DataFrame = {
+    val tot = t.groupBy("from_type").agg(sum(col("n")).as("tot"))
+    t.join(tot, "from_type")
+      .select(col("from_type"), col("to_type"),
+        q12(col("n").cast("double") / col("tot")).as("p"))
+  }
+
   /** Stationary distribution of the [[transitions]] Markov chain by
     * POWER ITERATION — "where does a user's session settle in the long
     * run", the chain-level summary a raw transition-count matrix can't
@@ -277,11 +288,7 @@ object Analytics {
     // (the whole query is driver-latency-bound at that size). All four
     // are ≤|types|²-row frames; values are unchanged (deterministic
     // inputs, checkpoint is a materialization boundary only).
-    val tot = t.groupBy("from_type").agg(sum(col("n")).as("tot"))
-    val p = t.join(tot, "from_type")
-      .select(col("from_type"), col("to_type"),
-        graft.functions.Fns.q12(col("n").cast("double") / col("tot")).as("p"))
-      .localCheckpoint()
+    val p = transitionProbs(t).localCheckpoint()
     // (state, k, dang) — k carried as a column so the per-round rebuild
     // needs no second broadcast join for the uniform dangling share;
     // `dang` (state has no outgoing transition) is loop-INVARIANT, so
@@ -295,8 +302,7 @@ object Analytics {
         .distinct(), Seq("state"), "left")
       .select(col("state"), col("k"), col("issrc").isNull.as("dang"))
       .localCheckpoint()
-    def dsum(c: Column) =
-      sum(graft.functions.Fns.q12(c).cast("decimal(18,12)"))
+    def dsum(c: Column) = sum(q12(c).cast("decimal(18,12)"))
     // The dangling mass Σ_{dangling} q12(pi) rides each checkpoint
     // action as an Observation (r20: zero extra jobs — the anti-join
     // aggregate + its broadcast build per round are gone) and re-enters
@@ -305,7 +311,7 @@ object Analytics {
     // BigDecimal.doubleValue both ways.
     val spark = t.sparkSession
     def dmAgg = sum(when(col("dang"),
-      graft.functions.Fns.q12(col("pi"))).cast("decimal(18,12)")).as("dm")
+      q12(col("pi"))).cast("decimal(18,12)")).as("dm")
     def dmOf(obs: org.apache.spark.sql.Observation): Double =
       Option(obs.get("dm"))
         .map(_.asInstanceOf[java.math.BigDecimal].doubleValue).getOrElse(0.0)
@@ -322,7 +328,7 @@ object Analytics {
       val obs = org.apache.spark.sql.Observation()
       pi = types
         .join(flow, Seq("state"), "left")
-        .crossJoin(broadcast(graft.functions.Fns.oneRowDouble(spark, "dm", dmVal)))
+        .crossJoin(broadcast(oneRowDouble(spark, "dm", dmVal)))
         .select(col("state"), col("dang"),
           (coalesce(col("s").cast("double"), lit(0.0)) +
             col("dm") / col("k")).as("pi"))
@@ -331,7 +337,7 @@ object Analytics {
       dmVal = dmOf(obs)
     }
     pi.select(col("state").as("event_type"),
-      graft.functions.Fns.q6(col("pi")).as("pi"))
+      q6(col("pi")).as("pi"))
   }
 
   /** Entropy rate of the [[transitions]] Markov chain:
@@ -353,29 +359,22 @@ object Analytics {
                         tsCol: String = "ts",
                         idCol: String = "event_id",
                         precomputedTransitions: Option[DataFrame] = None): DataFrame = {
-    def d6(c: Column) =
-      graft.functions.Fns.q6(c)
     // One transitions frame for BOTH legs (r19): the stationary chain
     // and the per-edge entropy terms read the identical matrix; without
     // the shared frame this operator paid the corpus pass twice.
-    val t0 = precomputedTransitions.getOrElse(
+    val t = precomputedTransitions.getOrElse(
       transitions(events, userCol, typeCol, tsCol, idCol).localCheckpoint())
     val pi = markovStationary(events, iters, userCol, typeCol, tsCol, idCol,
-        precomputedTransitions = Some(t0))
+        precomputedTransitions = Some(t))
       .select(col("event_type").as("from_type"), col("pi"))
-    val t = t0
-    val tot = t.groupBy("from_type").agg(sum(col("n")).as("tot"))
-    val p = t.join(tot, "from_type")
-      .select(col("from_type"),
-        graft.functions.Fns.q12(col("n").cast("double") / col("tot")).as("p"))
-    val h = p.join(pi, "from_type")
+    val h = transitionProbs(t).join(pi, "from_type")
       .agg(sum(round(col("pi") * col("p") * log(col("p")), 12)
           .cast("decimal(18,12)")).as("sh"),
         count(lit(1)).as("n_transitions"))
     h.crossJoin(broadcast(pi.agg(count(lit(1)).as("n_states"))))
       .select(col("n_states"), col("n_transitions"),
-        d6(-col("sh").cast("double")).as("entropy_rate"),
-        d6(try_divide(-col("sh").cast("double"),
+        q6(-col("sh").cast("double")).as("entropy_rate"),
+        q6(try_divide(-col("sh").cast("double"),
           log(col("n_states").cast("double")))).as("normalized"))
   }
 
@@ -393,8 +392,6 @@ object Analytics {
     */
   def diffInDiff(events: DataFrame, treatedExpr: Column, postExpr: Column,
                  valueCol: String = "value"): DataFrame = {
-    def d6(c: Column) =
-      graft.functions.Fns.q6(c)
     val cells = events
       .filter(col(valueCol).isNotNull)
       .groupBy(treatedExpr.cast("boolean").as("treated"),
@@ -402,7 +399,7 @@ object Analytics {
       .agg(count(lit(1)).as("n"),
         sum(col(valueCol).cast("decimal(24,6)")).as("sv"))
       .select(col("treated"), col("post"), col("n"),
-        d6(col("sv").cast("double") / col("n").cast("double")).as("mean"))
+        q6(col("sv").cast("double") / col("n").cast("double")).as("mean"))
     def cell(tr: Boolean, po: Boolean, name: String) =
       cells.filter(col("treated") === tr && col("post") === po)
         .select(col("n").as(s"n_$name"), col("mean").as(s"mean_$name"))
@@ -413,7 +410,7 @@ object Analytics {
       .select(col("n_t_pre"), col("mean_t_pre"), col("n_t_post"),
         col("mean_t_post"), col("n_c_pre"), col("mean_c_pre"),
         col("n_c_post"), col("mean_c_post"),
-        d6((col("mean_t_post") - col("mean_t_pre")) -
+        q6((col("mean_t_post") - col("mean_t_pre")) -
           (col("mean_c_post") - col("mean_c_pre"))).as("did"))
   }
 
@@ -529,8 +526,6 @@ object Analytics {
   def sessionEntropy(events: DataFrame, gap: String = "30 minutes",
                      userCol: String = "user_id", typeCol: String = "event_type",
                      tsCol: String = "ts", idCol: String = "event_id"): DataFrame = {
-    def d6(c: org.apache.spark.sql.Column) =
-      graft.functions.Fns.q6(c)
     val w = Window.partitionBy(col(userCol)).orderBy(col(tsCol), col(idCol))
     val sid = events
       .withColumn("new_s",
@@ -548,8 +543,7 @@ object Analytics {
         sum(round(col("c") * log(col("c")), 6).cast("decimal(18,6)"))
           .as("sclogc"))
       .select(col(userCol), col("n"),
-        graft.functions.Fns.q6((log(col("n")) - col("sclogc").cast("double") /
-          col("n").cast("double")))
+        q6((log(col("n")) - col("sclogc").cast("double") / col("n").cast("double")))
           .cast("decimal(18,6)").as("h6"))
     sess.groupBy(col(userCol))
       .agg(count(lit(1)).as("n_sessions"), sum(col("n")).as("n_events"),
@@ -557,7 +551,7 @@ object Analytics {
           .as("mraw"),
         max(col("h6")).as("maxh"))
       .select(col(userCol), col("n_sessions"), col("n_events"),
-        d6(col("mraw")).as("mean_entropy"),
+        q6(col("mraw")).as("mean_entropy"),
         col("maxh").cast("double").as("max_entropy"))
   }
 
@@ -620,7 +614,6 @@ object Analytics {
       .join(broadcast(items.select(col("p_partkey").as("l_partkey"),
         col(groupCol).as("grp"))), "l_partkey")
       .select(col("grp"), scaled(col("pu")).as("x"), scaled(col("q")).as("y"))
-    def d6(c: Column) = graft.functions.Fns.q6(c)
     val m = rows.groupBy("grp")
       .agg(count(lit(1)).as("n"), sum(col("x")).as("sx"),
         sum(col("y")).as("sy"), sum(col("x") * col("x")).as("sxx"),
@@ -633,8 +626,8 @@ object Analytics {
       cS("sxx", "sx", "sx").as("cxx"), cS("sxy", "sx", "sy").as("cxy"),
       cS("syy", "sy", "sy").as("cyy"))
     c.select(col(groupCol), col("n"),
-      d6(try_divide(col("cxy"), col("cxx"))).as("elasticity"),
-      d6(try_divide(col("cxy") * col("cxy"), col("cxx") * col("cyy")))
+      q6(try_divide(col("cxy"), col("cxx"))).as("elasticity"),
+      q6(try_divide(col("cxy") * col("cxy"), col("cxx") * col("cyy")))
         .as("r2"))
   }
 
@@ -665,7 +658,7 @@ object Analytics {
         sum(col("x")).as("n_events"),
         sum((col("i") * col("x")).cast("decimal(38,0)")).as("six"))
       .select(col(typeCol), col("n_users"), col("n_events"),
-        graft.functions.Fns.q6(try_divide(
+        q6(try_divide(
           lit(2.0) * col("six").cast("double") -
             (col("n_users") + 1L).cast("double") *
               col("n_events").cast("double"),
@@ -689,7 +682,7 @@ object Analytics {
     sessionSequences(events, gap, userCol, typeCol, tsCol, idCol)
       .groupBy("sequence")
       .agg(count(lit(1)).as("n_sessions"),
-        graft.functions.Fns.q6(avg(col("n_events"))).as("avg_len"))
+        q6(avg(col("n_events"))).as("avg_len"))
       .orderBy(col("n_sessions").desc, col("sequence").asc)
       .limit(k)
   }
@@ -765,9 +758,9 @@ object Analytics {
       .join(freq.select(col("i").as("i2"), col("c").as("c2")), "i2")
       .crossJoin(broadcast(nb))
       .select(col("i1"), col("i2"), col("c12"), col("c1"), col("c2"),
-        graft.functions.Fns.q6(col("c12").cast("double") / col("n_baskets")).as("support"),
-        graft.functions.Fns.q6(col("c12").cast("double") / col("c1")).as("confidence"),
-        graft.functions.Fns.q6(col("c12").cast("double") * col("n_baskets") / (col("c1") * col("c2")))
+        q6(col("c12").cast("double") / col("n_baskets")).as("support"),
+        q6(col("c12").cast("double") / col("c1")).as("confidence"),
+        q6(col("c12").cast("double") * col("n_baskets") / (col("c1") * col("c2")))
           .as("lift"))
       .orderBy(col("lift").desc, col("i1").asc, col("i2").asc)
       .limit(k)
@@ -897,9 +890,9 @@ object Analytics {
       .withColumn("z", try_divide(col(valCol) - col("mean"), col("sd")))
       .filter(abs(col("z")) > zThreshold)
       .select(col(idCol), col(groupCol), col(valCol),
-        graft.functions.Fns.q6(col("mean")).as("group_mean"),
-        graft.functions.Fns.q6(col("sd")).as("group_sd"),
-        graft.functions.Fns.q6(col("z")).as("zscore"))
+        q6(col("mean")).as("group_mean"),
+        q6(col("sd")).as("group_sd"),
+        q6(col("z")).as("zscore"))
   }
 
   /** Robust per-group outliers via median absolute deviation — the
@@ -930,16 +923,14 @@ object Analytics {
                   groupCol: String = "event_type", valCol: String = "value",
                   idCol: String = "event_id"): DataFrame = {
     val med = events.groupBy(col(groupCol))
-      .agg(graft.functions.Fns.q6(percentile(col(valCol), lit(0.5))).as("med"))
+      .agg(q6(percentile(col(valCol), lit(0.5))).as("med"))
     val mad = events.join(broadcast(med), groupCol)
       .groupBy(col(groupCol))
       .agg(first(col("med")).as("med"),
-        graft.functions.Fns.q6(
-          percentile(abs(col(valCol) - col("med")), lit(0.5))).as("mad"))
+        q6(percentile(abs(col(valCol) - col("med")), lit(0.5))).as("mad"))
     events.join(broadcast(mad), groupCol)
       .withColumn("score",
-        graft.functions.Fns.q6(
-          try_divide(abs(col(valCol) - col("med")), col("mad"))))
+        q6(try_divide(abs(col(valCol) - col("med")), col("mad"))))
       .filter(col("score") > kThreshold)
       .select(col(idCol), col(groupCol), col(valCol),
         col("med").as("group_median"), col("mad").as("group_mad"),
@@ -1051,10 +1042,10 @@ object Analytics {
       (lit(1.0) / col("n_a") + lit(1.0) / col("n_b")))
     val z = when(se > 0, (pa - pb) / se)
     agg.select(col("n_a"), col("x_a"), col("n_b"), col("x_b"),
-      graft.functions.Fns.q6(pa).as("rate_a"),
-      graft.functions.Fns.q6(pb).as("rate_b"),
-      graft.functions.Fns.q6((pa - pb)).as("lift"),
-      graft.functions.Fns.q6(z).as("z"),
+      q6(pa).as("rate_a"),
+      q6(pb).as("rate_b"),
+      q6((pa - pb)).as("lift"),
+      q6(z).as("z"),
       coalesce(abs(z) > 1.96, lit(false)).as("significant"))
   }
 
@@ -1106,8 +1097,7 @@ object Analytics {
       // double ÷ double of two exactly-shared DECIMAL inputs: one IEEE op,
       // bit-identical across engines (decimal division scale rules differ).
       .withColumn("credit",
-        graft.functions.Fns.q6(col("w").cast("double") / col("wsum").cast("double"))
-          .cast("decimal(18,6)"))
+        q6(col("w").cast("double") / col("wsum").cast("double")).cast("decimal(18,6)"))
       .groupBy(col("channel"))
       .agg(count(lit(1)).as("n_touches"),
         round(sum(col("credit")).cast("double"), 6).as("credit"))
@@ -1167,10 +1157,8 @@ object Analytics {
       fa.join(fb, "u").filter(col("tb") > col("ta"))
         .select(((d - d % 1000000L) / 1000000L).cast("long").as("dt_s"))
         .agg(count(lit(1)).as("n_users"),
-          graft.functions.Fns.q6(percentile(col("dt_s"), lit(0.5)))
-            .as("median_s"),
-          graft.functions.Fns.q6(percentile(col("dt_s"), lit(0.9)))
-            .as("p90_s"))
+          q6(percentile(col("dt_s"), lit(0.5))).as("median_s"),
+          q6(percentile(col("dt_s"), lit(0.9))).as("p90_s"))
         .select(lit(i).as("stage_idx"), lit(a).as("from_stage"),
           lit(b).as("to_stage"), col("n_users"), col("median_s"),
           col("p90_s"))
@@ -1241,7 +1229,7 @@ object Analytics {
         "type_b")
       .select(col("type_a"), col("type_b"), col("n_a"), col("n_b"),
         col("n_both"),
-        graft.functions.Fns.q6(col("n_both").cast("double") /
+        q6(col("n_both").cast("double") /
           (col("n_a") + col("n_b") - col("n_both")).cast("double"))
           .as("jaccard"))
   }

@@ -1,5 +1,7 @@
 package graft.etl
 
+import java.util.concurrent.{Callable, ExecutionException, Executors}
+import scala.util.control.NonFatal
 import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 
 /** End-to-end ELT orchestration (reference ops 3,4,5,17: create_tables.py +
@@ -55,7 +57,8 @@ object Pipeline {
     // next write's scan would leave idle (the guide's §2.6 pattern; the
     // reference's insert loop is sequential only because Python is).
     // Per-statement log-and-continue semantics are unchanged — each
-    // thread catches its own failure, like etl.py:27–30/49–50.
+    // thread catches its own non-fatal failure, like etl.py:27–30/49–50;
+    // a fatal error is rethrown from run.
     val writes: Seq[(String, DataFrame, Seq[String])] = Seq(
       ("time", Transforms.buildTime(se), Nil),
       ("users", Transforms.buildUsers(se), Nil),
@@ -63,30 +66,34 @@ object Pipeline {
       ("artists", Transforms.buildArtists(se, ss), Nil),
       ("songplays", songplays, Seq("year", "month")))
 
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    val futures = writes.map { case (name, df, parts) =>
-      scala.concurrent.Future {
-        // Row counts ride the write itself via observe() — no second
-        // scan of the written table (a full re-read per write would be
-        // a genuine extra pass at 100 TB).
-        try {
-          val obs = Observation(s"rows_$name")
-          val observed = df.observe(obs, count(lit(1)).as("n"))
-          val w = observed.write.options(ForkFreeLocalFileSystem.writerOptions).mode(saveMode)
-          (if (parts.nonEmpty) w.partitionBy(parts: _*) else w)
-            .parquet(s"$outDir/$name")
-          name -> Right(obs.get("n").asInstanceOf[Long])
-        } catch { case e: Throwable => name -> Left(e) }
+    val pool = Executors.newFixedThreadPool(3)
+    try {
+      val tasks = writes.map { case (name, df, parts) =>
+        val write: Callable[(String, Either[Throwable, Long])] = () =>
+          // Row counts ride the write itself via observe() — no second
+          // scan of the written table (a full re-read per write would be
+          // a genuine extra pass at 100 TB).
+          try {
+            val obs = Observation(s"rows_$name")
+            val observed = df.observe(obs, count(lit(1)).as("n"))
+            val w = observed.write.options(ForkFreeLocalFileSystem.writerOptions).mode(saveMode)
+            (if (parts.nonEmpty) w.partitionBy(parts: _*) else w)
+              .parquet(s"$outDir/$name")
+            name -> Right(obs.get("n").asInstanceOf[Long])
+          } catch { case NonFatal(e) => name -> Left(e) }
+        pool.submit(write)
       }
+      // get() wraps whatever a write threw in an ExecutionException; the
+      // writes catch NonFatal themselves, so a wrapped cause is fatal. It
+      // is rethrown once every write has finished.
+      val results = tasks.map(t =>
+        try Right(t.get()) catch { case e: ExecutionException => Left(e.getCause) })
+        .map(_.fold(fatal => throw fatal, identity))
+      Result(results.collect { case (n, Right(c)) => n -> c }.toMap,
+        results.collect { case (n, Left(e)) => n -> e }.toMap)
+    } finally {
+      pool.shutdown()
+      graft.Derivation.unpersist(se); graft.Derivation.unpersist(ss)
     }
-    val results = futures.map(f =>
-      scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf))
-    pool.shutdown()
-    val counts = results.collect { case (n, Right(c)) => n -> c }.toMap
-    val failures = results.collect { case (n, Left(e)) => n -> e }.toMap
-    graft.Derivation.unpersist(se); graft.Derivation.unpersist(ss)
-    Result(counts, failures)
   }
 }

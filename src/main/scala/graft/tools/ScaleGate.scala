@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.Bench
+import graft.{Bench, Sessions}
 import graft.Verify.{q => jq}
 import org.apache.spark.sql.SparkSession
 import scala.util.control.NonFatal
@@ -168,15 +168,12 @@ object ScaleGate {
     // provenance stamp beats no verdict.
     val ((start1, start5), _) = Bench.waitForIdle("[scalegate]")
     val startClean = Bench.verdict(Bench.HostReadings(start1, start5)).isEmpty
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
     val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .master(s"local[${Sessions.cpus}]")
+      .config("spark.sql.shuffle.partitions", Sessions.cpus.toLong)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-wh").toString)
+      .config("spark.sql.warehouse.dir", Sessions.warehouseDir())
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -57,6 +57,31 @@ class PipelineSpec extends SparkSpec {
     assert(r.counts.keySet.contains("time") && r.counts.keySet.contains("users"))
   }
 
+  test("a fatal error in a write is rethrown from run, not logged as a failed table") {
+    val out = Files.createTempDirectory("graft-pipe-fatal").toString
+    val (se, ss) = fixtures
+    // NoClassDefFoundError is a LinkageError: NonFatal does not match it.
+    // The events RDD throws it when a write's job first asks for its
+    // partitions, so it surfaces on the driver inside a write thread. The
+    // users write, a projection, asks directly; the writes with an
+    // exchange reach it through a Scala future inside Spark, which boxes
+    // an Error in a non-fatal ExecutionException ("Boxed Exception").
+    val broken = new org.apache.spark.rdd.RDD[org.apache.spark.sql.Row](spark.sparkContext, Nil) {
+      override protected def getPartitions: Array[org.apache.spark.Partition] =
+        throw new NoClassDefFoundError("injected")
+      override def compute(p: org.apache.spark.Partition, c: org.apache.spark.TaskContext) =
+        Iterator.empty
+    }
+    val events = spark.createDataFrame(broken, se.schema)
+    val outcome = new java.util.concurrent.CompletableFuture[Any]()
+    val runner = new Thread(() => outcome.complete(
+      try Pipeline.run(spark, events, ss, out) catch { case e: Throwable => e }))
+    runner.setDaemon(true)
+    runner.start()
+    val got = outcome.get(120, java.util.concurrent.TimeUnit.SECONDS)
+    assert(got.isInstanceOf[NoClassDefFoundError], got)
+  }
+
   test("run frees its staging and writes the modes of a plain parquet write") {
     import scala.jdk.CollectionConverters._
     val cacheEmpty = spark.sharedState.cacheManager.isEmpty
